@@ -342,13 +342,7 @@ final case class ColStatsScan(inner: Scan,
     inner.reportDriverMetrics()
 
   override def estimateStatistics(): Statistics = {
-    val base = inner match {
-      case s: SupportsReportStatistics => s.estimateStatistics()
-      case _ => new Statistics {
-        override def sizeInBytes = OptionalLong.empty()
-        override def numRows = OptionalLong.empty()
-      }
-    }
+    val base = ScanStats.innerOf(inner)
     new Statistics {
       override def sizeInBytes: OptionalLong = base.sizeInBytes()
       override def numRows: OptionalLong =

@@ -52,6 +52,7 @@ final class GraftRowLevelOperation(
     tableName: String,
     cat: GraftCatalog,
     scanOf: CaseInsensitiveStringMap => ScanBuilder,
+    meta: TableMetadata,
     tableSchema: StructType,
     cmd: RowLevelOperation.Command,
     snapshotFiles: Seq[DataFile],
@@ -73,7 +74,7 @@ final class GraftRowLevelOperation(
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     if (useGroupScan)
-      new GroupScanBuilder(SparkSession.active, tableSchema, state)
+      new GroupScanBuilder(SparkSession.active, meta, tableSchema, state)
     else GraftV2Table.wrapV1(scanOf(options))
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {

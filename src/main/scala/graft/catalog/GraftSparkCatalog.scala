@@ -142,8 +142,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     val deletes = snap.map(_.deletes).getOrElse(Nil)
     val posDeletes = snap.map(_.posDeletes).getOrElse(Nil)
     new GraftV2Table(nsOf(ident), ident.name(), cat,
-      asV2(ident, m, files, schema), schema, files, deletes, posDeletes,
-      m.properties, m.partitionSpec,
+      asV2(ident, m, files, schema), schema, files, deletes, posDeletes, m,
       rebuildReader = fs => asV2(ident, m, fs, schema))
   }
 

@@ -3,7 +3,6 @@ package graft.catalog
 import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DataType, _}
 import scala.jdk.CollectionConverters._
 
 /** Handle to one committed table: snapshot reads, time travel, and the
@@ -409,118 +408,34 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
     else MorRead.read(spark, m.schema, files, deletes, posDeletes)
 
   /** S2 parity: scan with a range predicate pushed through BOTH layers —
-    * file-level pruning via snapshot min/max stats (the manifest-pruning
+    * file and delete pruning via [[StatsPrune]] (the manifest-pruning
     * analogue) and parquet row-group/page pruning via the Spark filter.
     * `lo`/`hi` are inclusive bounds in the column's natural type. */
   def scanRange(column: String, lo: Any, hi: Any): DataFrame = {
-    val m = metadata
-    val dt = m.schema(column).dataType
-    val canonical = (v: Any) => graft.write.Stager.canonicalKey(dt, v)
-    val hit = filesOverlapping(m, column, canonical(lo), canonical(hi))
-    val df = readFiles(m, hit, m.currentSnapshot.map(_.deletes).getOrElse(Nil),
-      m.currentSnapshot.map(_.posDeletes).getOrElse(Nil))
-    df.filter(org.apache.spark.sql.functions.col(column)
-      .between(org.apache.spark.sql.functions.lit(lo),
-        org.apache.spark.sql.functions.lit(hi)))
+    import org.apache.spark.sql.functions.{col, lit}
+    readPruned(Seq(StatsPrune.between(column, lo, hi)))
+      .filter(col(column).between(lit(lo), lit(hi)))
   }
 
-  /** Point lookup: prune via min/max, per-file [[KeyBloom]] filters
-    * (decisive for UUID-ish keys whose [min,max] spans the keyspace), AND
-    * — when the table is bucket-partitioned on `column` — the derived
-    * bucket stats (exact pruning: the staging repartition co-locates
-    * equal bucket values, so a point probe keeps only the files of ONE
-    * bucket). Then scan only the surviving files with the equality filter
-    * pushed down. Files without stats are conservatively kept. */
+  /** Point lookup: [[StatsPrune]] keeps only the files whose min/max,
+    * [[KeyBloom]] (decisive for UUID-ish keys whose [min,max] spans the
+    * keyspace) and — on a bucket-partitioned `column` — derived bucket
+    * stats admit the value, plus the delete files whose key ranges do;
+    * the scan then runs with the equality filter pushed down. */
   def readPointLookup(column: String, value: Any): DataFrame = {
+    import org.apache.spark.sql.functions.{col, lit}
+    readPruned(Seq(org.apache.spark.sql.sources.EqualTo(column, value)))
+      .filter(col(column) === lit(value))
+  }
+
+  /** The current snapshot narrowed by `filters`, which the caller must
+    * re-apply to the rows (pruning is file-level and conservative). */
+  private def readPruned(filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
     val m = metadata
-    val dt = m.schema(column).dataType
-    val key = graft.write.Stager.canonicalKey(dt, value)
-    val ranged = filesForKey(m, column, key)
-    val hit = m.partitionSpec
-      .find(s => s.source == column && s.transform == "bucket")
-      .flatMap(s => bucketValueOf(dt, value, s.param.get).map(s.name -> _))
-      .fold(ranged) { case (bucketCol, b) =>
-        ranged.filter { f =>
-          f.stats.get(bucketCol) match {
-            case Some(ColumnStats(Some(mn), Some(mx), _, _, _)) =>
-              mn.toLong <= b && b <= mx.toLong
-            case _ => true
-          }
-        }
-      }
-    // point probes prune the DELETE side too: a delete file whose key
-    // range excludes the probed value (when probing a delete-key column)
-    // cannot affect the result
-    val deletes = m.currentSnapshot.map(_.deletes).getOrElse(Nil).filter { d =>
-      !d.keyColumns.contains(column) || (d.stats.get(column) match {
-        case Some(ColumnStats(Some(mn), Some(mx), _, _, _)) =>
-          StatCompare.compare(dt, mx, key) >= 0 &&
-            StatCompare.compare(dt, mn, key) <= 0
-        case _ => true
-      })
-    }
-    readFiles(m, hit, deletes,
-        m.currentSnapshot.map(_.posDeletes).getOrElse(Nil))
-      .filter(org.apache.spark.sql.functions.col(column) ===
-        org.apache.spark.sql.functions.lit(value))
-  }
-
-  /** Driver-side mirror of the IcebergBucket transform for partition
-    * pruning of point probes; None for types whose bucket value cannot be
-    * derived here (probe stays range+bloom-pruned only). */
-  private def bucketValueOf(dt: DataType, v: Any, n: Int): Option[Int] = {
-    import graft.functions.IcebergHash
-    val hash: Option[Int] = (dt, v) match {
-      case (ByteType | ShortType | IntegerType | LongType, x: Number) =>
-        Some(IcebergHash.hashLong(x.longValue()))
-      case (StringType, s: String) =>
-        Some(IcebergHash.hashBytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-      case (DateType, d: java.sql.Date) =>
-        Some(IcebergHash.hashLong(d.toLocalDate.toEpochDay))
-      case (TimestampType, t: java.sql.Timestamp) =>
-        Some(IcebergHash.hashLong(t.getTime * 1000L + (t.getNanos / 1000) % 1000))
-      case _ => None
-    }
-    hash.map(h => (h & Integer.MAX_VALUE) % n)
-  }
-
-  /** The file subset that could contain `key` (canonical form) in
-    * `column`: min/max overlap intersected with bloom membership. */
-  def filesForKey(m: TableMetadata, column: String, key: String): Seq[DataFile] =
-    filesOverlapping(m, column, key, key).filter { f =>
-      f.stats.get(column).flatMap(_.bloom)
-        .forall(b64 => KeyBloom.mightContain(b64, key))
-    }
-
-  /** Prune the current file set to those whose [min,max] stats could
-    * contain a key in [lo, hi] for `column` — the scan-side analogue of
-    * Iceberg manifest pruning, and the merge path's affected-file
-    * selection. TWO-LEVEL: snapshot-stored manifest-ref ranges skip
-    * whole manifests without opening their bodies (the manifest-list
-    * summary idea — a trickle merge on a 10⁴-manifest table opens a
-    * handful), then per-file stats prune within the opened manifests.
-    * Files/manifests without stats are conservatively kept/opened. */
-  def filesOverlapping(m: TableMetadata, column: String, lo: String, hi: String): Seq[DataFile] = {
-    val dt = m.statTypeOf(column)
-    def fileHit(f: DataFile): Boolean = f.stats.get(column) match {
-      case Some(ColumnStats(Some(mn), Some(mx), _, _, _)) =>
-        dt.forall(t => StatCompare.compare(t, mx, lo) >= 0 &&
-          StatCompare.compare(t, mn, hi) <= 0)
-      case _ => true
-    }
-    def refHit(r: ManifestRef): Boolean =
-      (r.colMin.flatMap(_.get(column)), r.colMax.flatMap(_.get(column))) match {
-        case (Some(mn), Some(mx)) =>
-          dt.forall(t => StatCompare.compare(t, mx, lo) >= 0 &&
-            StatCompare.compare(t, mn, hi) <= 0)
-        case _ => true // no ref-level range: must open
-      }
-    m.currentSnapshot match {
-      case Some(s) if s.resolvedRefs.isDefined && s.files.isEmpty =>
-        s.resolvedRefs.get.filter(refHit)
-          .flatMap(r => ManifestIO.read(r.path)).filter(fileHit)
-      case _ => m.currentFiles.filter(fileHit)
-    }
+    val s = m.currentSnapshot
+    readFiles(m, StatsPrune.files(m, filters),
+      StatsPrune.deletes(m, s.map(_.deletes).getOrElse(Nil), filters),
+      s.map(_.posDeletes).getOrElse(Nil))
   }
 
   /** Atomic commit: reread freshest metadata, apply `update`, CAS-write the

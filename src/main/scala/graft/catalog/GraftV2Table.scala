@@ -36,8 +36,9 @@ final class GraftV2Table(
     morFiles: Seq[DataFile] = Nil,
     morDeletes: Seq[DeleteFile] = Nil,
     morPosDeletes: Seq[PosDeleteFile] = Nil,
-    tableProperties: Map[String, String] = Map.empty,
-    partitionSpec: Seq[PartitionFieldSpec] = Nil,
+    // the metadata the table was loaded from: partition spec, properties
+    // and the stat types [[StatsPrune]] compares under
+    meta: TableMetadata,
     // rebuilds the inner parquet reader over a FILE SUBSET — the hook
     // limit pushdown needs to plan a `LIMIT n` over the first files
     // whose metadata row counts cover n, instead of all 10⁵ of them
@@ -47,6 +48,9 @@ final class GraftV2Table(
 
   override def name(): String = reader.name()
   override def schema(): StructType = committedSchema
+
+  private val partitionSpec = meta.partitionSpec
+  private val tableProperties = meta.properties
 
   /** Engine identity for injected plan rewrites (dynamic overwrite)
     * that must route a V2 write node through the engine writer. */
@@ -107,7 +111,7 @@ final class GraftV2Table(
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new FileAwareScanBuilder(options)
+    new FileAwareScanBuilder(options, pruneFiles = true)
 
   /** The table's scan builder, `_file`-aware: plain reads delegate to the
     * V2 parquet builder (full pushdown — the hot path) or the MoR V1
@@ -117,8 +121,15 @@ final class GraftV2Table(
     * that captures `_file` from `_metadata` at the scan relation. In
     * that mode, catalyst filters already forwarded to the (now unused)
     * parquet builder are re-applied on the DataFrame — a filter Spark
-    * believes pushed must never be silently dropped. */
-  private final class FileAwareScanBuilder(options: CaseInsensitiveStringMap)
+    * believes pushed must never be silently dropped.
+    *
+    * Filters no exact claim tier takes are still used once, by
+    * [[StatsPrune]]: every scan form plans over the surviving data and
+    * delete files (`pruneFiles`; off for row-level operation scans,
+    * whose commit replaces the whole planned set and so must read every
+    * row of it), and the filters stay residual. */
+  private final class FileAwareScanBuilder(options: CaseInsensitiveStringMap,
+      pruneFiles: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns
       with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
       with SupportsPushDownAggregates
@@ -143,8 +154,16 @@ final class GraftV2Table(
     // LIMIT/TopN prefix) never read through this builder, so a
     // 100k-file table answering a claimed aggregate must not pay a
     // 100k-path listing at plan time (pinned by ManifestScaleSpec).
-    private lazy val inner: Option[ScanBuilder] =
-      Some(reader.asInstanceOf[SupportsRead].newScanBuilder(options))
+    // Built over the StatsPrune survivors; pruning is skipped once built.
+    private var innerBuilt: Option[ScanBuilder] = None
+    private def inner: Option[ScanBuilder] = {
+      if (innerBuilt.isEmpty)
+        innerBuilt = Some((if (scanFiles.size < morFiles.size) rebuildReader(scanFiles)
+          else reader).asInstanceOf[SupportsRead].newScanBuilder(options))
+      innerBuilt
+    }
+    private var scanFiles: Seq[DataFile] = morFiles
+    private var scanDeletes: Seq[DeleteFile] = morDeletes
     private def morCanPush: Boolean =
       hasDeletes && morPosDeletes.isEmpty
 
@@ -188,6 +207,12 @@ final class GraftV2Table(
         if (claimedFiles.isDefined) return Nil
       }
       if (filters.isEmpty) return filters // nothing to forward: keep inner unforced
+      if (pruneFiles && rebuildReader != null && innerBuilt.isEmpty) {
+        val pruning = filters.flatMap(
+          org.apache.spark.sql.classic.GraftSqlShims.sourceFilter)
+        scanFiles = StatsPrune.prune(meta, morFiles, pruning)
+        scanDeletes = StatsPrune.deletes(meta, morDeletes, pruning)
+      }
       inner match {
         case Some(p: org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters)
             if !hasDeletes || morCanPush =>
@@ -533,7 +558,7 @@ final class GraftV2Table(
         (aggregation.aggregateExpressions().toSeq ++
           aggregation.groupByExpressions().toSeq).flatMap(collect)
       }
-      if (!refCols.forall(c => morFiles.forall(_.stats.contains(c))))
+      if (!refCols.forall(c => scanFiles.forall(_.stats.contains(c))))
         return false
       inner match {
         case Some(p: SupportsPushDownAggregates) if !hasDeletes =>
@@ -605,7 +630,7 @@ final class GraftV2Table(
           val cboStats =
             if (!aggPushed && conf.cboEnabled)
               Some(ColumnStatsSupport.columnStats(
-                committedSchema, tableProperties, morFiles))
+                committedSchema, tableProperties, scanFiles))
                 .filter(!_.isEmpty)
             else None
           // Storage-partitioned-join report (SpjScan): only on the clean
@@ -615,11 +640,11 @@ final class GraftV2Table(
           // pre-SPJ one.
           val spj =
             if (!aggPushed && conf.v2BucketingEnabled)
-              SpjScan.wrap(scan, partitionSpec, committedSchema, morFiles,
+              SpjScan.wrap(scan, partitionSpec, committedSchema, scanFiles,
                 cboStats)
             else scan
           if ((spj eq scan) && cboStats.isDefined)
-            ColStatsScan(scan, cboStats.get, morFiles.map(_.rowCount).sum)
+            ColStatsScan(scan, cboStats.get, scanFiles.map(_.rowCount).sum)
           else spj
         } else buildMor()
       } else {
@@ -629,7 +654,7 @@ final class GraftV2Table(
         val filters = catalystFilters
         GraftV2Table.v1ScanOf(out, ctx => {
           var df = MorRead.readWithFile(ctx.sparkSession, committedSchema,
-            morFiles, morDeletes, morPosDeletes)
+            scanFiles, scanDeletes, morPosDeletes)
           // re-apply forwarded catalyst filters, attributes rebound by
           // name onto this DataFrame's output (exprIds differ)
           val byName = df.queryExecution.analyzed.output
@@ -645,7 +670,7 @@ final class GraftV2Table(
               org.apache.spark.sql.classic.GraftSqlShims.column(bound))
           }
           df.select(out.fieldNames.map(col).toIndexedSeq: _*)
-        }, Some(fileStats)).build()
+        }, Some(fileStats(scanFiles))).build()
       }
 
     /** Merge-on-read scan, best wrap first:
@@ -692,11 +717,11 @@ final class GraftV2Table(
       // shuffle-join above it) — a merge-heavy table that missed its
       // compaction window loses the key-grouped report, never the driver.
       val deleteStateRows =
-        morDeletes.map(_.rowCount).sum + morPosDeletes.map(_.rowCount).sum
+        scanDeletes.map(_.rowCount).sum + morPosDeletes.map(_.rowCount).sum
       val attempt: Option[Scan] =
         if (deleteStateRows > MorRead.driverStateMaxRows) None
         else inner.flatMap { b =>
-        val extraKeys = morDeletes.flatMap(_.keyColumns).distinct
+        val extraKeys = scanDeletes.flatMap(_.keyColumns).distinct
           .filterNot(requested.fieldNames.contains)
         if (extraKeys.exists(k => !committedSchema.fieldNames.contains(k)))
           None // delete keyed on a since-dropped column: V1 path
@@ -712,10 +737,10 @@ final class GraftV2Table(
           val spj =
             if (conf.v2BucketingEnabled && partitionSpec.nonEmpty)
               SpjScan.wrapMor(scan, partitionSpec, committedSchema,
-                extended, requested, morFiles, morDeletes, morPosDeletes)
+                extended, requested, scanFiles, scanDeletes, morPosDeletes)
             else None
           spj.orElse(Some(SpjScan.wrapMorPlain(scan, committedSchema,
-            extended, requested, morFiles, morDeletes, morPosDeletes)))
+            extended, requested, scanFiles, scanDeletes, morPosDeletes)))
         }
       }
       attempt.getOrElse {
@@ -725,7 +750,7 @@ final class GraftV2Table(
         val filters = if (morCanPush) catalystFilters else Nil
         GraftV2Table.v1ScanOf(requested, ctx => {
           var df = MorRead.read(ctx.sparkSession, committedSchema,
-            morFiles, morDeletes, morPosDeletes)
+            scanFiles, scanDeletes, morPosDeletes)
           val byName = df.queryExecution.analyzed.output
             .map(a => a.name -> a).toMap
           filters.foreach { e =>
@@ -739,15 +764,15 @@ final class GraftV2Table(
               org.apache.spark.sql.classic.GraftSqlShims.column(bound))
           }
           df.select(requested.fieldNames.map(col).toIndexedSeq: _*)
-        }, Some(fileStats)).build()
+        }, Some(fileStats(scanFiles))).build()
       }
     }
   }
 
   /** Exact table footprint from commit-time footer stats (pre-delete
     * upper bound under MoR — sound for join sizing). */
-  private def fileStats: org.apache.spark.sql.connector.read.Statistics =
-    ScanStats.of(morFiles.map(_.sizeBytes).sum, morFiles.map(_.rowCount).sum)
+  private def fileStats(files: Seq[DataFile]): org.apache.spark.sql.connector.read.Statistics =
+    ScanStats.of(files.map(_.sizeBytes).sum, files.map(_.rowCount).sum)
 
   /** `DELETE FROM <table> WHERE <cond>` — routed through the engine's
     * predicate-delete path. Mode comes from the `graft.delete.mode`
@@ -790,12 +815,14 @@ final class GraftV2Table(
         if (props.get("graft.delete.mode").contains("merge-on-read") &&
             pk.nonEmpty)
           new GraftDeltaOperation(ns, tableName, cat,
-            opts => newScanBuilder(opts), committedSchema, info.command(), pk,
+            opts => new FileAwareScanBuilder(opts, pruneFiles = false),
+            committedSchema, info.command(), pk,
             morFiles.map(_.path).toSet,
             (morDeletes.map(_.path) ++ morPosDeletes.map(_.path)).toSet)
         else
           new GraftRowLevelOperation(ns, tableName, cat,
-            opts => newScanBuilder(opts), committedSchema, info.command(),
+            opts => new FileAwareScanBuilder(opts, pruneFiles = false), meta,
+            committedSchema, info.command(),
             morFiles,
             (morDeletes.map(_.path) ++ morPosDeletes.map(_.path)).toSet)
       }

@@ -32,98 +32,13 @@ final class GroupScanState(val planned: Seq[DataFile]) {
   @volatile var scannedPaths: Option[Set[String]] = None
 }
 
-/** File-level `might-match` evaluation of V1 source filters against the
-  * per-file min/max/null-count/bloom stats every commit already carries —
-  * the same manifest-pruning semantics as `GraftTable.filesOverlapping`,
-  * generalized to filter trees. Conservative: anything not provably
-  * disjoint keeps the file (reference intent: PyIceberg `row_filter`
-  * manifest pruning, `destination_client.py:320-322`). */
-object StatsPrune {
-
-  def prune(files: Seq[DataFile], schema: StructType,
-      filters: Seq[sources.Filter]): Seq[DataFile] =
-    filters.foldLeft(files)((fs, f) => fs.filter(df => mightMatch(df, schema, f)))
-
-  private def statType(schema: StructType, col: String) =
-    schema.fields.find(_.name == col).map(_.dataType)
-
-  /** Compare a stat string against a value in canonical form; None when
-    * the comparison cannot be made (missing stats/unknown column). */
-  private def cmp(schema: StructType, col: String, stat: String, v: Any): Option[Int] =
-    statType(schema, col).map { dt =>
-      StatCompare.compare(dt, stat, graft.write.Stager.canonicalKey(dt, v))
-    }
-
-  private def stats(f: DataFile, col: String): Option[ColumnStats] =
-    f.stats.get(col)
-
-  def mightMatch(f: DataFile, schema: StructType, filter: sources.Filter): Boolean =
-    filter match {
-      case sources.EqualTo(a, v) => pointHit(f, schema, a, v)
-      case sources.EqualNullSafe(a, null) => mightHaveNull(f, a)
-      case sources.EqualNullSafe(a, v) => pointHit(f, schema, a, v)
-      case sources.In(a, vs) =>
-        vs == null || vs.isEmpty || vs.exists(v => v != null && pointHit(f, schema, a, v))
-      case sources.GreaterThan(a, v) =>
-        stats(f, a).flatMap(_.max).flatMap(mx => cmp(schema, a, mx, v))
-          .forall(_ > 0)
-      case sources.GreaterThanOrEqual(a, v) =>
-        stats(f, a).flatMap(_.max).flatMap(mx => cmp(schema, a, mx, v))
-          .forall(_ >= 0)
-      case sources.LessThan(a, v) =>
-        stats(f, a).flatMap(_.min).flatMap(mn => cmp(schema, a, mn, v))
-          .forall(_ < 0)
-      case sources.LessThanOrEqual(a, v) =>
-        stats(f, a).flatMap(_.min).flatMap(mn => cmp(schema, a, mn, v))
-          .forall(_ <= 0)
-      case sources.IsNull(a) => mightHaveNull(f, a)
-      case sources.IsNotNull(a) =>
-        // all-null iff a known null count equals the row count
-        !stats(f, a).flatMap(_.nullCount).contains(f.rowCount) || f.rowCount == 0
-      case sources.StringStartsWith(a, v) =>
-        // s startsWith v ⟹ s >= v, and mn <= s ⟹ mn.take(|v|) <= v
-        stats(f, a) match {
-          case Some(ColumnStats(Some(mn), Some(mx), _, _, _)) =>
-            mx.compareTo(v) >= 0 && mn.take(v.length).compareTo(v) <= 0
-          case _ => true
-        }
-      case sources.And(l, r) =>
-        mightMatch(f, schema, l) && mightMatch(f, schema, r)
-      case sources.Or(l, r) =>
-        mightMatch(f, schema, l) || mightMatch(f, schema, r)
-      case sources.AlwaysFalse() => false
-      case _ => true // Not / string ops / unknown: keep conservatively
-    }
-
-  private def mightHaveNull(f: DataFile, col: String): Boolean =
-    // a missing stat entry means the column postdates the file (sparse
-    // null-fill) or stats were not collected — keep either way
-    stats(f, col).flatMap(_.nullCount).forall(_ > 0)
-
-  /** Point membership: min/max overlap AND bloom membership when a
-    * [[KeyBloom]] was collected for the column. */
-  private def pointHit(f: DataFile, schema: StructType, col: String, v: Any): Boolean =
-    stats(f, col) match {
-      case Some(ColumnStats(mn, mx, _, bloom, _)) =>
-        val inRange =
-          mn.flatMap(cmp(schema, col, _, v)).forall(_ <= 0) &&
-            mx.flatMap(cmp(schema, col, _, v)).forall(_ >= 0)
-        def inBloom = (bloom, statType(schema, col)) match {
-          case (Some(b64), Some(dt)) =>
-            KeyBloom.mightContain(b64, graft.write.Stager.canonicalKey(dt, v))
-          case _ => true
-        }
-        inRange && inBloom
-      case None => true
-    }
-}
-
 /** Scan builder for the group-based row-level operation: accepts pushed
   * filters (used TWICE — file-level stat/bloom pruning here, parquet
   * row-group skipping in the reader) but reports every filter as
   * residual, so Spark keeps exact evaluation above the scan. */
 final class GroupScanBuilder(
     spark: SparkSession,
+    meta: TableMetadata,
     tableSchema: StructType,
     state: GroupScanState) extends ScanBuilder
   with SupportsPushDownFilters with SupportsPushDownRequiredColumns {
@@ -142,7 +57,7 @@ final class GroupScanBuilder(
     required = requiredSchema
 
   override def build(): Scan = {
-    state.candidates = StatsPrune.prune(state.planned, tableSchema, pushed.toSeq)
+    state.candidates = StatsPrune.prune(meta, state.planned, pushed.toSeq)
     new GroupScan(spark, tableSchema, required, state)
   }
 }

@@ -37,6 +37,18 @@ object ScanStats {
     override def numRows(): OptionalLong = OptionalLong.of(rows)
   }
 
+  /** What a forwarding scan reports: the inner scan's own estimate, or
+    * an unknown one when the inner scan reports none. */
+  def innerOf(inner: Scan): V2Statistics = inner match {
+    case s: SupportsReportStatistics => s.estimateStatistics()
+    case _ => Unknown
+  }
+
+  private val Unknown: V2Statistics = new V2Statistics {
+    override def sizeInBytes(): OptionalLong = OptionalLong.empty()
+    override def numRows(): OptionalLong = OptionalLong.empty()
+  }
+
   /** Stats of a driver-local DataFrame (metadata tables): the plan is a
     * LocalRelation, so `.stats` is exact and costs no job. */
   def ofLocal(df: org.apache.spark.sql.DataFrame): V2Statistics = {
@@ -129,11 +141,5 @@ final case class NoRuntimeFilterScan(inner: Scan)
   override def reportDriverMetrics():
       Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     inner.reportDriverMetrics()
-  override def estimateStatistics(): V2Statistics = inner match {
-    case s: SupportsReportStatistics => s.estimateStatistics()
-    case _ => new V2Statistics {
-      override def sizeInBytes = java.util.OptionalLong.empty()
-      override def numRows = java.util.OptionalLong.empty()
-    }
-  }
+  override def estimateStatistics(): V2Statistics = ScanStats.innerOf(inner)
 }

@@ -38,16 +38,17 @@ import org.apache.spark.unsafe.types.UTF8String
   * pre-SPJ plan). */
 object SpjScan {
 
-  /** Wrap `scan` if every partition-spec field is identity/bucket and
-    * every current data file carries a decodable single-valued partition
-    * tuple; otherwise return `scan` unchanged. */
+  /** Wrap `scan` if every partition-spec field is a supported transform
+    * of a column the scan reads and every current data file carries a
+    * decodable single-valued partition tuple; otherwise return `scan`
+    * unchanged. */
   def wrap(scan: Scan, spec: Seq[PartitionFieldSpec], schema: StructType,
       files: Seq[DataFile],
       colStats: Option[java.util.Map[
         org.apache.spark.sql.connector.expressions.NamedReference,
         org.apache.spark.sql.connector.read.colstats.ColumnStatistics]] =
         None): Scan =
-    eligibility(spec, schema, files).fold(scan) { e =>
+    eligibility(spec, schema, scan.readSchema(), files).fold(scan) { e =>
       new GroupedScan(scan, e.keyExprs, e.keyByPath, e.nKeys, e.fields,
         colStats)
     }
@@ -66,7 +67,7 @@ object SpjScan {
       tableSchema: StructType, extendedSchema: StructType,
       requestedSchema: StructType, files: Seq[DataFile],
       deletes: Seq[DeleteFile], posDeletes: Seq[PosDeleteFile]): Option[Scan] =
-    eligibility(spec, tableSchema, files).map { e =>
+    eligibility(spec, tableSchema, requestedSchema, files).map { e =>
       new GroupedScan(scan, e.keyExprs, e.keyByPath, e.nKeys, e.fields,
         colStats = None,
         mor = Some(MorInfo(tableSchema, extendedSchema, requestedSchema,
@@ -103,11 +104,14 @@ object SpjScan {
       fields: Seq[(PartitionFieldSpec, DataType)])
 
   /** Shared eligibility + key decode for the clean and MoR wraps: every
-    * partition-spec field a supported transform, every data file carrying
-    * a decodable single-valued partition tuple. */
+    * partition-spec field a supported transform of a column in
+    * `readSchema` (a key over a column pruned from the scan output cannot
+    * be resolved by the planner), every data file carrying a decodable
+    * single-valued partition tuple. */
   private def eligibility(spec: Seq[PartitionFieldSpec], schema: StructType,
-      files: Seq[DataFile]): Option[Eligibility] = {
+      readSchema: StructType, files: Seq[DataFile]): Option[Eligibility] = {
     if (spec.isEmpty || files.isEmpty) return None
+    if (!spec.forall(s => readSchema.fieldNames.contains(s.source))) return None
     val supported =
       Set("identity", "bucket", "year", "month", "day", "hour", "truncate")
     if (!spec.forall(s => supported.contains(s.transform))) return None
@@ -234,13 +238,7 @@ object SpjScan {
     override def toBatch: Batch = this
     override def columnarSupportMode(): Scan.ColumnarSupportMode =
       Scan.ColumnarSupportMode.UNSUPPORTED
-    override def estimateStatistics(): Statistics = inner match {
-      case s: SupportsReportStatistics => s.estimateStatistics()
-      case _ => new Statistics {
-        override def sizeInBytes = java.util.OptionalLong.empty()
-        override def numRows = java.util.OptionalLong.empty()
-      }
-    }
+    override def estimateStatistics(): Statistics = ScanStats.innerOf(inner)
     override def createReaderFactory(): PartitionReaderFactory =
       MorSpjReader.factory(org.apache.spark.sql.SparkSession.active,
         inner.toBatch.createReaderFactory(), mi.tableSchema,
@@ -377,13 +375,7 @@ object SpjScan {
     /** Join sizing must not degrade under the wrap: forward the parquet
       * scan's exact estimate (broadcast decisions depend on it). */
     override def estimateStatistics(): Statistics = {
-      val base = inner match {
-        case s: SupportsReportStatistics => s.estimateStatistics()
-        case _ => new Statistics {
-          override def sizeInBytes = java.util.OptionalLong.empty()
-          override def numRows = java.util.OptionalLong.empty()
-        }
-      }
+      val base = ScanStats.innerOf(inner)
       colStats.fold(base)(cs => new Statistics {
         override def sizeInBytes = base.sizeInBytes()
         override def numRows = base.numRows()

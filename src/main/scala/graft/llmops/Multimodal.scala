@@ -999,24 +999,27 @@ object Multimodal {
   }
 
   /** Bounded per-JVM memo of decoded frame dimensions keyed on
-    * (length, 128-bit MD5) of the JPEG bytes — NOT on the bytes
+    * (length, SHA-256) of the JPEG bytes — NOT on the bytes
     * themselves: retaining full frames would pin up to 16384 × frame-size
     * of executor heap for the JVM lifetime on a real corpus (100 KB–1 MB
-    * frames → multi-GB), where the digest key is a flat ~40 B/entry.
+    * frames → multi-GB), where the digest key is a flat ~56 B/entry.
     * A corpus with repeated frames — thumbnails, test fixtures,
     * re-encoded stills — decodes each DISTINCT frame once per executor
-    * instead of once per occurrence; the MD5 is ~10³× cheaper than the
-    * ImageIO decode it memoizes. Decode failures are never cached (the
-    * require must fire per doc). */
-  private final case class FrameKey(len: Int, h1: Long, h2: Long)
+    * instead of once per occurrence; the digest is far cheaper than the
+    * ImageIO decode it memoizes. A collision-resistant hash, because the
+    * frames are untrusted input: with MD5, two crafted frames could share
+    * a key and one would be served the other's dimensions. Decode
+    * failures are never cached (the require must fire per doc). */
+  private final case class FrameKey(len: Int, h1: Long, h2: Long, h3: Long,
+      h4: Long)
   private val frameDimCache = new java.util.concurrent.ConcurrentHashMap[
     FrameKey, (Int, Int)]()
   private val FrameDimCacheMax = 16384
 
   private def frameKey(bytes: Array[Byte]): FrameKey = {
-    val d = java.security.MessageDigest.getInstance("MD5").digest(bytes)
+    val d = java.security.MessageDigest.getInstance("SHA-256").digest(bytes)
     val bb = java.nio.ByteBuffer.wrap(d)
-    FrameKey(bytes.length, bb.getLong, bb.getLong)
+    FrameKey(bytes.length, bb.getLong, bb.getLong, bb.getLong, bb.getLong)
   }
 
   private def decodeFrameDims(bytes: Array[Byte]): Option[(Int, Int)] = {

@@ -1359,8 +1359,9 @@ object WriteQueries {
         require(files.size >= 4, s"expected a multi-file load, got ${files.size}")
         val dt = tbl.metadata.schema("o_totalprice").dataType
         val ck = (v: Double) => graft.write.Stager.canonicalKey(dt, v)
-        val hit = tbl.filesOverlapping(tbl.metadata, "o_totalprice",
-          ck(100000.0), ck(150000.0))
+        val hit = graft.catalog.StatsPrune.files(tbl.metadata,
+          Seq(graft.catalog.StatsPrune.between("o_totalprice",
+            ck(100000.0), ck(150000.0))))
         require(hit.size * 2 <= files.size,
           s"sort-order pruning: a 10% band must skip most files " +
             s"(hit ${hit.size} of ${files.size})")

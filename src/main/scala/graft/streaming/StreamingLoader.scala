@@ -41,10 +41,19 @@ final class StreamingLoader(catalog: GraftCatalog) {
     * "persist": same results, recomputable lineage, at the cost of
     * per-action re-planning. */
   private def truncateLineage(df: DataFrame): DataFrame =
-    if (df.sparkSession.conf.get(StreamingLoader.LineageTruncationKey,
-        "localCheckpoint") == "persist")
-      df.persist()
+    if (lineageMode(df.sparkSession) == "persist") df.persist()
     else df.localCheckpoint(false)
+
+  /** The configured [[StreamingLoader.LineageTruncationKey]], validated:
+    * a misspelt mode fails loudly instead of silently running the
+    * default. Checked when a stream starts and at every use. */
+  private def lineageMode(spark: org.apache.spark.sql.SparkSession): String =
+    spark.conf.get(StreamingLoader.LineageTruncationKey, "localCheckpoint") match {
+      case m @ ("localCheckpoint" | "persist") => m
+      case other => throw new IllegalArgumentException(
+        s"${StreamingLoader.LineageTruncationKey}='$other': expected " +
+          "'localCheckpoint' or 'persist'")
+    }
 
   /** Attach a streaming DataFrame to a catalog table: every micro-batch
     * commits as load `<queryName>-batch-<id>`. Returns the started query
@@ -191,6 +200,7 @@ final class StreamingLoader(catalog: GraftCatalog) {
       simThreshold: Double = 0.6,
       bandBuckets: Int = 16,
       expectedCorpusDocs: Option[Long] = None): StreamingQuery = {
+    lineageMode(stream.sparkSession)
     val effectiveBuckets = expectedCorpusDocs
       .map(graft.llmops.Dedup.defaultBandBuckets(_, bands))
       .getOrElse(bandBuckets)
@@ -392,6 +402,7 @@ final class StreamingLoader(catalog: GraftCatalog) {
       k: Int = 8, iters: Int = 3, threshold: Double = 0.4,
       probes: Int = 1,
       idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery = {
+    lineageMode(stream.sparkSession)
     import graft.llmops.SemanticDedup
     val centroidsTable = assignTable + "_centroids"
     val assignCfg = cfg.copy(partitions =
@@ -608,7 +619,8 @@ object StreamingLoader {
     * the batch, which the loadId ledger replays idempotently) or
     * "persist" (recomputable lineage for deployments with routine
     * executor churn). See [[StreamingLoader.truncateLineage]]'s doctrine
-    * note; results are identical either way (pinned by StreamingSpec). */
+    * note; results are identical either way (pinned by StreamingSpec).
+    * Any other value throws IllegalArgumentException. */
   val LineageTruncationKey = "spark.graft.stream.lineageTruncation"
 
   /** Creation-time stamp on the committed centroid table: the k and dim

@@ -20,7 +20,7 @@ import scala.jdk.CollectionConverters._
   * byte (the previous stats pass) for unpartitioned tables. Values are
   * canonicalized exactly like `Stager.statColumn`: temporal types as epoch
   * longs, everything else via plain string form, so pruning comparisons
-  * (`GraftTable.filesOverlapping`) are unchanged.
+  * (`StatsPrune`) are unchanged.
   *
   * Parquet may truncate long binary stats to bounded prefixes; prefix
   * bounds stay conservative for range pruning, which is the only consumer

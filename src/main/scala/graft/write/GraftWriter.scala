@@ -843,31 +843,19 @@ final class GraftWriter(catalog: GraftCatalog) {
 
       graft.JobDesc(spark, s"graft.merge:rewrite $loadId") {
       t.commit({ fresh =>
-        val perColumn: Seq[Seq[DataFile]] = pks.zip(ranges).flatMap {
-          // an all-null key column can never equality-match: no constraint
-          case (pk, rg) =>
-            rg.map { case (lo, hi) => t.filesOverlapping(fresh, pk, lo, hi) }
+        // one StatsPrune question: files overlapping the batch range on
+        // EVERY key column (an all-null key column can never
+        // equality-match: no constraint) that also admit a probed lead
+        // key by bloom/bucket stats. Manifests outside the ranges are
+        // never opened.
+        val keyRanges = pks.zip(ranges).collect {
+          case (pk, Some((lo, hi))) => graft.catalog.StatsPrune.between(pk, lo, hi)
         }
+        val probe = bloomProbeKeys.filter(_.nonEmpty)
+          .map(ks => org.apache.spark.sql.sources.In(pks.head, ks.toArray))
         val affected: Seq[DataFile] =
-          if (perColumn.isEmpty) Nil // empty or all-null key batch
-          else {
-            // intersect WITHOUT materializing the full table file list —
-            // manifests outside every key range are never even opened
-            val hit = perColumn.map(_.map(_.path).toSet).reduce(_ intersect _)
-            val ranged = perColumn.head.filter(f => hit.contains(f.path))
-            bloomProbeKeys match {
-              case Some(keys) if keys.nonEmpty =>
-                val pk0 = pks.head
-                val dt = fresh.schema(pk0).dataType
-                val canon = keys.map(canonicalKey(dt, _))
-                ranged.filter { f =>
-                  f.stats.get(pk0).flatMap(_.bloom)
-                    .forall(b64 => canon.exists(
-                      graft.catalog.KeyBloom.mightContain(b64, _)))
-                }
-              case _ => ranged
-            }
-          }
+          if (keyRanges.isEmpty) Nil // empty or all-null key batch
+          else graft.catalog.StatsPrune.files(fresh, keyRanges ++ probe)
         val affectedPaths = affected.map(_.path).toSet
 
         val rewritten: Seq[DataFile] =
@@ -915,7 +903,7 @@ object GraftWriter {
 
   /** Canonical per-pk [lo, hi] ranges folded from staged key-file footer
     * stats ([[graft.write.FooterStats]] canonicalizes exactly like
-    * `Stager.statColumn`, so these strings feed `filesOverlapping`
+    * `Stager.statColumn`, so these strings feed `StatsPrune`
     * directly). Aligned with `pks`; a pk folds to None when every key
     * value is null (no equality match possible — same contract as the
     * aggregate path's null range). Returns None — caller falls back to

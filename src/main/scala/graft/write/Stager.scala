@@ -67,7 +67,7 @@ object Stager {
     * as epoch longs, everything else as-is. Aggregated with typed min/max
     * and cast to the canonical string AFTER aggregation — casting before
     * would make min/max lexicographic (min of {9, 10} would be "10") and
-    * silently corrupt pruning in `GraftTable.filesOverlapping`. */
+    * silently corrupt pruning in `StatsPrune`. */
   def statColumn(c: Column, dt: DataType): Option[Column] = dt match {
     case ByteType | ShortType | IntegerType | LongType | FloatType |
         DoubleType | _: DecimalType | StringType =>

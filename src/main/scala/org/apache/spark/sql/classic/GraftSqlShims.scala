@@ -13,6 +13,13 @@ object GraftSqlShims {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** Catalyst predicate → V1 source filter (`DataSourceStrategy
+    * .translateFilter` is protected[sql]); None when it has no source
+    * form. */
+  def sourceFilter(e: Expression): Option[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.execution.datasources.DataSourceStrategy
+      .translateFilter(e, supportNestedPredicatePushdown = true)
+
   /** DataFrame over an analyzed logical plan (Dataset.ofRows is
     * private[sql]) — lets an injected command execute a rewritten
     * write's query through the engine's DataFrame-based write path. */

@@ -149,9 +149,9 @@ class CatalogSpec extends AnyFunSuite {
       DataFile("f2", 10, 0, Map("k" -> ColumnStats(Some("200"), Some("300"), Some(0)))),
       DataFile("f3", 10, 0, Map.empty)) // no stats: conservatively kept
     val m = t.commit(_.withSnapshot("append", None, files), unitMs = 1)
-    val hit = t.filesOverlapping(m, "k", "150", "250").map(_.path)
+    val hit = StatsPrune.files(m, Seq(StatsPrune.between("k", "150", "250"))).map(_.path)
     assert(hit == Seq("f2", "f3"))
-    val none = t.filesOverlapping(m, "k", "101", "150").map(_.path)
+    val none = StatsPrune.files(m, Seq(StatsPrune.between("k", "101", "150"))).map(_.path)
     assert(none == Seq("f3"))
   }
 
@@ -251,8 +251,8 @@ class CatalogSpec extends AnyFunSuite {
       DataFile("f2", 10, 0, Map("d" -> ColumnStats(Some("10000"), Some("10001"), Some(0)))),
       DataFile("f3", 10, 0, Map("d" -> ColumnStats(Some("-30"), Some("-1"), Some(0)))))
     val m = t.commit(_.withSnapshot("append", None, files), unitMs = 1)
-    assert(t.filesOverlapping(m, "d", "10000", "10000").map(_.path) == Seq("f2"))
-    assert(t.filesOverlapping(m, "d", "9999", "9999").map(_.path) == Seq("f1"))
-    assert(t.filesOverlapping(m, "d", "-20", "-10").map(_.path) == Seq("f3"))
+    assert(StatsPrune.files(m, Seq(StatsPrune.between("d", "10000", "10000"))).map(_.path) == Seq("f2"))
+    assert(StatsPrune.files(m, Seq(StatsPrune.between("d", "9999", "9999"))).map(_.path) == Seq("f1"))
+    assert(StatsPrune.files(m, Seq(StatsPrune.between("d", "-20", "-10"))).map(_.path) == Seq("f3"))
   }
 }

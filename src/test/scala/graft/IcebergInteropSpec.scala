@@ -660,7 +660,7 @@ class IcebergInteropSpec extends AnyFunSuite {
     val m2 = att.metadata
     assert(m2.partitionSpec.map(_.transform).toSet == Set("bucket", "month"))
     val monthName = m2.partitionSpec.find(_.transform == "month").get.name
-    val jan = att.filesOverlapping(m2, monthName, "2024-01", "2024-01")
+    val jan = StatsPrune.files(m2, Seq(StatsPrune.between(monthName, "2024-01", "2024-01")))
     assert(jan.nonEmpty && jan.size < m2.currentFiles.size,
       s"month pruning must work post-attach: ${jan.size}/${m2.currentFiles.size}")
     assert(att.read().count() == 4)

@@ -46,17 +46,19 @@ class KeyBloomSpec extends AnyFunSuite {
     val probes = (1 to 8).map(b => b -> batchKeys(b).head)
     probes.foreach { case (b, k) =>
       // min/max alone keeps most files for a mid-keyspace probe...
-      val rangeOnly = t.filesOverlapping(m, "load_id", k, k)
+      val rangeOnly = StatsPrune.files(m, Seq(StatsPrune.between("load_id", k, k)))
       assert(rangeOnly.size >= 6, "UUID keys should defeat range pruning")
       // ...the bloom prunes to the single file that holds the key
       // (25 keys in 1024 bits: fp/file ~ 8e-5, deterministic fixed data)
-      val hit = t.filesForKey(m, "load_id", k)
+      val hit = StatsPrune.files(m,
+        Seq(org.apache.spark.sql.sources.EqualTo("load_id", k)))
       assert(hit.size == 1, s"expected 1 file for batch $b, got ${hit.size}")
       assert(t.readPointLookup("load_id", k).count() == 1)
     }
     // negative probe: no file survives, read returns empty
     val absent = java.util.UUID.nameUUIDFromBytes("absent".getBytes("UTF-8")).toString
-    assert(t.filesForKey(m, "load_id", absent).isEmpty)
+    assert(StatsPrune.files(m,
+        Seq(org.apache.spark.sql.sources.EqualTo("load_id", absent))).isEmpty)
     assert(t.readPointLookup("load_id", absent).isEmpty)
   }
 
@@ -116,7 +118,8 @@ class KeyBloomSpec extends AnyFunSuite {
     val probe = java.sql.Date.valueOf("2024-01-06")
     assert(t.readPointLookup("d", probe).count() == 1)
     val key = Stager.canonicalKey(org.apache.spark.sql.types.DateType, probe)
-    assert(t.filesForKey(m, "d", key).size == 1,
+    assert(StatsPrune.files(m,
+        Seq(org.apache.spark.sql.sources.EqualTo("d", key))).size == 1,
       "date probe must hit exactly the file holding the key")
     val tsProbe = java.sql.Timestamp.valueOf("2024-01-06 10:30:00")
     assert(t.readPointLookup("ts", tsProbe).count() >= 1)

@@ -57,8 +57,8 @@ class MaintenanceSpec extends AnyFunSuite {
 
     // pre-zorder: a narrow y-slab prunes (almost) nothing
     def filesHit(c: String, lo: Int, hi: Int): Int =
-      t.filesOverlapping(t.metadata, c,
-        Stager.canonicalKey(IntegerType, lo), Stager.canonicalKey(IntegerType, hi)).size
+      StatsPrune.files(t.metadata, Seq(StatsPrune.between(c,
+        Stager.canonicalKey(IntegerType, lo), Stager.canonicalKey(IntegerType, hi)))).size
     assert(filesHit("y", 0, 255) >= nFiles - 1)
 
     assert(Maintenance.zorder(t, Seq("x", "y"), targetFiles = 16, retryUnitMs = 1))
@@ -110,8 +110,8 @@ class MaintenanceSpec extends AnyFunSuite {
       s"only $single of ${after.size} files are partition-pure")
     // and a quarter-range slab on the NON-lead z column opens a fraction
     def filesHit(c: String, lo: Int, hi: Int): Int =
-      t.filesOverlapping(m2, c,
-        Stager.canonicalKey(IntegerType, lo), Stager.canonicalKey(IntegerType, hi)).size
+      StatsPrune.files(m2, Seq(StatsPrune.between(c,
+        Stager.canonicalKey(IntegerType, lo), Stager.canonicalKey(IntegerType, hi)))).size
     assert(filesHit("y", 0, 255) <= after.size / 2,
       s"y-slab hit ${filesHit("y", 0, 255)} of ${after.size} files")
     val expect = rows.filter(r => r._4 >= 0 && r._4 <= 255).map(_._1).sorted
@@ -238,7 +238,7 @@ class MaintenanceSpec extends AnyFunSuite {
       s.min == s.max
     }, "expected at least one single-bucket file after clustered compaction")
     // ...and a w10-style derived-column scan still prunes
-    val pruned = t.filesOverlapping(m, "user_id_bucket_4", "0", "0")
+    val pruned = StatsPrune.files(m, Seq(StatsPrune.between("user_id_bucket_4", "0", "0")))
     assert(pruned.size < files.size,
       s"bucket stats pruned nothing: ${pruned.size} of ${files.size}")
     // point lookup prunes through bucket stats + bloom and stays correct

@@ -138,8 +138,8 @@ class ManifestScaleSpec extends AnyFunSuite {
 
     // digit-boundary regression at REF level: ranges spanning 9->10
     // thousand must compare numerically (lexical "9000" > "10003")
-    val nineHit = t.filesOverlapping(cat.loadTable("main", "t").metadata,
-      "id", "9001", "9002")
+    val nineHit = StatsPrune.files(cat.loadTable("main", "t").metadata,
+      Seq(StatsPrune.between("id", "9001", "9002")))
     assert(nineHit.nonEmpty && nineHit.forall(_.stats("id").min.get.startsWith("9")))
   }
 

@@ -893,11 +893,18 @@ class SparkCatalogSpec extends AnyFunSuite {
       s"LIMIT 30 must plan a file-prefix scan, planned $nLim of $total")
     assert(limited.count() == 30L, "the limit itself stays exact")
     // a filter disables the file-prefix cut (the chosen files might not
-    // contain n matching rows) — result count still exact
-    val filtered = spark.sql("SELECT * FROM glim.main.t WHERE id > 950 LIMIT 30")
+    // contain n matching rows) — result count still exact. The suffix
+    // filter is one no file's stats can exclude, so every file is planned
+    val filtered = spark.sql("SELECT * FROM glim.main.t WHERE v LIKE '%0' LIMIT 30")
     assert(scannedFiles(filtered) == total,
       s"a filtered limit must keep the full scan, got ${scannedFiles(filtered)}")
     assert(filtered.count() == 30L)
+    // a filter the stats can decide still prunes by stats, never by the
+    // limit: only the file holding ids 901-1000 can match id > 950
+    val pruned = spark.sql("SELECT * FROM glim.main.t WHERE id > 950 LIMIT 30")
+    assert(scannedFiles(pruned) == 1,
+      s"a stats-pruned limit must plan the one matching file, got ${scannedFiles(pruned)}")
+    assert(pruned.count() == 30L)
     // MoR deletes disable it too
     val mor = WriteConfig(retryUnitMs = 1, primaryKey = Seq("id"),
       mergeOnRead = true)

@@ -671,4 +671,34 @@ class SpjSpec extends AnyFunSuite {
     assert(fresh.toSeq == expect.filterNot(_._1 == 901L),
       s"fresh plan must see the post-maintenance state: ${fresh.toSeq}")
   }
+
+  test("a join that does not read the partition source column plans; matches bucketing off") {
+    // month(ship)-partitioned lines joined to orders on a non-partition
+    // key: column pruning drops `ship` from the lines scan, so the scan
+    // must not report a key-grouped partitioning over it
+    import spark.implicits._
+    val wh = Files.createTempDirectory("graft-spj-").toString
+    val w = new GraftWriter(new GraftCatalog(spark, wh))
+    val lines = (1 to 600).map(i => (i.toLong % 50,
+      java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(i % 90)),
+      i.toDouble)).toDF("okey", "ship", "price")
+    val orders = (0L until 50L).map(k => (k, s"p${k % 3}",
+      java.sql.Date.valueOf(java.time.LocalDate.of(2024, 1, 1).plusDays(k))))
+      .toDF("okey", "prio", "odate")
+    w.writeTable("main", "lines", Seq(lines), Append, WriteConfig(retryUnitMs = 1,
+      partitions = Seq(graft.partition.PartitionHint.month("ship"))), "l1")
+    w.writeTable("main", "orders", Seq(orders), Append,
+      WriteConfig(retryUnitMs = 1), "l2")
+    val sql = """SELECT o.prio, COUNT(*) AS n, SUM(l.price) AS s
+                |FROM spjjoin.main.lines l JOIN spjjoin.main.orders o
+                |  ON l.okey = o.okey
+                |WHERE o.odate BETWEEN DATE'2024-01-05' AND DATE'2024-01-30'
+                |GROUP BY o.prio""".stripMargin
+    def answer(enabled: Boolean): Seq[(String, Long, Double)] =
+      spjSession("spjjoin", wh, enabled).sql(sql).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSeq.sortBy(_._1)
+    val on = answer(enabled = true)
+    assert(on == answer(enabled = false))
+    assert(on.map(_._2).sum == (1 to 600).count(i => i % 50 >= 4 && i % 50 <= 29))
+  }
 }

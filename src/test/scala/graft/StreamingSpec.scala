@@ -450,6 +450,30 @@ class StreamingSpec extends AnyFunSuite {
       s"persist mode diverged from localCheckpoint mode: $dflt vs $persisted")
   }
 
+  test("lineage truncation: an unknown mode fails fast, naming the key and the allowed values") {
+    // "Persist" is a plausible typo for "persist": it must not silently
+    // run the localCheckpoint default
+    val iso = spark.newSession()
+    iso.conf.set(StreamingLoader.LineageTruncationKey, "Persist")
+    val srcDir = Files.createTempDirectory("graft-lt-bad-src-")
+    import spark.implicits._
+    Seq((1L, "a b c d e")).toDF("doc_id", "text").write.mode("overwrite")
+      .parquet(srcDir.toString)
+    val cat = new GraftCatalog(iso,
+      Files.createTempDirectory("graft-lt-bad-").toString)
+    val stream = iso.readStream
+      .schema(iso.read.parquet(srcDir.toString).schema).parquet(srcDir.toString)
+    val e = intercept[IllegalArgumentException] {
+      val q = new StreamingLoader(cat).startNearDeduped(stream, "main", "dc",
+        "ds", cfg = WriteConfig(retryUnitMs = 1), queryName = "ltbad",
+        checkpoint = Some(Files.createTempDirectory("graft-lt-bad-ck-").toString))
+      try q.awaitTermination() finally q.stop()
+    }
+    assert(e.getMessage.contains(StreamingLoader.LineageTruncationKey) &&
+      e.getMessage.contains("localCheckpoint") && e.getMessage.contains("persist"),
+      e.getMessage)
+  }
+
   test("near-dedup stream: committed band index SPJ-resolves — corpus side never shuffles") {
     import spark.implicits._
     // two chunks: chunk 1 plants a near-copy of a chunk-0 doc, so batch 1

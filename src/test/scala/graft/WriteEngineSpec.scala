@@ -427,7 +427,7 @@ class WriteEngineSpec extends AnyFunSuite {
     val t = cat.loadTable("main", "rk")
     val before = t.metadata.currentFiles
     // first-column pruning alone would rewrite EVERY file of region "b"
-    val regionOnlyHit = t.filesOverlapping(t.metadata, "region", "b", "b").size
+    val regionOnlyHit = StatsPrune.files(t.metadata, Seq(StatsPrune.between("region", "b", "b"))).size
     assert(regionOnlyHit > 1) // precondition: region b spans several files
 
     val batch = Seq(("b", 10L, "B10"), ("b", 11L, "B11"), ("b", 12L, "B12"))
@@ -539,7 +539,7 @@ class WriteEngineSpec extends AnyFunSuite {
     // and min/max pruning now hits like partition pruning: a point/range
     // predicate on the sort column touches one file, not all of them
     val probe = ranges.head._1.toString
-    val hit = t.filesOverlapping(t.metadata, "score", probe, probe)
+    val hit = StatsPrune.files(t.metadata, Seq(StatsPrune.between("score", probe, probe)))
       .filter(_.rowCount > 1)
     assert(hit.size == 1,
       s"a sort-key point probe must prune to one staged file, got ${hit.size}")
