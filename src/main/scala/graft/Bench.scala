@@ -126,6 +126,8 @@ object Bench {
         // Every raw run stays recorded in queries_raw; the clearing cost
         // itself is outside the timed region.
         spark.catalog.clearCache()
+        // clears the DRIVER JVM's memos only: executors keep theirs, so
+        // the cold-caches-between-runs guarantee holds in local mode only
         graft.llmops.Multimodal.clearMemos()
         dt
       }

@@ -2,7 +2,6 @@ package graft.catalog
 
 import java.util.{Optional, OptionalLong}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.read.{Batch, Scan, Statistics, SupportsReportStatistics}
 import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -275,11 +274,6 @@ object ColumnStatsSupport {
     out
   }
 
-  /** Whether the table carries any analyzed column stats at all (cheap
-    * gate before wrapping scans). */
-  def hasStats(properties: Map[String, String]): Boolean =
-    properties.keys.exists(_.startsWith(PropPrefix))
-
   /** Driver-side union of base64 DataSketches HLL sketches (the binary
     * format Spark's `hll_sketch_agg` writes) → rounded NDV estimate.
     * Sketches are KBs and union is O(register-array), so this is
@@ -299,57 +293,4 @@ object ColumnStatsSupport {
       }
       Some(Math.round(u.getEstimate))
     } catch { case scala.util.control.NonFatal(_) => None }
-}
-
-/** Forwarding scan that enriches the inner scan's statistics with
-  * column-level stats and the engine's exact row count (Spark's parquet
-  * V2 scan reports only bytes; CBO cardinality estimation starts from
-  * rows) — used on the plain (non-SPJ) hot path when CBO is enabled.
-  * Case class so exchange reuse between identical scans is preserved. */
-final case class ColStatsScan(inner: Scan,
-    colStats: java.util.Map[NamedReference, ColumnStatistics],
-    exactRows: Long)
-  extends Scan with SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
-
-  // Runtime filtering must survive the wrap: without this delegation,
-  // enabling CBO would silently disable runtime filtering on the clean
-  // scan path. A V1 SupportsRuntimeFiltering inner converts through its
-  // inherited default filter(Predicate[]).
-  override def filterAttributes(): Array[NamedReference] = inner match {
-    case f: org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering =>
-      f.filterAttributes()
-    case _ => Array.empty
-  }
-  override def filter(
-      predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]):
-      Unit = inner match {
-    case f: org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering =>
-      f.filter(predicates)
-    case _ => ()
-  }
-
-  override def readSchema(): StructType = inner.readSchema()
-  override def description(): String = inner.description()
-  override def toBatch: Batch = inner.toBatch
-  override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    inner.columnarSupportMode()
-  override def supportedCustomMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    inner.supportedCustomMetrics()
-  override def reportDriverMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    inner.reportDriverMetrics()
-
-  override def estimateStatistics(): Statistics = {
-    val base = ScanStats.innerOf(inner)
-    new Statistics {
-      override def sizeInBytes: OptionalLong = base.sizeInBytes()
-      override def numRows: OptionalLong =
-        if (base.numRows().isPresent) base.numRows()
-        else OptionalLong.of(exactRows)
-      override def columnStats():
-          java.util.Map[NamedReference, ColumnStatistics] = colStats
-    }
-  }
 }

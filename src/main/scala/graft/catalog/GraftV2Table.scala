@@ -22,11 +22,11 @@ import scala.jdk.CollectionConverters._
   * it). Merge keeps requiring the programmatic API: a bare INSERT
   * carries no primary-key/disposition contract.
   *
-  * Merge-on-read snapshots (outstanding equality [[DeleteFile]]s) cannot
-  * be served by a raw parquet scan — that would resurrect deleted rows —
-  * so the scan falls back to a V1 relation wrapping [[MorRead]] (filters
-  * re-applied by Spark above it; parquet-level pushdown returns after
-  * `Maintenance.applyDeletes`). */
+  * Merge-on-read snapshots (outstanding [[DeleteFile]]s) cannot be served
+  * by a raw parquet scan — that would resurrect deleted rows — so the
+  * parquet scan is decorated with the delete state ([[GraftScan]]), or,
+  * past the driver-state gate, replaced by a V1 relation wrapping
+  * [[MorRead]]. */
 final class GraftV2Table(
     ns: String,
     tableName: String,
@@ -138,8 +138,8 @@ final class GraftV2Table(
 
     private val hasDeletes = morDeletes.nonEmpty || morPosDeletes.nonEmpty
     // Under MoR the parquet builder is still constructed when the table
-    // is partitioned — the SPJ-MoR wrap ([[SpjScan.wrapMor]]) serves the
-    // key-grouped read through it. Column pruning is applied at build()
+    // is partitioned — the MoR [[GraftScan]] serves the (key-grouped)
+    // read through it. Column pruning is applied at build()
     // with the delete key columns appended. Filter pushdown forwards
     // when only EQUALITY deletes are outstanding (deletes and filters
     // both merely remove rows, so pushdown commutes with the per-row
@@ -504,15 +504,19 @@ final class GraftV2Table(
           }
         })
       subset.filter(_ => !fileRequested && !aggPushed)
-        .filter(_.size < morFiles.size).map { fs =>
-          val b2 = rebuildReader(fs).asInstanceOf[SupportsRead]
-            .newScanBuilder(options)
-          required.foreach(r => b2 match {
-            case p: SupportsPushDownRequiredColumns => p.pruneColumns(r)
-            case _ => ()
-          })
-          b2.build()
-        }
+        .filter(_.size < morFiles.size).map(subsetScan)
+    }
+
+    /** A fresh parquet scan over the file subset `fs`, column pruning
+      * re-applied. */
+    private def subsetScan(fs: Seq[DataFile]): Scan = {
+      val b = rebuildReader(fs).asInstanceOf[SupportsRead]
+        .newScanBuilder(options)
+      required.foreach(r => b match {
+        case p: SupportsPushDownRequiredColumns => p.pruneColumns(r)
+        case _ => ()
+      })
+      b.build()
     }
 
     // Aggregate pushdown, two tiers (and never under MoR — the raw data
@@ -591,109 +595,88 @@ final class GraftV2Table(
           desc = Some("graft-meta-agg")).build()
       } else if (limitedScan.isDefined) {
         limitedScan.get
-      } else if (claimedFiles.isDefined && !fileRequested) {
-        // claimed identity-key filters: the predicate IS the file
-        // selection — a pruned scan over exactly the matching files.
-        // SPJ/CBO reports carry over the SUBSET (each surviving file is
-        // still value-exact, so the key-grouped report stays truthful —
-        // an SPJ join filtered on its partition key must not lose its
-        // shuffle-free plan to the claim)
-        val fs = claimedFiles.get
-        val b2 = rebuildReader(fs).asInstanceOf[SupportsRead]
-          .newScanBuilder(options)
-        required.foreach(r => b2 match {
-          case p: SupportsPushDownRequiredColumns => p.pruneColumns(r)
-          case _ => ()
-        })
-        val scan2 = b2.build()
-        val conf = org.apache.spark.sql.internal.SQLConf.get
-        val cbo =
-          if (conf.cboEnabled)
-            Some(ColumnStatsSupport.columnStats(
-              committedSchema, tableProperties, fs)).filter(!_.isEmpty)
-          else None
-        val spj =
-          if (conf.v2BucketingEnabled)
-            SpjScan.wrap(scan2, partitionSpec, committedSchema, fs, cbo)
-          else scan2
-        if ((spj eq scan2) && cbo.isDefined)
-          ColStatsScan(scan2, cbo.get, fs.map(_.rowCount).sum)
-        else spj
-      } else if (!fileRequested) {
-        if (!hasDeletes) {
-          val b = inner.get // always constructed on the clean path
-          val scan = b.build()
-          // Column stats for CBO: only when the session opts in (plans
-          // are byte-identical otherwise) and only on non-aggregate
-          // scans (a pushed aggregate's schema is the agg result).
-          val conf = org.apache.spark.sql.internal.SQLConf.get
-          val cboStats =
-            if (!aggPushed && conf.cboEnabled)
-              Some(ColumnStatsSupport.columnStats(
-                committedSchema, tableProperties, scanFiles))
-                .filter(!_.isEmpty)
-            else None
-          // Storage-partitioned-join report (SpjScan): only on the clean
-          // parquet hot path with no pushed aggregate (whose scan schema
-          // is the agg result), and only when the session opts into V2
-          // bucketing, so a conf-off plan is byte-identical to the
-          // pre-SPJ one.
-          val spj =
-            if (!aggPushed && conf.v2BucketingEnabled)
-              SpjScan.wrap(scan, partitionSpec, committedSchema, scanFiles,
-                cboStats)
-            else scan
-          if ((spj eq scan) && cboStats.isDefined)
-            ColStatsScan(scan, cboStats.get, scanFiles.map(_.rowCount).sum)
-          else spj
-        } else buildMor()
+      } else if (fileRequested) {
+        dataFrameScan(required.get, catalystFilters, MorRead.readWithFile(_,
+          committedSchema, scanFiles, scanDeletes, morPosDeletes))
       } else {
-        val out = required.getOrElse(StructType(committedSchema.fields :+
-          org.apache.spark.sql.types.StructField(
-            GroupScan.FileColumn, StringType, nullable = false)))
-        val filters = catalystFilters
-        GraftV2Table.v1ScanOf(out, ctx => {
-          var df = MorRead.readWithFile(ctx.sparkSession, committedSchema,
-            scanFiles, scanDeletes, morPosDeletes)
-          // re-apply forwarded catalyst filters, attributes rebound by
-          // name onto this DataFrame's output (exprIds differ)
-          val byName = df.queryExecution.analyzed.output
-            .map(a => a.name -> a).toMap
-          filters.foreach { e =>
-            val bound = e.transform {
-              case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-                byName.getOrElse(a.name,
-                  throw new IllegalStateException(
-                    s"cannot rebind pushed filter $e: no column ${a.name}"))
-            }
-            df = df.filter(
-              org.apache.spark.sql.classic.GraftSqlShims.column(bound))
-          }
-          df.select(out.fieldNames.map(col).toIndexedSeq: _*)
-        }, Some(fileStats(scanFiles))).build()
+        // Claimed identity-key filters: the predicate IS the file
+        // selection — a scan over exactly the matching files. Each
+        // surviving file is still value-exact, so the key-grouped report
+        // stays truthful (an SPJ join filtered on its partition key must
+        // not lose its shuffle-free plan to the claim).
+        val (scan, files, mor) = claimedFiles match {
+          case Some(fs) => (subsetScan(fs), fs, None)
+          // always constructed on the clean path
+          case None if !hasDeletes => (inner.get.build(), scanFiles, None)
+          case None => morScan().getOrElse(return dataFrameScan(
+            required.getOrElse(committedSchema),
+            if (morCanPush) catalystFilters else Nil,
+            MorRead.read(_, committedSchema, scanFiles, scanDeletes,
+              morPosDeletes)))
+        }
+        decorate(scan, files, mor)
       }
 
-    /** Merge-on-read scan, best wrap first:
-      *
-      *  1. the SPJ-MoR wrap when the session opts into V2 bucketing and
-      *     the spec + file stats qualify — the scan keeps the clean
-      *     path's `KeyGroupedPartitioning` report and [[MorSpjReader]]
-      *     applies the deletes per row (a merged co-bucketed fact table
-      *     joins shuffle-free);
-      *  2. otherwise the PLAIN MoR wrap — same per-row delete reader
-      *     without a partitioning report: parquet pushdown and
-      *     vectorized-backed reads for unpartitioned/ineligible tables,
-      *     instead of the join-based V1 scan;
-      *  3. the V1 `MorRead` scan when a delete is keyed on a
-      *     since-dropped column (the extended read schema cannot carry
-      *     it), or when the metadata-summed outstanding delete rows
-      *     exceed [[MorRead.driverStateMaxRows]] — the wraps collect the
-      *     whole delete state driver-side, which is only sound for
-      *     trickle-sized backlogs; past the gate the join-based
-      *     application degrades gracefully instead of OOMing the
-      *     driver. */
-    private def buildMor(): Scan = {
+    /** The one decoration point of the parquet scan (see [[GraftScan]]):
+      * the key-grouped report when the session opts into V2 bucketing,
+      * CBO column stats when it opts into CBO (deletes-free scans only),
+      * and the MoR delete state. Neither report on a pushed aggregate,
+      * whose scan schema is the aggregate result. Confs off and no
+      * deletes leave the raw parquet scan, so plans are byte-identical. */
+    private def decorate(scan: Scan, files: Seq[DataFile],
+        mor: Option[GraftScan.MorInfo]): Scan = {
       val conf = org.apache.spark.sql.internal.SQLConf.get
+      val keyed =
+        if (!aggPushed && conf.v2BucketingEnabled)
+          GraftScan.keyGrouping(partitionSpec, committedSchema,
+            mor.fold(scan.readSchema())(_.requestedSchema), files)
+        else None
+      val colStats =
+        if (!aggPushed && mor.isEmpty && conf.cboEnabled)
+          Some(ColumnStatsSupport.columnStats(
+            committedSchema, tableProperties, files))
+            .filter(!_.isEmpty).map(_ -> files.map(_.rowCount).sum)
+        else None
+      GraftScan(scan, keyed, colStats, mor)
+    }
+
+    /** A DataFrame-backed V1 scan of `out` over `read`, sized by the exact
+      * file footprint. Catalyst `filters` already forwarded to the (now
+      * unused) parquet builder are re-applied on the DataFrame,
+      * attributes rebound by name onto its output (exprIds differ) — a
+      * filter Spark believes pushed must never be dropped. */
+    private def dataFrameScan(out: StructType,
+        filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+        read: org.apache.spark.sql.SparkSession =>
+          org.apache.spark.sql.DataFrame): Scan =
+      GraftV2Table.v1ScanOf(out, ctx => {
+        var df = read(ctx.sparkSession)
+        val byName = df.queryExecution.analyzed.output
+          .map(a => a.name -> a).toMap
+        filters.foreach { e =>
+          val bound = e.transform {
+            case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
+              byName.getOrElse(a.name,
+                throw new IllegalStateException(
+                  s"cannot rebind pushed filter $e: no column ${a.name}"))
+          }
+          df = df.filter(
+            org.apache.spark.sql.classic.GraftSqlShims.column(bound))
+        }
+        df.select(out.fieldNames.map(col).toIndexedSeq: _*)
+      }, Some(fileStats(scanFiles))).build()
+
+    /** The merge-on-read parquet scan, pruned to the requested columns ∪
+      * the equality-delete key columns, with its delete state: the MoR
+      * [[GraftScan]] applies the deletes per row, keeping the clean
+      * path's key-grouped report when the layout qualifies (a merged
+      * co-bucketed fact table joins shuffle-free) and otherwise still
+      * giving parquet pushdown and vectorized-backed reads. None ⇒ the
+      * V1 `MorRead` scan, when a delete is keyed on a since-dropped
+      * column (the extended read schema cannot carry it), or when the
+      * metadata-summed outstanding delete rows exceed
+      * [[MorRead.driverStateMaxRows]]. */
+    private def morScan(): Option[(Scan, Seq[DataFile], Option[GraftScan.MorInfo])] = {
       val requested = required.getOrElse(committedSchema)
       // Positional-delete invariant: the wrap counts parquet row_index by
       // position in the unskipped row stream, which is only correct when
@@ -709,18 +692,17 @@ final class GraftV2Table(
         case _ => ()
       }
       // Size gate: bound driver memory BEFORE reading a delete byte. The
-      // wrap paths (SPJ-MoR and plain) collect the WHOLE delete state to
-      // the driver ([[MorSpjReader.collectState]]); that is only sound
-      // for trickle-merge-sized backlogs. Past the metadata-summed
-      // threshold the scan degrades to the V1 MorRead join application
+      // MoR scan collects the WHOLE delete state to the driver
+      // ([[MorSpjReader.collectState]]); that is only sound for
+      // trickle-merge-sized backlogs. Past the metadata-summed threshold
+      // the scan degrades to the V1 MorRead join application
       // (Spark-managed memory; broadcast under MorRead's own row gate,
       // shuffle-join above it) — a merge-heavy table that missed its
       // compaction window loses the key-grouped report, never the driver.
       val deleteStateRows =
         scanDeletes.map(_.rowCount).sum + morPosDeletes.map(_.rowCount).sum
-      val attempt: Option[Scan] =
-        if (deleteStateRows > MorRead.driverStateMaxRows) None
-        else inner.flatMap { b =>
+      if (deleteStateRows > MorRead.driverStateMaxRows) return None
+      inner.flatMap { b =>
         val extraKeys = scanDeletes.flatMap(_.keyColumns).distinct
           .filterNot(requested.fieldNames.contains)
         if (extraKeys.exists(k => !committedSchema.fieldNames.contains(k)))
@@ -733,38 +715,9 @@ final class GraftV2Table(
               p.pruneColumns(extended)
             case _ => ()
           }
-          val scan = b.build()
-          val spj =
-            if (conf.v2BucketingEnabled && partitionSpec.nonEmpty)
-              SpjScan.wrapMor(scan, partitionSpec, committedSchema,
-                extended, requested, scanFiles, scanDeletes, morPosDeletes)
-            else None
-          spj.orElse(Some(SpjScan.wrapMorPlain(scan, committedSchema,
-            extended, requested, scanFiles, scanDeletes, morPosDeletes)))
+          Some((b.build(), scanFiles, Some(GraftScan.MorInfo(committedSchema,
+            extended, requested, scanFiles, scanDeletes, morPosDeletes))))
         }
-      }
-      attempt.getOrElse {
-        // MoR fallback: column-pruned through the delete application.
-        // Filters forwarded to the (now unused) parquet builder are
-        // re-applied on the DataFrame, rebound by name.
-        val filters = if (morCanPush) catalystFilters else Nil
-        GraftV2Table.v1ScanOf(requested, ctx => {
-          var df = MorRead.read(ctx.sparkSession, committedSchema,
-            scanFiles, scanDeletes, morPosDeletes)
-          val byName = df.queryExecution.analyzed.output
-            .map(a => a.name -> a).toMap
-          filters.foreach { e =>
-            val bound = e.transform {
-              case a: org.apache.spark.sql.catalyst.expressions.AttributeReference =>
-                byName.getOrElse(a.name,
-                  throw new IllegalStateException(
-                    s"cannot rebind pushed filter $e: no column ${a.name}"))
-            }
-            df = df.filter(
-              org.apache.spark.sql.classic.GraftSqlShims.column(bound))
-          }
-          df.select(requested.fieldNames.map(col).toIndexedSeq: _*)
-        }, Some(fileStats(scanFiles))).build()
       }
     }
   }
@@ -899,7 +852,7 @@ object GraftV2Table {
           org.apache.spark.sql.execution.datasources.v2.PushedDownOperators(
             None, None, None, None, Nil, Nil, Nil, None))
       // the full-group row-level fallback must NOT advertise runtime
-      // filtering: an SPJ-wrapped scan exposes PARTITION SOURCE columns
+      // filtering: a key-grouped scan exposes PARTITION SOURCE columns
       // as filter attributes (sound for join DPP on normal reads), and
       // Spark's RowLevelOperationRuntimeGroupFiltering would treat them
       // as GROUP columns — injecting a row-granularity `key IN (matched
@@ -911,8 +864,7 @@ object GraftV2Table {
       // read EVERY row of the planned set — narrowing belongs to the
       // GroupScan path, whose filter attribute is `_file` (a true group
       // key).
-      case s: org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering =>
-        NoRuntimeFilterScan(s)
+      case g: GraftScan => g.withoutRuntimeFiltering
       case s => s
     }
   }

@@ -130,7 +130,7 @@ object MorSpjReader {
 
     override def createReader(partition: InputPartition):
         PartitionReader[InternalRow] = {
-      val mp = partition.asInstanceOf[SpjScan.MorPartition]
+      val mp = partition.asInstanceOf[GraftScan.MorPartition]
       val base = inner.createReader(mp)
       val state = bc.value
       // groups with no delete newer than this partition's files are

@@ -4,7 +4,7 @@ import java.util.OptionalLong
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.connector.read.{Scan, Statistics => V2Statistics, SupportsReportStatistics, V1Scan}
+import org.apache.spark.sql.connector.read.{Statistics => V2Statistics, SupportsReportStatistics, V1Scan}
 import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, PushedDownOperators, V1ScanWrapper}
 
 /** Size/row statistics for the engine's V1-shim scans.
@@ -18,9 +18,11 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, 
   * box: a 2 KB MoR dimension table joined to a fact table got a
   * sort-merge join, which at cluster scale shuffles the entire fact side.
   * The engine KNOWS the exact footprint from commit-time footer stats
-  * ([[DataFile.rowCount]]/[[DataFile.sizeBytes]]), so report it.
+  * ([[DataFile.rowCount]]/[[DataFile.sizeBytes]]), so report it. (The
+  * parquet hot path's own decorations — column stats, key grouping, MoR
+  * deletes — live in [[GraftScan]].)
   *
-  * Two delivery paths:
+  * Two delivery paths for the V1 shims:
   *  - scans the ENGINE wraps itself (row-level operation scans via
   *    `GraftV2Table.wrapV1`) become [[StatsV1ScanWrapper]] directly;
   *  - scans SPARK wraps (`V2ScanRelationPushDown` puts every V1Scan in a
@@ -35,18 +37,6 @@ object ScanStats {
   def of(sizeBytes: Long, rows: Long): V2Statistics = new V2Statistics {
     override def sizeInBytes(): OptionalLong = OptionalLong.of(sizeBytes)
     override def numRows(): OptionalLong = OptionalLong.of(rows)
-  }
-
-  /** What a forwarding scan reports: the inner scan's own estimate, or
-    * an unknown one when the inner scan reports none. */
-  def innerOf(inner: Scan): V2Statistics = inner match {
-    case s: SupportsReportStatistics => s.estimateStatistics()
-    case _ => Unknown
-  }
-
-  private val Unknown: V2Statistics = new V2Statistics {
-    override def sizeInBytes(): OptionalLong = OptionalLong.empty()
-    override def numRows(): OptionalLong = OptionalLong.empty()
   }
 
   /** Stats of a driver-local DataFrame (metadata tables): the plan is a
@@ -116,30 +106,4 @@ object V1ScanStatsRule extends Rule[LogicalPlan] {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ V1ScanStatsRule
   }
-}
-
-/** Forwarding scan that HIDES `SupportsRuntimeV2Filtering` from Spark.
-  * Used by [[GraftV2Table.wrapV1]] for the row-level FULL-GROUP fallback
-  * scan: there the commit replaces the entire planned file set, so the
-  * scan must read every row of it — a runtime row filter derived from
-  * the inner scan's DPP attributes (partition SOURCE columns on an
-  * SPJ-wrapped merge-on-read scan) would silently drop carried rows of
-  * replaced files. Statistics still forward so join planning keeps its
-  * size information. */
-final case class NoRuntimeFilterScan(inner: Scan)
-  extends Scan with SupportsReportStatistics {
-  override def readSchema(): org.apache.spark.sql.types.StructType =
-    inner.readSchema()
-  override def description(): String = inner.description()
-  override def toBatch: org.apache.spark.sql.connector.read.Batch =
-    inner.toBatch
-  override def columnarSupportMode(): Scan.ColumnarSupportMode =
-    inner.columnarSupportMode()
-  override def supportedCustomMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomMetric] =
-    inner.supportedCustomMetrics()
-  override def reportDriverMetrics():
-      Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    inner.reportDriverMetrics()
-  override def estimateStatistics(): V2Statistics = ScanStats.innerOf(inner)
 }

@@ -7,7 +7,7 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** The Iceberg `bucket` transform as a V2 catalog function —
   * `bucket(numBuckets, value)`. This exists so Spark can RESOLVE the
-  * `bucket(N, col)` transform that [[graft.catalog.SpjScan]] reports in
+  * `bucket(N, col)` transform that [[graft.catalog.GraftScan]] reports in
   * its `KeyGroupedPartitioning`: storage-partitioned-join planning binds
   * each side's transform through the table's `FunctionCatalog`
   * ([[graft.catalog.GraftSparkCatalog.loadFunction]]) and treats the

@@ -11,7 +11,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * `hour`, [[graft.partition.Transforms.expression]] semantics: calendar
   * year int, "yyyy-MM" string, date, "yyyy-MM-dd-HH" string — all under
   * the engine's pinned UTC sessions) served as V2 catalog functions, so
-  * [[graft.catalog.SpjScan]]'s `KeyGroupedPartitioning` over
+  * [[graft.catalog.GraftScan]]'s `KeyGroupedPartitioning` over
   * `days(ts)`-style transforms resolves on both sides of a join and a
   * ts-equality join of two day-partitioned tables plans shuffle-free.
   * `produceResult` must agree bit-for-bit with the write-side column

@@ -687,7 +687,12 @@ object Dedup {
     * probabilistic recall) or shingle-frequency caps upstream
     * ([[ngramJaccardPairs]]'s `maxShingleFreq`). For exact-recall dedup
     * at corpus scale, prefer the capped exact-Jaccard twin (l18), whose
-    * per-shingle join fan-out is bounded at cap^2 by construction. */
+    * per-shingle join fan-out is bounded at cap^2 by construction.
+    *
+    * Caching contract: the returned DataFrame reads the cached `sh`,
+    * `candidates` and `candSh` intermediates, which stay cached after it
+    * is evaluated. The caller releases them when done with the result
+    * (`spark.catalog.clearCache()`, or unpersist). */
   def minHashLshPairs(docs: DataFrame, n: Int = 3, numHashes: Int = 64,
       bands: Int = 32, threshold: Double = 0.5,
       textCol: String = "text"): DataFrame = {
@@ -766,7 +771,9 @@ object Dedup {
   /** SimHash near-dup pairs with Hamming distance <= maxHamming.
     * Candidates come from 4×16-bit band buckets (a pair within distance 3
     * must agree on at least one band by pigeonhole), verified with exact
-    * popcount. */
+    * popcount. The returned DataFrame reads the cached `sim` signatures,
+    * which stay cached; the caller releases them when done with the
+    * result (`spark.catalog.clearCache()`, or unpersist). */
   def simHashPairs(docs: DataFrame, maxHamming: Int = 3,
       textCol: String = "text"): DataFrame = {
     val sim = simHash(docs, textCol).cache()

@@ -637,7 +637,7 @@ object WriteQueries {
 
     // Storage-partitioned join: orders and customer co-bucketed on the
     // customer key join + aggregate with ZERO shuffles on either side —
-    // the scan reports KeyGroupedPartitioning (SpjScan) and Spark plans
+    // the scan reports KeyGroupedPartitioning (GraftScan) and Spark plans
     // the sort-merge join on the layout the writer already paid for. At
     // 100 TB this deletes the dominant cost of a recurring fact-fact
     // join. The in-query require PINS shuffle-freedom: a planner or
@@ -685,7 +685,7 @@ object WriteQueries {
     // Dynamic partition pruning through the catalog scan: customer
     // identity-partitioned on nation, nation dim filtered to one region —
     // the runtime IN filter from the dim broadcast reaches the fact scan
-    // (SpjScan.SupportsRuntimeV2Filtering) and only the matching nations'
+    // (GraftScan.SupportsRuntimeV2Filtering) and only the matching nations'
     // value-exact files are ever opened. The in-query require PINS both
     // the filter injection and the actual row-level pruning: the scan
     // must emit exactly the surviving region's rows, strictly fewer than

@@ -179,7 +179,7 @@ final class StreamingLoader(catalog: GraftCatalog) {
     * band index (doc_id, bkey) committed with a `bucket[bandBuckets]`
     * partition hint on `bkey`. The index is what makes the per-batch
     * candidate join shuffle-free on the corpus side: its scan reports
-    * `KeyGroupedPartitioning(bucket(N, bkey))` (SpjScan) and with one-
+    * `KeyGroupedPartitioning(bucket(N, bkey))` (GraftScan) and with one-
     * sided SPJ shuffle enabled Spark routes ONLY the incoming batch's
     * band keys into the committed layout — the corpus index is read
     * map-only, in place, every batch, forever. Commit order within a

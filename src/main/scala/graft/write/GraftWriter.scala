@@ -270,12 +270,24 @@ final class GraftWriter(catalog: GraftCatalog) {
             mNow.partitionSpec, clusterBy,
             GraftWriter.bloomColumns(mNow, cfg),
             GraftWriter.sketchColumns(mNow, cfg), cfg.maxRecordsPerFile)
-          if (staged.map(_.rowCount).sum > keyCount)
+          if (staged.map(_.rowCount).sum > keyCount) {
+            // nothing references the staged batch (nor, under MoR, the
+            // key file): drop their staging directories, Spark's sidecar
+            // files included, instead of leaving them to vacuum
+            def stageDirs(fs: Seq[DataFile], root: java.nio.file.Path) =
+              fs.map(f => java.nio.file.Paths.get(f.path))
+                .filter(_.startsWith(root))
+                .map(p => root.resolve(root.relativize(p).getName(0)))
+            (stageDirs(staged, t.dataDir) ++
+              (if (cfg.mergeOnRead)
+                stageDirs(keyStaged, t.dir.resolve("deletes"))
+              else Nil)).distinct.foreach(GraftWriter.deleteQuietly)
             throw new ValidationError(
               s"Upsert batch contains duplicate primary keys on (${pks.mkString(", ")})")
+          }
 
           // hard deletes AFTER the dup check (a duplicate batch must
-          // commit NOTHING — staged files above are uncommitted orphans)
+          // commit NOTHING — its staged files are deleted above)
           // and BEFORE the upsert, as a separate commit (separate
           // PyIceberg transaction in the reference,
           // destination_client.py:1438-1441).

@@ -140,7 +140,7 @@ object Stager {
     // staging through `partitionBy` on reserved derived columns (pulled
     // into directory names, so the data-file schema is untouched). This
     // is what makes a file's derived-column stats single-valued — the
-    // contract [[graft.catalog.SpjScan]] needs to map file → partition
+    // contract [[graft.catalog.GraftScan]] needs to map file → partition
     // key for storage-partitioned joins, and it tightens min/max pruning
     // to exact partition pruning. File count per load = distinct tuples
     // in the load (the spec author bounds cardinality — that is what

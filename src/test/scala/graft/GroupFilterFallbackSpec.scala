@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * NOT a group filter there (the group is bucket(key)): carried rows of
   * replaced files silently vanish, and with a pure-insert MERGE source
   * the IN-list is empty and the whole table is lost. The fallback scan
-  * now hides SupportsRuntimeV2Filtering ([[NoRuntimeFilterScan]]); its
-  * contract is to read every planned row. Found by the model checker's
-  * seed-7 sequence (round 11). */
+  * now reports no runtime-filter attributes
+  * ([[GraftScan.withoutRuntimeFiltering]]); its contract is to read every
+  * planned row. Found by the model checker's seed-7 sequence (round 11). */
 class GroupFilterFallbackSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   import spark.implicits._

@@ -11,7 +11,7 @@ import graft.write._
 /** Storage-partitioned joins: two graft tables co-bucketed on the join
   * key sort-merge join with ZERO shuffle on either side once the session
   * opts into `spark.sql.sources.v2.bucketing.enabled` — the
-  * KeyGroupedPartitioning contract of [[SpjScan]] plus the `bucket`
+  * KeyGroupedPartitioning contract of [[GraftScan]] plus the `bucket`
   * function catalog resolution in [[GraftSparkCatalog]]. Conf off must
   * reproduce the exact pre-SPJ plan (shuffled), and results must match
   * in both modes. */
@@ -73,6 +73,34 @@ class SpjSpec extends AnyFunSuite {
       r.getLong(2), r.getDouble(3))).sortBy(_._1)
     assert(a.sameElements(b))
     assert(a.length == 97)
+  }
+
+  test("analyzed co-bucketed join with CBO and v2 bucketing on: keyed scan carries column stats; results agree") {
+    val wh = Files.createTempDirectory("graft-spj-cbo-").toString
+    writeBucketed(new GraftCatalog(spark, wh))
+    val sql = """SELECT f.k, d.label, COUNT(*) AS n, SUM(f.v) AS sv
+                |FROM spjcbo.main.facts f JOIN spjcbo.main.dims d ON f.k = d.k
+                |GROUP BY f.k, d.label""".stripMargin
+    val off = spjSession("spjcbo", wh, enabled = false)
+    Seq("facts", "dims").foreach(t =>
+      off.sql(s"CALL spjcbo.system.analyze('main.$t')").collect())
+
+    val on = spjSession("spjcbo", wh, enabled = true)
+    on.conf.set("spark.sql.cbo.enabled", "true")
+    val df = on.sql(sql)
+    assert(shuffles(df) == 0, s"expected shuffle-free SPJ plan:\n" +
+      df.queryExecution.executedPlan)
+    val facts = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+          if r.relation.table.name().endsWith("facts") => r
+    }
+    assert(facts.size == 1, df.queryExecution.optimizedPlan)
+    val attrStats = facts.head.stats.attributeStats
+    assert(attrStats.keys.exists(_.name == "k"), s"no stats for k: $attrStats")
+
+    def rows(d: org.apache.spark.sql.DataFrame) = d.collect().map(r =>
+      (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3))).sortBy(_._1)
+    assert(rows(df).sameElements(rows(off.sql(sql))))
   }
 
   test("Iceberg-attached tables join shuffle-free: synthesized tuple stats drive SPJ") {

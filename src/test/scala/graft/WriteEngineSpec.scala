@@ -109,6 +109,24 @@ class WriteEngineSpec extends AnyFunSuite {
       w.writeTable("main", "u", Seq(users((1, "a", 1), (1, "dup", 2))),
         Merge("upsert"), pkCfg, "l1")
     }
+    // against an existing table, in both merge modes: the refused batch
+    // commits nothing and leaves no staged file for vacuum to reclaim
+    for ((name, cfg) <- Seq("cow" -> pkCfg,
+        "mor" -> pkCfg.copy(mergeOnRead = true))) {
+      w.writeTable("main", name, Seq(users((1, "a", 1), (2, "b", 2))),
+        Merge("upsert"), cfg, "l1")
+      val before = cat.loadTable("main", name).read().collect().toSet
+      // committed loads leave Spark's _SUCCESS/.crc sidecars; start clean
+      Maintenance.vacuumOrphans(cat.loadTable("main", name), minAgeMs = 0L)
+      intercept[ValidationError] {
+        w.writeTable("main", name, Seq(users((3, "c", 3), (3, "dup", 4))),
+          Merge("upsert"), cfg, "l2")
+      }
+      val t = cat.loadTable("main", name)
+      val orphans = Maintenance.vacuumOrphans(t, minAgeMs = 0L)
+      assert(orphans.isEmpty, s"$name: refused batch left $orphans")
+      assert(t.read().collect().toSet == before)
+    }
   }
 
   test("merge without primary key falls back to append") {
