@@ -45,8 +45,8 @@ import org.apache.spark.util.SerializableConfiguration
   * them) — compaction restores the narrowed path.
   *
   * Concurrency: commit refuses when the live file set OR delete set no
-  * longer equals the planning snapshot's (the scan's row basis) — the
-  * same staleness rule as compaction and `deleteWhere`. */
+  * longer equals the planning snapshot's (the scan's row basis), through
+  * the one staleness rule, [[TableMetadata.requireNotSuperseded]]. */
 final class GraftRowLevelOperation(
     ns: String,
     tableName: String,
@@ -168,17 +168,8 @@ final class GraftReplaceBatchWrite(
       else graft.write.Stager.collectStats(
         SparkSession.active, files, schema, spec)
     t.commit({ fresh =>
-      if (fresh.currentFiles.map(_.path).toSet != plannedPaths)
-        throw new ValidationError(
-          s"SQL $op superseded by a concurrent commit that changed the " +
-            "data-file set; re-run the statement")
-      val freshDeletes =
-        (fresh.currentSnapshot.map(_.deletes).getOrElse(Nil).map(_.path) ++
-          fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil).map(_.path)).toSet
-      if (freshDeletes != plannedDeletePaths)
-        throw new ValidationError(
-          s"SQL $op superseded by a concurrent merge-on-read delete; " +
-            "re-run the statement")
+      fresh.requireNotSuperseded(s"SQL $op", plannedPaths, identical = true,
+        Some(plannedDeletePaths))
       // group replace: the scanned files are rewritten (on the V1
       // fallback that is every planned file, with deletes applied — so
       // outstanding delete files have no remaining victims and clear);
@@ -397,17 +388,8 @@ final class GraftDeltaBatchWrite(
     // basis (rewrote files or added deletes) invalidates the matched
     // set, so commit refuses staleness exactly like the CoW path.
     t.commit({ fresh =>
-      if (fresh.currentFiles.map(_.path).toSet != plannedPaths)
-        throw new ValidationError(
-          s"SQL $op (merge-on-read) superseded by a concurrent commit " +
-            "that changed the data-file set; re-run the statement")
-      val freshDeletes =
-        (fresh.currentSnapshot.map(_.deletes).getOrElse(Nil).map(_.path) ++
-          fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil).map(_.path)).toSet
-      if (freshDeletes != plannedDeletePaths)
-        throw new ValidationError(
-          s"SQL $op (merge-on-read) superseded by a concurrent " +
-            "merge-on-read delete; re-run the statement")
+      fresh.requireNotSuperseded(s"SQL $op (merge-on-read)", plannedPaths,
+        identical = true, Some(plannedDeletePaths))
       fresh.withSnapshotDelta(op, Some(loadId), dataFiles, Set.empty,
         newDeletes = delFiles)
     }, maxRetries = 5, backoffBase = 2.0, unitMs = 50L)

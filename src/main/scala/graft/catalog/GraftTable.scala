@@ -58,7 +58,16 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
   def metadataAt(version: Int): TableMetadata = {
     val p = versionPath(version)
     if (!Files.exists(p)) throw new NoSuchTableError(dir.toString)
-    TableMetadata.fromJson(new String(Files.readAllBytes(p), UTF_8))
+    // the CAS creates the version file before writing its content, so a
+    // reader racing a commit in flight can see it empty: wait it out
+    var bytes = Files.readAllBytes(p)
+    var waits = 0
+    while (bytes.isEmpty && waits < 2000) {
+      Thread.sleep(1)
+      waits += 1
+      bytes = Files.readAllBytes(p)
+    }
+    TableMetadata.fromJson(new String(bytes, UTF_8))
   }
 
   /** Metadata-only row count: folded from snapshot manifest refs, no data

@@ -29,6 +29,11 @@ object PathIO {
   def deleteRecursively(p: Path): Unit =
     walk(p).reverse.foreach(Files.deleteIfExists)
 
+  /** Best-effort [[deleteRecursively]]: a failure stops it silently. */
+  def deleteQuietly(p: Path): Unit =
+    try deleteRecursively(p)
+    catch { case scala.util.control.NonFatal(_) => () }
+
   /** Bounded emptiness probe: opens, checks one entry, closes — O(1)
     * regardless of directory size. */
   def isEmptyDir(dir: Path): Boolean = {

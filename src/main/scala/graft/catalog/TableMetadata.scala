@@ -244,6 +244,16 @@ final case class TableMetadata(
   def currentFiles: Seq[DataFile] =
     currentSnapshot.map(_.dataFiles).getOrElse(Nil)
 
+  def currentDeletes: Seq[DeleteFile] =
+    currentSnapshot.map(_.deletes).getOrElse(Nil)
+
+  def currentPosDeletes: Seq[PosDeleteFile] =
+    currentSnapshot.map(_.posDeletes).getOrElse(Nil)
+
+  /** Paths of every live delete file, equality and positional. */
+  def currentDeletePaths: Set[String] =
+    (currentDeletes.map(_.path) ++ currentPosDeletes.map(_.path)).toSet
+
   /** Partition-spec evolution (Iceberg-style): the new spec applies to
     * FUTURE staged files only; files written under older specs keep
     * their old derived stats and are conservatively retained by pruning
@@ -392,6 +402,31 @@ final case class TableMetadata(
           (if (parentHasData) newPosDeletes else Nil))
   }
 
+  /** The staleness rule for every rewrite planned against one snapshot
+    * and committed against a later one (this metadata, inside the
+    * commit closure): throws when a concurrent commit has invalidated
+    * the plan. `planned` is the set of data-file paths the rewrite read.
+    * `identical` demands the live file set still EQUAL it (a whole-table
+    * rewrite would drop any file added since); otherwise the live set
+    * only has to still CONTAIN it (the rewrite replaces just those
+    * files, and a restaged file's rows moved to a new path). When
+    * `plannedDeletes` is given, the live delete set must equal it: the
+    * rewrite computed its rows against those deletes, and its output
+    * lands with a newer sequence or new paths, out of reach of any
+    * delete that arrived since. */
+  def requireNotSuperseded(op: String, planned: Set[String],
+      identical: Boolean, plannedDeletes: Option[Set[String]] = None): Unit = {
+    val live = currentFiles.iterator.map(_.path).toSet
+    val stale =
+      if (identical && live != planned) Some("changed the data-file set")
+      else if (!planned.subsetOf(live)) Some("rewrote a planned file")
+      else if (plannedDeletes.exists(_ != currentDeletePaths))
+        Some("changed the merge-on-read delete set")
+      else None
+    stale.foreach(why => throw new ValidationError(
+      s"$op superseded by a concurrent commit that $why; re-run it"))
+  }
+
   /** Manifest merging (the Iceberg merge-manifests idea): one manifest
     * per append makes snapshot k carry k refs, i.e. O(loads²) metadata
     * JSON across a long un-expired history. When a snapshot would exceed
@@ -524,6 +559,24 @@ object TableMetadata {
     * quadratic (the delete-backlog bench measured multi-second commits by
     * depth 500 on the inline form). */
   val InlineSnapshotEntryMax = 8
+
+  /** Runs a rewrite's commit. If it is refused with a [[ValidationError]]
+    * (the staleness rule, or any other check inside the commit closure,
+    * all raised before the CAS, so nothing committed), deletes the files
+    * the rewrite staged before it began the commit, then rethrows. */
+  def discardOnRefusal[A](t: GraftTable, staged: Seq[String])(commit: => A): A =
+    try commit
+    catch { case e: ValidationError => discardStaged(t, staged); throw e }
+
+  /** Deletes the per-call staging directories (`<loadId>-<uuid8>` under
+    * the table's data or deletes root, Spark's sidecar files included)
+    * holding `staged`. Only for output no snapshot references. */
+  def discardStaged(t: GraftTable, staged: Seq[String]): Unit = {
+    val roots = Seq(t.dataDir, t.dir.resolve("deletes"))
+    staged.map(java.nio.file.Paths.get(_)).flatMap(p =>
+      roots.find(p.startsWith).map(r => r.resolve(r.relativize(p).getName(0))))
+      .distinct.foreach(PathIO.deleteQuietly)
+  }
 
   private implicit val formats: Formats = Serialization.formats(NoTypeHints)
 

@@ -1,7 +1,8 @@
 package graft.write
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.catalog._
 import graft.cast.SafeCast
 import graft.partition.{PartitionHint, Transforms}
@@ -86,7 +87,8 @@ final case class WriteConfig(
   * pushdown.
   */
 final class GraftWriter(catalog: GraftCatalog) {
-  import GraftWriter.MaxBloomProbeKeys
+  import GraftWriter.{IdxCol, MaxBloomProbeKeys, OverwriteRows, PathCol,
+    UpdateRows}
 
   def spark: SparkSession = catalog.spark
 
@@ -98,9 +100,7 @@ final class GraftWriter(catalog: GraftCatalog) {
       loadId: String = java.util.UUID.randomUUID().toString): GraftTable = {
     require(batches.nonEmpty, "no batches to write")
 
-    val incomingSchema = org.apache.spark.sql.types.StructType(
-      TypeLattice.normalize(batches.head.schema).fields.map(f =>
-        f.copy(nullable = !cfg.requiredColumns.contains(f.name))))
+    val incomingSchema = GraftWriter.incomingSchema(batches.head, cfg)
     val exists = catalog.tableExists(ns, name)
     var created = false
     val t =
@@ -132,21 +132,7 @@ final class GraftWriter(catalog: GraftCatalog) {
         }
       } else catalog.loadTable(ns, name)
 
-    // Schema evolution before cast (destination_client.py:1341-1348)
-    if (!created) {
-      val evo = SchemaEvolution.evolve(t.metadata.schema, incomingSchema,
-        cfg.allowColumnDrops)
-      if (evo.evolved)
-        t.commit(_.withSchema(evo.schema), cfg.maxRetries, cfg.backoffBase,
-          cfg.retryUnitMs)
-    }
-
-    val m0 = t.metadata
-    val target = m0.schema
-    // Cast every batch to the table schema (C4-C5) and union —
-    // `pa.concat_tables` (destination_client.py:1354-1367), distributed.
-    val combined = batches.map(SafeCast(_, target, cfg.strictCasting))
-      .reduce(_ unionByName _)
+    val (m0, combined) = evolveThenCast(t, batches, cfg, evolve = !created)
 
     disposition match {
       case Append => commitAppend(t, m0, combined, loadId, cfg)
@@ -159,6 +145,25 @@ final class GraftWriter(catalog: GraftCatalog) {
         else commitMerge(t, m0, combined, keys, strategy, loadId, cfg)
     }
     t
+  }
+
+  /** Schema evolution, then cast (destination_client.py:1341-1367): the
+    * table schema evolves to admit the batches' normalized schema (C8),
+    * then every batch is cast to the table schema (C4-C5) and the casts
+    * are unioned — `pa.concat_tables`, distributed. Returns the metadata
+    * the cast was made against. */
+  private def evolveThenCast(t: GraftTable, batches: Seq[DataFrame],
+      cfg: WriteConfig, evolve: Boolean = true): (TableMetadata, DataFrame) = {
+    if (evolve) {
+      val evo = SchemaEvolution.evolve(t.metadata.schema,
+        GraftWriter.incomingSchema(batches.head, cfg), cfg.allowColumnDrops)
+      if (evo.evolved)
+        t.commit(_.withSchema(evo.schema), cfg.maxRetries, cfg.backoffBase,
+          cfg.retryUnitMs)
+    }
+    val m = t.metadata
+    (m, batches.map(SafeCast(_, m.schema, cfg.strictCasting))
+      .reduce(_ unionByName _))
   }
 
   private def commitAppend(t: GraftTable, m: TableMetadata, df: DataFrame,
@@ -272,16 +277,8 @@ final class GraftWriter(catalog: GraftCatalog) {
             GraftWriter.sketchColumns(mNow, cfg), cfg.maxRecordsPerFile)
           if (staged.map(_.rowCount).sum > keyCount) {
             // nothing references the staged batch (nor, under MoR, the
-            // key file): drop their staging directories, Spark's sidecar
-            // files included, instead of leaving them to vacuum
-            def stageDirs(fs: Seq[DataFile], root: java.nio.file.Path) =
-              fs.map(f => java.nio.file.Paths.get(f.path))
-                .filter(_.startsWith(root))
-                .map(p => root.resolve(root.relativize(p).getName(0)))
-            (stageDirs(staged, t.dataDir) ++
-              (if (cfg.mergeOnRead)
-                stageDirs(keyStaged, t.dir.resolve("deletes"))
-              else Nil)).distinct.foreach(GraftWriter.deleteQuietly)
+            // key file): drop them instead of leaving them to vacuum
+            TableMetadata.discardStaged(t, (staged ++ keyStaged).map(_.path))
             throw new ValidationError(
               s"Upsert batch contains duplicate primary keys on (${pks.mkString(", ")})")
           }
@@ -324,7 +321,7 @@ final class GraftWriter(catalog: GraftCatalog) {
               precomputed = GraftWriter.rangesFromStats(keyStaged, pks, keySchema)
                 .map(rs => (rs, keyCount)))
           }
-        } finally keyScratch.foreach(GraftWriter.deleteQuietly)
+        } finally keyScratch.foreach(PathIO.deleteQuietly)
     }
   }
 
@@ -341,112 +338,10 @@ final class GraftWriter(catalog: GraftCatalog) {
     *
     * Outstanding MoR deletes are honored in both modes. Returns the
     * number of deleted rows. */
-  def deleteWhere(ns: String, name: String, cond: org.apache.spark.sql.Column,
+  def deleteWhere(ns: String, name: String, cond: Column,
       cfg: WriteConfig = WriteConfig(),
-      loadId: String = java.util.UUID.randomUUID().toString): Long = {
-    require(cfg.toBranch.isEmpty,
-      "predicate deletes target main state; branch deletes are not supported")
-    val t = catalog.loadTable(ns, name)
-    val m = t.metadata
-    val files = m.currentFiles
-    if (files.isEmpty) return 0L
-    val snap = m.currentSnapshot
-    // materialize row attribution BEFORE delete application: `_metadata`
-    // resolves only on the scan relation itself, and MorRead's joins
-    // would hide it
-    val scan = spark.read.schema(m.schema).parquet(files.map(_.path): _*)
-      .withColumn("__dw_path",
-        graft.catalog.MorRead.posixPath(col("_metadata.file_path")))
-      .withColumn("__dw_idx", col("_metadata.row_index"))
-    val liveRows = MorRead.applyDeletes(spark, scan, files,
-      snap.map(_.deletes).getOrElse(Nil), snap.map(_.posDeletes).getOrElse(Nil))
-
-    // one cached pass over the delete-applied scan serves BOTH the
-    // per-file attribution and (in MoR mode) the vector write
-    val matchPos = liveRows.filter(cond)
-      .select(col("__dw_path"), col("__dw_idx")).cache()
-    try {
-    val hitPaths = matchPos
-      .groupBy(col("__dw_path")).agg(count(lit(1)).as("n")).collect()
-    if (hitPaths.isEmpty) return 0L
-    val targetPaths = hitPaths.map(_.getString(0)).toSet
-    val deleted = hitPaths.map(_.getAs[Long]("n")).sum
-    // the planned positions/attribution bind to the snapshot this scan
-    // read: if a concurrent commit rewrote any target file, the plan is
-    // stale (its rows moved to a new path) — refuse instead of silently
-    // losing the delete, matching the compaction guards
-    // targetPaths came through posixPath (decoded) — canonicalize the
-    // metadata side identically, or an Iceberg-imported file whose
-    // stored path carries percent escapes would mis-compare
-    def requireTargetsLive(fresh: TableMetadata): Unit =
-      if (!targetPaths.subsetOf(
-          fresh.currentFiles.map(f => MorRead.posixPath(f.path)).toSet))
-        throw new ValidationError(
-          "deleteWhere superseded by a concurrent rewrite of a target file")
-
-    if (cfg.mergeOnRead) {
-      // matching row positions -> ONE delete-vector parquet; no rewrite
-      val dest = t.dir.resolve("deletes")
-        .resolve(s"$loadId-pos-${java.util.UUID.randomUUID().toString.take(8)}")
-      matchPos
-        .select(col("__dw_path").as("file_path"),
-          col("__dw_idx").as("row_index"))
-        .coalesce(1).write.parquet(dest.toString)
-      val posFiles = graft.catalog.PathIO.walk(dest)
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .map(p => PosDeleteFile(p.toString, deleted))
-      // the planned positions (and the returned count) bind to the
-      // planning snapshot's delete set; a concurrent MoR delete would
-      // make both stale — refuse, same rule as updateWhere
-      val plannedDeletes = (snap.map(_.deletes).getOrElse(Nil).map(_.path) ++
-        snap.map(_.posDeletes).getOrElse(Nil).map(_.path)).toSet
-      t.commit({ fresh =>
-        requireTargetsLive(fresh)
-        if ((fresh.currentSnapshot.map(_.deletes).getOrElse(Nil).map(_.path) ++
-            fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil).map(_.path))
-            .toSet != plannedDeletes)
-          throw new ValidationError(
-            "deleteWhere superseded by a concurrent merge-on-read delete")
-        fresh.withSnapshotDelta("delete", Some(loadId), Nil,
-          Set.empty, newPosDeletes = posFiles)
-      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
-      Maintenance.autoApplyIfNeeded(t, cfg.retryUnitMs)
-      Maintenance.autoCompactIfNeeded(t, cfg.retryUnitMs)
-      deleted
-    } else {
-      // copy-on-write: restage ONLY the files with matching rows. The
-      // closure recomputes against post-rebase state, so the returned
-      // count is recomputed there too (a concurrent MoR delete may have
-      // already removed some planned matches).
-      var committedCount = deleted
-      t.commit({ fresh =>
-        requireTargetsLive(fresh)
-        val affected = fresh.currentFiles.filter(f => targetPaths.contains(f.path))
-        val affectedDf = spark.read.schema(fresh.schema)
-          .parquet(affected.map(_.path): _*)
-        // persisted: the matched count and the staged rewrite both scan
-        // it — one read of the affected files, not two
-        val live = MorRead.applyDeletes(spark, affectedDf, affected,
-            fresh.currentSnapshot.map(_.deletes).getOrElse(Nil),
-            fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil))
-          .persist()
-        try {
-          committedCount = live.filter(coalesce(cond, lit(false))).count()
-          // three-valued logic: a NULL condition must KEEP the row
-          // (it did not match the delete predicate) — bare !cond would
-          // silently drop it
-          val kept = live.filter(!coalesce(cond, lit(false)))
-          val staged = Stager.stage(kept, t.dataDir, s"$loadId-dw",
-            fresh.partitionSpec,
-            bloomColumns = GraftWriter.bloomColumns(fresh, cfg),
-            sketchColumns = GraftWriter.sketchColumns(fresh, cfg))
-          fresh.withSnapshotDelta("delete", Some(loadId), staged, targetPaths)
-        } finally live.unpersist()
-      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
-      committedCount
-    }
-    } finally matchPos.unpersist()
-  }
+      loadId: String = java.util.UUID.randomUUID().toString): Long =
+    rewriteWhere(ns, name, cond, GraftWriter.DeleteRows, cfg, loadId)
 
   /** Filter overwrite (Iceberg's overwrite-by-filter; reached from SQL
     * `INSERT INTO ... REPLACE WHERE`, `INSERT OVERWRITE ... PARTITION
@@ -458,100 +353,17 @@ final class GraftWriter(catalog: GraftCatalog) {
     * table rewrites one partition, not the table. Outstanding
     * merge-on-read deletes over the affected files are applied
     * physically in the restage. */
-  def overwriteWhere(ns: String, name: String, cond: org.apache.spark.sql.Column,
+  def overwriteWhere(ns: String, name: String, cond: Column,
       batch: DataFrame, cfg: WriteConfig = WriteConfig(),
       loadId: String = java.util.UUID.randomUUID().toString): Unit =
-    overwriteWhereImpl(ns, name, cond, batch, cfg, loadId, () => ())
+    overwriteWhereImpl(ns, name, cond, batch, cfg, loadId)
 
-  /** [[overwriteWhere]] with a post-planning seam: `afterPlanning` runs
-    * after the target-file attribution and before the commit — the
-    * concurrency specs use it to land a conflicting commit exactly
-    * inside the planning/commit window (production calls pass a no-op). */
+  /** [[overwriteWhere]] through the planner's `afterPlanning` seam. */
   private[graft] def overwriteWhereImpl(ns: String, name: String,
-      cond: org.apache.spark.sql.Column,
-      batch: DataFrame, cfg: WriteConfig,
-      loadId: String, afterPlanning: () => Unit): Unit = {
-    require(cfg.toBranch.isEmpty,
-      "filter overwrite targets main state; branch overwrites are not supported")
-    val t = catalog.loadTable(ns, name)
-    // same evolution-then-cast order as writeTable (C8/C5)
-    val incomingSchema = org.apache.spark.sql.types.StructType(
-      TypeLattice.normalize(batch.schema).fields.map(f =>
-        f.copy(nullable = !cfg.requiredColumns.contains(f.name))))
-    val evo = SchemaEvolution.evolve(t.metadata.schema, incomingSchema,
-      cfg.allowColumnDrops)
-    if (evo.evolved)
-      t.commit(_.withSchema(evo.schema), cfg.maxRetries, cfg.backoffBase,
-        cfg.retryUnitMs)
-    val m = t.metadata
-    val cast = SafeCast(batch, m.schema, cfg.strictCasting)
-    val files = m.currentFiles
-    val snap = m.currentSnapshot
-    // row attribution before delete application (deleteWhere's planning)
-    val targetPaths: Set[String] =
-      if (files.isEmpty) Set.empty
-      else {
-        val scan = spark.read.schema(m.schema).parquet(files.map(_.path): _*)
-          .withColumn("__ow_path",
-            graft.catalog.MorRead.posixPath(col("_metadata.file_path")))
-        val live = MorRead.applyDeletes(spark, scan, files,
-          snap.map(_.deletes).getOrElse(Nil),
-          snap.map(_.posDeletes).getOrElse(Nil))
-        live.filter(cond).select(col("__ow_path")).distinct()
-          .collect().map(_.getString(0)).toSet
-      }
-    val plannedPaths = files.map(_.path).toSet
-    afterPlanning()
-    t.commit({ fresh =>
-      if (!targetPaths.subsetOf(fresh.currentFiles.map(_.path).toSet))
-        throw new ValidationError(
-          "overwriteWhere superseded by a concurrent rewrite of a target file")
-      // Serializable overwrite-by-filter (Iceberg's validate-added-files
-      // rule): a concurrent commit that landed files AFTER planning may
-      // hold rows matching `cond`; committing without replacing them
-      // would leave a state no serial order explains (the overwrite
-      // snapshot is the LATER one, so those rows must be replaced).
-      // Re-attribute just the newcomers — exact, no stats reasoning, and
-      // free on the conflict-less first attempt (newcomers is empty).
-      val newcomers = fresh.currentFiles
-        .filterNot(f => plannedPaths.contains(f.path))
-      val extraTargets: Set[String] =
-        if (newcomers.isEmpty) Set.empty
-        else {
-          val scan = spark.read.schema(fresh.schema)
-            .parquet(newcomers.map(_.path): _*)
-            .withColumn("__ow_path",
-              graft.catalog.MorRead.posixPath(col("_metadata.file_path")))
-          val live = MorRead.applyDeletes(spark, scan, newcomers,
-            fresh.currentSnapshot.map(_.deletes).getOrElse(Nil),
-            fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil))
-          live.filter(cond).select(col("__ow_path")).distinct()
-            .collect().map(_.getString(0)).toSet
-        }
-      val allTargets = targetPaths ++ extraTargets
-      val newStaged = Stager.stage(cast, t.dataDir, loadId,
-        fresh.partitionSpec, bloomColumns = GraftWriter.bloomColumns(fresh, cfg),
-            sketchColumns = GraftWriter.sketchColumns(fresh, cfg))
-      if (allTargets.isEmpty)
-        fresh.withSnapshotDelta("overwrite", Some(loadId), newStaged, Set.empty)
-      else {
-        val affected = fresh.currentFiles.filter(f => allTargets.contains(f.path))
-        val affectedDf = spark.read.schema(fresh.schema)
-          .parquet(affected.map(_.path): _*)
-        val live = MorRead.applyDeletes(spark, affectedDf, affected,
-          fresh.currentSnapshot.map(_.deletes).getOrElse(Nil),
-          fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil))
-        // NULL condition keeps the row (it did not match the overwrite
-        // predicate) — same three-valued rule as deleteWhere
-        val kept = live.filter(!coalesce(cond, lit(false)))
-        val keptStaged = Stager.stage(kept, t.dataDir, s"$loadId-ow",
-          fresh.partitionSpec,
-          bloomColumns = GraftWriter.bloomColumns(fresh, cfg),
-            sketchColumns = GraftWriter.sketchColumns(fresh, cfg))
-        fresh.withSnapshotDelta("overwrite", Some(loadId),
-          keptStaged ++ newStaged, allTargets)
-      }
-    }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
+      cond: Column, batch: DataFrame, cfg: WriteConfig, loadId: String,
+      afterPlanning: () => Unit = () => ()): Unit = {
+    rewriteWhere(ns, name, cond, OverwriteRows(batch), cfg,
+      loadId, afterPlanning)
     ()
   }
 
@@ -578,16 +390,7 @@ final class GraftWriter(catalog: GraftCatalog) {
       writeTable(ns, name, Seq(batch), Replace, cfg, loadId)
       return
     }
-    // evolution-then-cast, same order as writeTable
-    val incomingSchema = org.apache.spark.sql.types.StructType(
-      TypeLattice.normalize(batch.schema).fields.map(f =>
-        f.copy(nullable = !cfg.requiredColumns.contains(f.name))))
-    val evo = SchemaEvolution.evolve(t.metadata.schema, incomingSchema,
-      cfg.allowColumnDrops)
-    if (evo.evolved)
-      t.commit(_.withSchema(evo.schema), cfg.maxRetries, cfg.backoffBase,
-        cfg.retryUnitMs)
-    val cast = SafeCast(batch, t.metadata.schema, cfg.strictCasting)
+    val (_, cast) = evolveThenCast(t, Seq(batch), cfg)
     def tupleOf(f: DataFile, spec: Seq[PartitionFieldSpec]): Option[Seq[String]] = {
       val vals = spec.map(s => f.stats.get(s.name).flatMap(st =>
         if (st.min == st.max) st.min else None))
@@ -657,115 +460,188 @@ final class GraftWriter(catalog: GraftCatalog) {
     *
     * SET expressions are cast to the column's committed type. Returns
     * the number of updated rows. */
-  def updateWhere(ns: String, name: String, cond: org.apache.spark.sql.Column,
-      set: Map[String, org.apache.spark.sql.Column],
+  def updateWhere(ns: String, name: String, cond: Column,
+      set: Map[String, Column],
       cfg: WriteConfig = WriteConfig(),
-      loadId: String = java.util.UUID.randomUUID().toString): Long = {
+      loadId: String = java.util.UUID.randomUUID().toString): Long =
+    rewriteWhere(ns, name, cond, UpdateRows(set), cfg, loadId)
+
+  /** The planner behind [[deleteWhere]], [[updateWhere]] and
+    * [[overwriteWhere]]:
+    *
+    *  1. attribution: one scan of the live files (outstanding MoR
+    *     deletes applied) counts the rows matching `cond` per file;
+    *  2. merge-on-read (delete, update): stage the update's SET rows
+    *     and ONE positional delete vector over the matched positions,
+    *     then commit while the targets are still live and the delete
+    *     set is unchanged — the positions and rows bind to both;
+    *  3. copy-on-write: inside the commit, restage the targets against
+    *     the fresh snapshot with the rewrite's row transform (the
+    *     restage re-applies the fresh deletes, so only the targets must
+    *     still be live); a filter overwrite also replaces matching rows
+    *     of files committed since planning, and adds its batch.
+    *
+    * `afterPlanning` runs between planning and commit — a seam for
+    * specs that land a concurrent commit inside that window. Returns the matched row count (for
+    * copy-on-write, as recounted against the committed state). */
+  private[graft] def rewriteWhere(ns: String, name: String, cond: Column,
+      rewrite: GraftWriter.Rewrite, cfg: WriteConfig, loadId: String,
+      afterPlanning: () => Unit = () => ()): Long = {
     require(cfg.toBranch.isEmpty,
-      "predicate updates target main state; branch updates are not supported")
+      s"${rewrite.name} targets main state; branch writes are not supported")
     val t = catalog.loadTable(ns, name)
-    val m = t.metadata
-    val files = m.currentFiles
-    if (files.isEmpty) return 0L
-    set.keys.foreach(k => require(m.schema.fieldNames.contains(k),
-      s"SET column $k not in table schema"))
-    val snap = m.currentSnapshot
-    val scan = spark.read.schema(m.schema).parquet(files.map(_.path): _*)
-      .withColumn("__dw_path",
-        graft.catalog.MorRead.posixPath(col("_metadata.file_path")))
-      .withColumn("__dw_idx", col("_metadata.row_index"))
-    val liveRows = MorRead.applyDeletes(spark, scan, files,
-      snap.map(_.deletes).getOrElse(Nil), snap.map(_.posDeletes).getOrElse(Nil))
-
-    val hitPaths = liveRows.filter(cond)
-      .groupBy(col("__dw_path")).agg(count(lit(1)).as("n")).collect()
-    if (hitPaths.isEmpty) return 0L
-    val targetPaths = hitPaths.map(_.getString(0)).toSet
-    val updated = hitPaths.map(_.getAs[Long]("n")).sum
-    // same canonicalization symmetry note as deleteWhere's guard
-    def requireTargetsLive(fresh: TableMetadata): Unit =
-      if (!targetPaths.subsetOf(
-          fresh.currentFiles.map(f => MorRead.posixPath(f.path)).toSet))
-        throw new ValidationError(
-          "updateWhere superseded by a concurrent rewrite of a target file")
-    def applySet(schema: org.apache.spark.sql.types.StructType,
-        onlyWhen: Option[org.apache.spark.sql.Column]) =
-      schema.fields.toSeq.map { f =>
-        set.get(f.name) match {
-          case Some(e) =>
-            val cast = e.cast(f.dataType)
-            onlyWhen.fold(cast)(c => when(c, cast).otherwise(col(f.name)))
-              .as(f.name)
-          case None => col(f.name)
-        }
-      }
-
-    if (cfg.mergeOnRead) {
-      // updated rows -> new data file; old positions -> delete vector.
-      // Cache the matches: they feed BOTH the staged write and the
-      // vector write, and recomputing means re-running the whole
-      // delete-applied scan.
-      val matches = liveRows.filter(cond).cache()
-      try {
-        val staged = Stager.stage(
-          matches.select(applySet(m.schema, None): _*),
-          t.dataDir, s"$loadId-up", m.partitionSpec,
-          bloomColumns = GraftWriter.bloomColumns(m, cfg),
-      sketchColumns = GraftWriter.sketchColumns(m, cfg))
-        val dest = t.dir.resolve("deletes")
-          .resolve(s"$loadId-pos-${java.util.UUID.randomUUID().toString.take(8)}")
-        matches.select(col("__dw_path").as("file_path"),
-            col("__dw_idx").as("row_index"))
-          .coalesce(1).write.parquet(dest.toString)
-        val posFiles = graft.catalog.PathIO.walk(dest)
-          .filter(_.getFileName.toString.endsWith(".parquet"))
-          .map(p => PosDeleteFile(p.toString, updated))
-        // the staged rows were computed against THIS delete set; a
-        // concurrent MoR delete would no longer fence them (they commit
-        // with a newer sequence) — refuse the stale restage, same rule
-        // as compaction
-        val plannedDeletes = (snap.map(_.deletes).getOrElse(Nil).map(_.path) ++
-          snap.map(_.posDeletes).getOrElse(Nil).map(_.path)).toSet
-        t.commit({ fresh =>
-          requireTargetsLive(fresh)
-          if ((fresh.currentSnapshot.map(_.deletes).getOrElse(Nil).map(_.path) ++
-              fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil).map(_.path))
-              .toSet != plannedDeletes)
-            throw new ValidationError(
-              "updateWhere superseded by a concurrent merge-on-read delete")
-          fresh.withSnapshotDelta("update", Some(loadId), staged,
-            Set.empty, newPosDeletes = posFiles)
-        }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
-        Maintenance.autoApplyIfNeeded(t, cfg.retryUnitMs)
-      Maintenance.autoCompactIfNeeded(t, cfg.retryUnitMs)
-      } finally matches.unpersist()
-      updated
-    } else {
-      // copy-on-write: in-place when(cond, set) rewrite of affected
-      // files. The count is recomputed inside the closure so it reflects
-      // the committed (post-rebase) state, not the planning snapshot.
-      var committedCount = updated
-      t.commit({ fresh =>
-        requireTargetsLive(fresh)
-        val affected = fresh.currentFiles.filter(f => targetPaths.contains(f.path))
-        val affectedDf = spark.read.schema(fresh.schema)
-          .parquet(affected.map(_.path): _*)
-        val live = MorRead.applyDeletes(spark, affectedDf, affected,
-            fresh.currentSnapshot.map(_.deletes).getOrElse(Nil),
-            fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil))
-          .persist()
-        try {
-          committedCount = live.filter(coalesce(cond, lit(false))).count()
-          val rewritten = live.select(applySet(fresh.schema, Some(cond)): _*)
-          val staged = Stager.stage(rewritten, t.dataDir, s"$loadId-up",
-            fresh.partitionSpec,
-            bloomColumns = GraftWriter.bloomColumns(fresh, cfg),
-            sketchColumns = GraftWriter.sketchColumns(fresh, cfg))
-          fresh.withSnapshotDelta("update", Some(loadId), staged, targetPaths)
-        } finally live.unpersist()
-      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
-      committedCount
+    val (m, batch) = rewrite match {
+      case OverwriteRows(b) =>
+        val (m, cast) = evolveThenCast(t, Seq(b), cfg)
+        (m, Some(cast))
+      case _ => (t.metadata, None)
     }
+    val files = m.currentFiles
+    if (files.isEmpty && batch.isEmpty) return 0L
+    rewrite match {
+      case UpdateRows(set) => set.keys.foreach(k => require(
+        m.schema.fieldNames.contains(k), s"SET column $k not in table schema"))
+      case _ =>
+    }
+    // a filter overwrite has no merge-on-read form
+    val mor = cfg.mergeOnRead && batch.isEmpty
+    // merge-on-read writes its vector (and update its new rows) from the
+    // matches too: cache them, one scan serves every use
+    val matches = Option.when(files.nonEmpty) {
+      val rows = matchingRows(m, files, cond)
+      if (!mor) rows
+      else if (rewrite.isInstanceOf[UpdateRows]) rows.cache()
+      else rows.select(col(PathCol), col(IdxCol)).cache()
+    }
+    try {
+      val hits = matches.fold(Seq.empty[(DataFile, Long)])(
+        matchesPerFile(_, files, loadId))
+      if (hits.isEmpty && batch.isEmpty) return 0L
+      val targets = hits.map(_._1)
+      val planned = targets.map(_.path).toSet
+      val matched = hits.map(_._2).sum
+      if (mor) {
+        val staged = rewrite match {
+          case UpdateRows(set) => Stager.stage(
+            matches.get.select(GraftWriter.setColumns(set, m.schema, None): _*),
+            t.dataDir, s"$loadId-${rewrite.suffix}", m.partitionSpec,
+            bloomColumns = GraftWriter.bloomColumns(m, cfg),
+            sketchColumns = GraftWriter.sketchColumns(m, cfg))
+          case _ => Nil
+        }
+        val vector = writeVector(t, matches.get, loadId, matched)
+        val plannedDeletes = m.currentDeletePaths
+        afterPlanning()
+        TableMetadata.discardOnRefusal(t,
+            staged.map(_.path) ++ vector.map(_.path)) {
+          t.commit({ fresh =>
+            fresh.requireNotSuperseded(rewrite.name, planned,
+              identical = false, Some(plannedDeletes))
+            fresh.withSnapshotDelta(rewrite.op, Some(loadId), staged,
+              Set.empty, newPosDeletes = vector)
+          }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
+        }
+        autoMaintain(t, cfg)
+        matched
+      } else {
+        val plannedFiles = files.map(_.path).toSet
+        afterPlanning()
+        var committed = matched
+        t.commit({ fresh =>
+          fresh.requireNotSuperseded(rewrite.name, planned, identical = false)
+          // Serializable overwrite-by-filter (Iceberg's validate-added-
+          // files rule): files committed AFTER planning may hold rows
+          // matching `cond`, and the overwrite snapshot is the LATER one,
+          // so those rows must be replaced too. Re-attribute just the
+          // newcomers — exact, and free when nothing landed.
+          val newcomers =
+            if (batch.isEmpty) Nil
+            else fresh.currentFiles.filterNot(f => plannedFiles.contains(f.path))
+          val affected = targets ++ (if (newcomers.isEmpty) Nil
+            else matchesPerFile(matchingRows(fresh, newcomers, cond),
+              newcomers, loadId).map(_._1))
+          val added = batch.toSeq.flatMap(Stager.stage(_, t.dataDir, loadId,
+            fresh.partitionSpec, bloomColumns = GraftWriter.bloomColumns(fresh, cfg),
+            sketchColumns = GraftWriter.sketchColumns(fresh, cfg)))
+          val (n, restaged) = restage(t, fresh, affected, cond, rewrite, loadId, cfg)
+          committed = n
+          fresh.withSnapshotDelta(rewrite.op, Some(loadId), restaged ++ added,
+            affected.map(_.path).toSet)
+        }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
+        committed
+      }
+    } finally matches.foreach(_.unpersist())
+  }
+
+  /** The live rows of `files` under `m` (its outstanding MoR deletes
+    * applied) that match `cond`, tagged with their canonical origin path
+    * and row index. The tags are taken on the scan relation itself:
+    * `_metadata` resolves only there, and MorRead's joins would hide it. */
+  private def matchingRows(m: TableMetadata, files: Seq[DataFile],
+      cond: Column): DataFrame = {
+    val scan = spark.read.schema(m.schema).parquet(files.map(_.path): _*)
+      .withColumn(PathCol, MorRead.posixPath(col("_metadata.file_path")))
+      .withColumn(IdxCol, col("_metadata.row_index"))
+    MorRead.applyDeletes(spark, scan, files, m.currentDeletes,
+      m.currentPosDeletes).filter(cond)
+  }
+
+  /** Row attribution: the files among `files` holding `matches`, with
+    * their match counts. The canonical paths the scan reports map back to
+    * the files once, so guards, restages and removals all use the stored
+    * paths. */
+  private def matchesPerFile(matches: DataFrame, files: Seq[DataFile],
+      loadId: String): Seq[(DataFile, Long)] = {
+    val counts = graft.JobDesc(spark, s"graft.dml:attribute $loadId") {
+      matches.groupBy(col(PathCol)).agg(count(lit(1))).collect()
+    }.map(r => r.getString(0) -> r.getLong(1)).toMap
+    files.flatMap(f => counts.get(MorRead.posixPath(f.path)).map(f -> _))
+  }
+
+  /** ONE positional delete vector over the matched rows' positions,
+    * staged under `deletes/<loadId>-pos-<uuid8>`. */
+  private def writeVector(t: GraftTable, matches: DataFrame, loadId: String,
+      rows: Long): Seq[PosDeleteFile] = {
+    val dest = t.dir.resolve("deletes")
+      .resolve(s"$loadId-pos-${java.util.UUID.randomUUID().toString.take(8)}")
+    graft.JobDesc(spark, s"graft.dml:vector $loadId") {
+      matches.select(col(PathCol).as("file_path"),
+          col(IdxCol).as("row_index"))
+        .coalesce(1).write.parquet(dest.toString)
+    }
+    PathIO.walk(dest).filter(_.getFileName.toString.endsWith(".parquet"))
+      .map(p => PosDeleteFile(p.toString, rows))
+  }
+
+  /** Copy-on-write restage of `affected` against `fresh`: its outstanding
+    * MoR deletes are applied (the restaged files get a NEW data sequence,
+    * out of their reach), then the rewrite's row transform. Returns the
+    * rows matching `cond` (when the rewrite counts them) and the staged
+    * files. */
+  private def restage(t: GraftTable, fresh: TableMetadata,
+      affected: Seq[DataFile], cond: Column, rewrite: GraftWriter.Rewrite,
+      loadId: String, cfg: WriteConfig): (Long, Seq[DataFile]) = {
+    if (affected.isEmpty) return (0L, Nil)
+    val live = MorRead.applyDeletes(spark,
+      spark.read.schema(fresh.schema).parquet(affected.map(_.path): _*),
+      affected, fresh.currentDeletes, fresh.currentPosDeletes)
+    // persisted when counted: the count and the restage share one read
+    if (rewrite.counts) live.persist()
+    try {
+      val n = if (rewrite.counts) live.filter(coalesce(cond, lit(false))).count()
+        else 0L
+      val rows = rewrite match {
+        case UpdateRows(set) =>
+          live.select(GraftWriter.setColumns(set, fresh.schema, Some(cond)): _*)
+        // three-valued logic: a NULL condition must KEEP the row (it did
+        // not match) — bare !cond would silently drop it
+        case _ => live.filter(!coalesce(cond, lit(false)))
+      }
+      (n, Stager.stage(rows, t.dataDir, s"$loadId-${rewrite.suffix}",
+        fresh.partitionSpec,
+        bloomColumns = GraftWriter.bloomColumns(fresh, cfg),
+        sketchColumns = GraftWriter.sketchColumns(fresh, cfg)))
+    } finally live.unpersist()
   }
 
   /** Merge-on-read commit: stage the batch's delete-key set as ONE tiny
@@ -793,17 +669,25 @@ final class GraftWriter(catalog: GraftCatalog) {
   private def morCommitStaged(t: GraftTable, delFiles: Seq[DeleteFile],
       stagedNew: Seq[DataFile], op: String, loadId: String,
       cfg: WriteConfig): Unit = {
-    t.commit(fresh => fresh.withSnapshotDelta(op, Some(loadId), stagedNew,
-      Set.empty, newDeletes = delFiles, branch = cfg.toBranch),
+    val next = t.commit(fresh => fresh.withSnapshotDelta(op, Some(loadId),
+      stagedNew, Set.empty, newDeletes = delFiles, branch = cfg.toBranch),
       cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
-    // self-maintenance applies to the main line only: a branch commit's
-    // backlog is invisible to main readers until publish, and publish
-    // routes through a main-line commit that re-evaluates the signal
+    // a delete into an empty parent has no victims and commits without
+    // its key file: nothing references it, so drop it
+    val kept = next.snapshots.last.deletes.map(_.path).toSet
+    TableMetadata.discardStaged(t, delFiles.map(_.path).filterNot(kept))
+    autoMaintain(t, cfg)
+  }
+
+  /** Self-maintenance after a merge-on-read commit, on the main line
+    * only: a branch commit's backlog is invisible to main readers until
+    * publish, and publish routes through a main-line commit that
+    * re-evaluates the signal. */
+  private def autoMaintain(t: GraftTable, cfg: WriteConfig): Unit =
     if (cfg.toBranch.isEmpty) {
       Maintenance.autoApplyIfNeeded(t, cfg.retryUnitMs)
       Maintenance.autoCompactIfNeeded(t, cfg.retryUnitMs)
     }
-  }
 
   /** The heart of every merge variant: rewrite the key-affected subset of
     * the current files without the matching rows (left-anti join), carry
@@ -908,6 +792,48 @@ final class GraftWriter(catalog: GraftCatalog) {
 }
 
 object GraftWriter {
+  /** What a predicate rewrite ([[GraftWriter.rewriteWhere]]) does to the
+    * rows matching its condition. `op` names its snapshots, `suffix` its
+    * restaged files' load id; `counts` says whether it returns the
+    * matched row count. */
+  private[graft] sealed abstract class Rewrite(val op: String,
+      val suffix: String, val counts: Boolean = true) {
+    def name: String = s"${op}Where"
+  }
+  /** Drop the matching rows. */
+  private[graft] case object DeleteRows extends Rewrite("delete", "dw")
+  /** Apply `set` to the matching rows. */
+  private[graft] final case class UpdateRows(set: Map[String, Column])
+    extends Rewrite("update", "up")
+  /** Drop the matching rows and add `batch`. */
+  private[graft] final case class OverwriteRows(batch: DataFrame)
+    extends Rewrite("overwrite", "ow", counts = false)
+
+  /** Origin tags [[GraftWriter.rewriteWhere]]'s attribution scan adds. */
+  private val PathCol = "__dw_path"
+  private val IdxCol = "__dw_idx"
+
+  /** `SET` as a projection of `schema`: each set column cast to its
+    * committed type, applied only where `onlyWhen` holds (everywhere
+    * when None). */
+  private def setColumns(set: Map[String, Column], schema: StructType,
+      onlyWhen: Option[Column]): Seq[Column] =
+    schema.fields.toSeq.map { f =>
+      set.get(f.name) match {
+        case Some(e) =>
+          val cast = e.cast(f.dataType)
+          onlyWhen.fold(cast)(c => when(c, cast).otherwise(col(f.name)))
+            .as(f.name)
+        case None => col(f.name)
+      }
+    }
+
+  /** A batch's schema as the table would declare it: normalized, and
+    * nullable except for the configured required columns. */
+  private def incomingSchema(batch: DataFrame, cfg: WriteConfig): StructType =
+    StructType(TypeLattice.normalize(batch.schema).fields.map(f =>
+      f.copy(nullable = !cfg.requiredColumns.contains(f.name))))
+
   /** Key-batch size above which the merge path skips the driver-side
     * bloom probe (probe cost is |files| x |keys| bit tests; the payoff —
     * avoiding needless file rewrites — concentrates in trickle merges). */
@@ -958,16 +884,6 @@ object GraftWriter {
       }
     })
   }
-
-  /** Best-effort recursive delete of a scratch directory. */
-  private[write] def deleteQuietly(p: java.nio.file.Path): Unit =
-    try {
-      val s = java.nio.file.Files.walk(p)
-      try s.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => try { java.nio.file.Files.deleteIfExists(f); () }
-          catch { case _: Throwable => () })
-      finally s.close()
-    } catch { case _: Throwable => () }
 
   /** Upsert batches at or below this many rows (== distinct keys) stage
     * into one file regardless of clustering, so the range-sampling pass

@@ -2,7 +2,7 @@ package graft.write
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
-import graft.catalog.{DataFile, GraftTable}
+import graft.catalog.{GraftTable, TableMetadata}
 import scala.jdk.CollectionConverters._
 
 /** Table maintenance: small-file compaction, snapshot expiry, orphan
@@ -203,8 +203,7 @@ object Maintenance {
     // them
     val applied = graft.catalog.MorRead.applyDeletes(t.spark,
       t.spark.read.schema(m.schema).parquet(small.map(_.path): _*),
-      small, m.currentSnapshot.map(_.deletes).getOrElse(Nil),
-      m.currentSnapshot.map(_.posDeletes).getOrElse(Nil))
+      small, m.currentDeletes, m.currentPosDeletes)
     graft.JobDesc(t.spark, s"graft.maint:compact ${m.identifier}") {
     // a declared write sort-order survives compaction: re-cluster the
     // restaged rows instead of blindly coalescing, so the disjoint
@@ -224,25 +223,16 @@ object Maintenance {
       bloomColumns = GraftWriter.tableBloomColumns(m),
       sketchColumns = GraftWriter.tableSketchColumns(m))
     val smallPaths = small.map(_.path).toSet
-    val plannedDeletes = (m.currentSnapshot.map(_.deletes).getOrElse(Nil)
-      .map(_.path) ++ m.currentSnapshot.map(_.posDeletes).getOrElse(Nil)
-      .map(_.path)).toSet
-    t.commit({ fresh =>
-      // rebase-safe only if the small set is still current; if a
-      // concurrent writer rewrote any of them, drop this compaction
-      val cur = fresh.currentFiles.map(_.path).toSet
-      if (!smallPaths.subsetOf(cur))
-        throw new graft.catalog.ValidationError("compaction superseded by concurrent commit")
-      // restaged files get a NEW data sequence and new PATHS, so a
-      // delete (equality or positional) that arrived after planning
-      // would silently skip them — refuse the stale restage instead
-      if ((fresh.currentSnapshot.map(_.deletes).getOrElse(Nil).map(_.path) ++
-          fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil).map(_.path))
-          .toSet != plannedDeletes)
-        throw new graft.catalog.ValidationError(
-          "compaction superseded by concurrent merge-on-read delete")
-      fresh.withSnapshotDelta("compact", None, staged, smallPaths)
-    }, unitMs = retryUnitMs)
+    val plannedDeletes = m.currentDeletePaths
+    // rebase-safe only while the small set is live and no delete arrived
+    // since planning (the restage applied exactly the planned ones)
+    TableMetadata.discardOnRefusal(t, staged.map(_.path)) {
+      t.commit({ fresh =>
+        fresh.requireNotSuperseded("compaction", smallPaths,
+          identical = false, Some(plannedDeletes))
+        fresh.withSnapshotDelta("compact", None, staged, smallPaths)
+      }, unitMs = retryUnitMs)
+    }
     true
     }
   }
@@ -266,8 +256,8 @@ object Maintenance {
 
   def applyDeletes(t: GraftTable, retryUnitMs: Long = 1000L): Boolean = {
     val m = t.metadata
-    val deletes = m.currentSnapshot.map(_.deletes).getOrElse(Nil)
-    val posDeletes = m.currentSnapshot.map(_.posDeletes).getOrElse(Nil)
+    val deletes = m.currentDeletes
+    val posDeletes = m.currentPosDeletes
     if (deletes.isEmpty && posDeletes.isEmpty) return false
     graft.JobDesc(t.spark, s"graft.maint:apply-deletes ${m.identifier}") {
     // a file needs rewriting if an equality delete could fence it OR a
@@ -296,22 +286,17 @@ object Maintenance {
           sketchColumns = GraftWriter.tableSketchColumns(m))
       }
     val priorPaths = affected.map(_.path).toSet
-    val plannedDeletes = (deletes.map(_.path) ++ posDeletes.map(_.path)).toSet
-    t.commit({ fresh =>
-      val cur = fresh.currentFiles.map(_.path).toSet
-      if (!priorPaths.subsetOf(cur))
-        throw new graft.catalog.ValidationError(
-          "apply-deletes superseded by concurrent commit")
-      // clearDeletes wipes the WHOLE delete list — refuse if a delete
-      // file this pass did not apply arrived concurrently
-      if ((fresh.currentSnapshot.map(_.deletes).getOrElse(Nil).map(_.path) ++
-          fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil).map(_.path))
-          .toSet != plannedDeletes)
-        throw new graft.catalog.ValidationError(
-          "apply-deletes superseded by concurrent merge-on-read delete")
-      fresh.withSnapshotDelta("apply-deletes", None, staged, priorPaths,
-        clearDeletes = true)
-    }, unitMs = retryUnitMs)
+    val plannedDeletes = m.currentDeletePaths
+    // clearDeletes wipes the WHOLE delete list — refuse if a delete file
+    // this pass did not apply arrived concurrently
+    TableMetadata.discardOnRefusal(t, staged.map(_.path)) {
+      t.commit({ fresh =>
+        fresh.requireNotSuperseded("apply-deletes", priorPaths,
+          identical = false, Some(plannedDeletes))
+        fresh.withSnapshotDelta("apply-deletes", None, staged, priorPaths,
+          clearDeletes = true)
+      }, unitMs = retryUnitMs)
+    }
     true
     }
   }
@@ -395,24 +380,18 @@ object Maintenance {
       sketchColumns = GraftWriter.tableSketchColumns(m),
       preshaped = true)
     val priorPaths = files.map(_.path).toSet
-    val plannedDeletes = (m.currentSnapshot.map(_.deletes).getOrElse(Nil)
-      .map(_.path) ++ m.currentSnapshot.map(_.posDeletes).getOrElse(Nil)
-      .map(_.path)).toSet
-    t.commit({ fresh =>
-      val cur = fresh.currentFiles.map(_.path).toSet
-      if (priorPaths != cur)
-        throw new graft.catalog.ValidationError("zorder superseded by concurrent commit")
-      // the whole-table restage applied the deletes t.read() saw at
-      // planning; refuse if a newer MoR delete arrived (its victims were
-      // copied into new-sequence files), and clear the applied ones
-      if ((fresh.currentSnapshot.map(_.deletes).getOrElse(Nil).map(_.path) ++
-          fresh.currentSnapshot.map(_.posDeletes).getOrElse(Nil).map(_.path))
-          .toSet != plannedDeletes)
-        throw new graft.catalog.ValidationError(
-          "zorder superseded by concurrent merge-on-read delete")
-      fresh.withSnapshotDelta("zorder", None, staged, priorPaths,
-        clearDeletes = true)
-    }, unitMs = retryUnitMs)
+    val plannedDeletes = m.currentDeletePaths
+    // the whole-table restage read every live file with the deletes
+    // t.read() saw at planning: refuse if any file or delete arrived
+    // since, and clear the applied deletes
+    TableMetadata.discardOnRefusal(t, staged.map(_.path)) {
+      t.commit({ fresh =>
+        fresh.requireNotSuperseded("zorder", priorPaths, identical = true,
+          Some(plannedDeletes))
+        fresh.withSnapshotDelta("zorder", None, staged, priorPaths,
+          clearDeletes = true)
+      }, unitMs = retryUnitMs)
+    }
     true
   }
 
@@ -547,6 +526,19 @@ object Maintenance {
         Paths.get(d.path).toAbsolutePath.toString)) ++
       m.snapshots.flatMap(_.posDeletes.map(d =>
         Paths.get(d.path).toAbsolutePath.toString))
+    // Spark's sidecars live as long as what they describe: a `_SUCCESS`
+    // while its directory holds a referenced file, a `.<name>.crc` while
+    // `<name>` is live
+    val referencedDirs = referenced.flatMap(p =>
+      Iterator.iterate(Paths.get(p).getParent)(_.getParent)
+        .takeWhile(_ != null).map(_.toString))
+    def live(p: Path): Boolean = {
+      val name = p.getFileName.toString
+      referenced.contains(p.toString) ||
+        (name == "_SUCCESS" && referencedDirs.contains(p.getParent.toString)) ||
+        (name.startsWith(".") && name.endsWith(".crc") &&
+          live(p.resolveSibling(name.stripPrefix(".").stripSuffix(".crc"))))
+    }
     val cutoff = System.currentTimeMillis() - minAgeMs
     // MoR delete files stage under dir/deletes — same orphan rules
     val deletesDir = t.dir.resolve("deletes")
@@ -556,8 +548,9 @@ object Maintenance {
       graft.catalog.PathIO.walk(root)
         .filter(p => Files.isRegularFile(p))
         .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .map(_.toAbsolutePath.toString)
-        .filterNot(referenced.contains))
+        .map(_.toAbsolutePath)
+        .filterNot(live)
+        .map(_.toString))
     orphans.foreach(p => Files.deleteIfExists(Paths.get(p)))
     // manifests left by failed/rebased CAS attempts: delete any manifest
     // file no snapshot references (same age guard)

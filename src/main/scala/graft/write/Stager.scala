@@ -204,7 +204,7 @@ object Stager {
     val files = graft.catalog.PathIO.walk(dest)
       .filter(p => p.getFileName.toString.endsWith(".parquet"))
       .map(_.toString).sorted
-    if (files.isEmpty) return Nil
+    if (files.isEmpty) { graft.catalog.PathIO.deleteQuietly(dest); return Nil }
 
     // Unpartitioned tables: stats fold straight out of the just-written
     // parquet footers (driver-side, no data re-read). Partitioned tables
@@ -228,12 +228,21 @@ object Stager {
           collectStats(spark, files, schema, spec)
         }
       }
+    // a zero-row file (Spark writes one for an empty output) never enters
+    // a snapshot: delete it now rather than leave it to vacuum
+    val live = base.map(_.path)
+    files.filterNot(live.toSet).foreach { f =>
+      val p = java.nio.file.Paths.get(f)
+      Files.deleteIfExists(p)
+      Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    }
+    if (live.isEmpty) { graft.catalog.PathIO.deleteQuietly(dest); return Nil }
     val present = bloomColumns.filter(c => schema.fieldNames.contains(c) &&
       graft.catalog.KeyBloom.supportsBloom(schema(c).dataType))
     val withBlooms = if (present.isEmpty) base
     else {
       val blooms = graft.JobDesc(spark, s"graft.stage:bloom $loadId") {
-        collectBlooms(spark, files, schema, present)
+        collectBlooms(spark, live, schema, present)
       }
       base.map { f =>
         blooms.get(f.path).fold(f) { byCol =>
@@ -249,7 +258,7 @@ object Stager {
     if (skPresent.isEmpty) withBlooms
     else {
       val sketches = graft.JobDesc(spark, s"graft.stage:sketch $loadId") {
-        collectSketches(spark, files, schema, skPresent)
+        collectSketches(spark, live, schema, skPresent)
       }
       withBlooms.map { f =>
         sketches.get(f.path).fold(f) { byCol =>

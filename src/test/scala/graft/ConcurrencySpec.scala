@@ -89,6 +89,46 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(applied.toSeq == Seq((1L, "a2"), (100L, "x2")))
   }
 
+  /** Driver-only metadata whose current snapshot holds `files` and
+    * positional deletes `deletes` inline — no manifest IO, no Spark job. */
+  private def liveState(files: Seq[String], deletes: Seq[String] = Nil): TableMetadata =
+    TableMetadata.create("main.t", "/nonexistent",
+      StructType(Seq(StructField("x", LongType))), Nil, Map.empty).copy(
+      currentSnapshotId = Some(1L),
+      snapshots = Seq(Snapshot(1L, None, 0L, "append", None,
+        files = Some(files.map(DataFile(_, 1L, 1L, Map.empty))),
+        posDeleteFiles = Some(deletes.map(PosDeleteFile(_, 1L))))))
+
+  test("staleness rule: an appended file passes 'still live' but fails 'identical'") {
+    val fresh = liveState(Seq("a", "b", "c"))
+    fresh.requireNotSuperseded("op", Set("a", "b"), identical = false)
+    val e = intercept[ValidationError] {
+      fresh.requireNotSuperseded("op", Set("a", "b"), identical = true)
+    }
+    assert(e.getMessage.startsWith("op superseded by a concurrent commit"))
+    fresh.requireNotSuperseded("op", Set("a", "b", "c"), identical = true)
+  }
+
+  test("staleness rule: a removed target fails both file checks") {
+    val fresh = liveState(Seq("a"))
+    for (identical <- Seq(false, true))
+      intercept[ValidationError] {
+        fresh.requireNotSuperseded("op", Set("a", "b"), identical)
+      }
+  }
+
+  test("staleness rule: a changed delete set fails only when delete paths are given") {
+    val fresh = liveState(Seq("a", "b"), deletes = Seq("d1", "d2"))
+    for (identical <- Seq(false, true)) {
+      fresh.requireNotSuperseded("op", Set("a", "b"), identical)
+      fresh.requireNotSuperseded("op", Set("a", "b"), identical,
+        Some(Set("d1", "d2")))
+      intercept[ValidationError] {
+        fresh.requireNotSuperseded("op", Set("a", "b"), identical, Some(Set("d1")))
+      }
+    }
+  }
+
   test("empty batch append commits an empty snapshot; empty merge is safe") {
     val cat = freshCatalog()
     val w = new GraftWriter(cat)

@@ -156,24 +156,54 @@ class DeleteWhereSpec extends AnyFunSuite {
   }
 
   test("deleteWhere planned before a compaction refuses the stale plan") {
+    // the afterPlanning seam lands a compaction between each rewrite's
+    // planning scan and its commit: the target file moved to a new path,
+    // so the plan is stale — the rule must refuse rather than lose the
+    // delete, commit nothing, and leave nothing staged behind
+    val cases = Seq(
+      ("deleteWhere CoW", false, GraftWriter.DeleteRows),
+      ("deleteWhere MoR", true, GraftWriter.DeleteRows),
+      ("updateWhere MoR", true,
+        GraftWriter.UpdateRows(Map("username" -> lit("z")))))
+    for ((label, mor, rewrite) <- cases) {
+      val cat = freshCatalog()
+      val w = new GraftWriter(cat)
+      w.writeTable("main", "u", Seq(users((1, "a", 10))), Append, cfg, "l1")
+      w.writeTable("main", "u", Seq(users((2, "b", 95))), Append, cfg, "l2")
+      val t = cat.loadTable("main", "u")
+      val before = rowsOf(t)
+      intercept[ValidationError] {
+        w.rewriteWhere("main", "u", col("score") >= 90, rewrite,
+          cfg.copy(mergeOnRead = mor), "stale",
+          afterPlanning = () => assert(Maintenance.compact(t, retryUnitMs = 1)))
+      }
+      assert(t.metadata.snapshots.last.operation == "compact", label)
+      assert(rowsOf(t) == before, label)
+      assert(Maintenance.vacuumOrphans(t, minAgeMs = 0L).isEmpty, label)
+      // a fresh deleteWhere, planned against the compacted snapshot,
+      // succeeds — only the STALE plan is refused
+      assert(w.deleteWhere("main", "u", col("score") >= 90,
+        cfg.copy(mergeOnRead = true)) == 1L, label)
+      assert(t.read().select("user_id").as[Long].collect().toSet == Set(1L), label)
+    }
+  }
+
+  test("a merge-on-read deleteWhere inside an updateWhere window refuses the update") {
     val cat = freshCatalog()
     val w = new GraftWriter(cat)
-    w.writeTable("main", "u", Seq(users((1, "a", 10))), Append, cfg, "l1")
-    w.writeTable("main", "u", Seq(users((2, "b", 95))), Append, cfg, "l2")
-    val t = cat.loadTable("main", "u")
-    // simulate a compaction landing between deleteWhere's planning scan
-    // and its commit: the target file set changes, so the (path, idx)
-    // plan is stale — the guard must refuse rather than lose the delete
-    val planned = t.metadata.currentFiles.map(_.path).toSet
-    assert(Maintenance.compact(t, retryUnitMs = 1))
-    assert(t.metadata.currentFiles.map(_.path).toSet != planned)
-    // a fresh deleteWhere (planning against the compacted snapshot)
-    // succeeds — only the STALE plan is refused, which the engine
-    // enforces via requireTargetsLive (exercised by the concurrent path;
-    // here we assert the post-compaction delete is clean)
-    assert(w.deleteWhere("main", "u", col("score") >= 90,
-      cfg.copy(mergeOnRead = true)) == 1L)
-    assert(t.read().select("user_id").as[Long].collect().toSet == Set(1L))
+    val mor = cfg.copy(mergeOnRead = true)
+    val t = w.writeTable("main", "u",
+      Seq(users((1, "a", 10), (2, "b", 95), (3, "c", 97))), Append, cfg, "l1")
+    // the update's staged rows and vector were computed against the old
+    // delete set; the delete that landed in between changes it
+    intercept[ValidationError] {
+      w.rewriteWhere("main", "u", col("score") >= 90,
+        GraftWriter.UpdateRows(Map("username" -> lit("z"))), mor, "up",
+        afterPlanning = () =>
+          assert(w.deleteWhere("main", "u", col("user_id") === 1L, mor) == 1L))
+    }
+    assert(rowsOf(t) == Set((2L, "b", 95L), (3L, "c", 97L)))
+    assert(Maintenance.vacuumOrphans(t, minAgeMs = 0L).isEmpty)
   }
 
   test("publishing a branch with merge-on-read deletes keeps them applied on main") {

@@ -268,6 +268,40 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(t.read().count() == 2) // live data untouched
   }
 
+  test("vacuumOrphans keeps live files' sidecars and reclaims a dropped file's") {
+    val cat = freshCatalog()
+    val w = new GraftWriter(cat)
+    val pk = cfg.copy(primaryKey = Seq("x"))
+    w.writeTable("main", "t", Seq(Seq(1L, 2L).toDF("x")), Append, cfg, "l1")
+    w.writeTable("main", "t", Seq(Seq(3L).toDF("x")), Append, cfg, "l2")
+    w.writeTable("main", "t", Seq(Seq(2L, 4L).toDF("x")), Merge("upsert"), pk, "l3")
+    w.writeTable("main", "t", Seq(Seq(5L).toDF("x")), Merge("upsert"),
+      pk.copy(mergeOnRead = true), "l4")
+    val t = cat.loadTable("main", "t")
+    // Spark's _SUCCESS and .crc files next to committed output are not
+    // orphans
+    assert(Maintenance.vacuumOrphans(t, minAgeMs = 0L).isEmpty)
+    assert(t.read().as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L, 4L, 5L))
+
+    // once expiry deletes a dropped file, its sidecars go with the next
+    // vacuum
+    w.writeTable("main", "t", Seq(Seq(9L).toDF("x")), Replace, cfg, "l5")
+    val dropped = Maintenance.expireSnapshots(t, keepLast = 1, retryUnitMs = 1)
+    assert(dropped.nonEmpty)
+    val reclaimed = Maintenance.vacuumOrphans(t, minAgeMs = 0L)
+    for (p <- dropped) {
+      val f = Paths.get(p).toAbsolutePath
+      assert(reclaimed.contains(f.resolveSibling(s".${f.getFileName}.crc").toString),
+        s"sidecar of $p not reclaimed: $reclaimed")
+    }
+    assert(reclaimed.forall { p =>
+      val n = Paths.get(p).getFileName.toString
+      n == "_SUCCESS" || n.endsWith(".crc")
+    }, s"vacuum reclaimed a non-sidecar file: $reclaimed")
+    assert(Maintenance.vacuumOrphans(t, minAgeMs = 0L).isEmpty)
+    assert(t.read().as[Long].collect().toSeq == Seq(9L))
+  }
+
   test("externalized snapshot bodies: expire ref-counts them, vacuum collects orphans, rollback shares") {
     val cat = freshCatalog()
     val w = new GraftWriter(cat)

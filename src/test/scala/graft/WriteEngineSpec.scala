@@ -116,8 +116,6 @@ class WriteEngineSpec extends AnyFunSuite {
       w.writeTable("main", name, Seq(users((1, "a", 1), (2, "b", 2))),
         Merge("upsert"), cfg, "l1")
       val before = cat.loadTable("main", name).read().collect().toSet
-      // committed loads leave Spark's _SUCCESS/.crc sidecars; start clean
-      Maintenance.vacuumOrphans(cat.loadTable("main", name), minAgeMs = 0L)
       intercept[ValidationError] {
         w.writeTable("main", name, Seq(users((3, "c", 3), (3, "dup", 4))),
           Merge("upsert"), cfg, "l2")
