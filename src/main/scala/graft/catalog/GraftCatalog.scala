@@ -51,13 +51,9 @@ final class GraftCatalog(val spark: SparkSession, warehouse: String) {
     tableDir(ns, table).resolve("table-location.ref")
 
   private def writeLocationRef(ns: String, table: String, location: Path): Unit = {
-    val entry = tableDir(ns, table)
-    Files.createDirectories(entry)
-    val tmp = entry.resolve(s".table-location.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    Files.write(tmp, location.toAbsolutePath.toString.getBytes(UTF_8))
-    Files.move(tmp, locationRef(ns, table),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.createDirectories(tableDir(ns, table))
+    PathIO.publish(locationRef(ns, table),
+      location.toAbsolutePath.toString.getBytes(UTF_8), replace = true)
   }
 
   /** Resolve a table's directory through the location pointer; default

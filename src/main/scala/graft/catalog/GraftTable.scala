@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
+import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import scala.jdk.CollectionConverters._
@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
   * atomic CAS commit protocol.
   *
   * Commit protocol (SURVEY §7.0): the next metadata version number is the
-  * CAS token. `Files.write(CREATE_NEW)` on `metadata/v<N+1>.metadata.json`
-  * succeeds for exactly one writer; the loser observes
+  * CAS token. Publishing `metadata/v<N+1>.metadata.json` (a hard link to
+  * a fully written temp file, [[PathIO.publish]]) succeeds for
+  * exactly one writer; the loser observes
   * FileAlreadyExistsException, rereads the freshest metadata, re-applies
   * its update function (rebase) and retries — the same
   * refresh-before-retry recovery as the reference
@@ -58,16 +59,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
   def metadataAt(version: Int): TableMetadata = {
     val p = versionPath(version)
     if (!Files.exists(p)) throw new NoSuchTableError(dir.toString)
-    // the CAS creates the version file before writing its content, so a
-    // reader racing a commit in flight can see it empty: wait it out
-    var bytes = Files.readAllBytes(p)
-    var waits = 0
-    while (bytes.isEmpty && waits < 2000) {
-      Thread.sleep(1)
-      waits += 1
-      bytes = Files.readAllBytes(p)
-    }
-    TableMetadata.fromJson(new String(bytes, UTF_8))
+    TableMetadata.fromJson(new String(Files.readAllBytes(p), UTF_8))
   }
 
   /** Metadata-only row count: folded from snapshot manifest refs, no data
@@ -461,10 +453,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
 
   private def writeVersion(version: Int, m: TableMetadata): Unit = {
     Files.createDirectories(metadataDir)
-    val target = versionPath(version)
-    try
-      Files.write(target, TableMetadata.toJson(m).getBytes(UTF_8),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    try PathIO.publish(versionPath(version), TableMetadata.toJson(m).getBytes(UTF_8))
     catch {
       case e: java.nio.file.FileAlreadyExistsException =>
         throw new CommitConflictError(m.identifier, version, e)
@@ -472,11 +461,8 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
         throw new CommitFailedError(m.identifier, e)
     }
     // Advisory fast-path pointer, updated atomically after the CAS.
-    val hint = metadataDir.resolve("version-hint.text")
-    val tmp = metadataDir.resolve(s".version-hint.$version.tmp")
-    Files.write(tmp, version.toString.getBytes(UTF_8))
-    Files.move(tmp, hint, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    PathIO.publish(metadataDir.resolve("version-hint.text"),
+      version.toString.getBytes(UTF_8), replace = true)
   }
 }
 
@@ -492,10 +478,8 @@ object GraftTable {
   def create(spark: SparkSession, dir: Path, m: TableMetadata): GraftTable = {
     val t = new GraftTable(spark, dir)
     Files.createDirectories(t.metadataDir)
-    try
-      Files.write(t.metadataDir.resolve("v1.metadata.json"),
-        TableMetadata.toJson(m).getBytes(UTF_8),
-        StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+    try PathIO.publish(t.metadataDir.resolve("v1.metadata.json"),
+      TableMetadata.toJson(m).getBytes(UTF_8))
     catch {
       case _: java.nio.file.FileAlreadyExistsException =>
         throw new TableAlreadyExistsError(m.identifier)

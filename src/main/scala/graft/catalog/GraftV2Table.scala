@@ -262,8 +262,7 @@ final class GraftV2Table(
       val attrs: Seq[Attribute] =
         catalystFilters.flatMap(_.references.toSeq).distinctBy(_.exprId)
       if (!attrs.forall(a => MetaAgg.keyDecodable(a.dataType))) return None
-      val pred = Predicate.create(
-        catalystFilters.reduce(And), attrs)
+      val pred = GraftV2Table.filePredicate(catalystFilters.reduce(And), attrs)
       val converters = attrs.map(a =>
         org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToCatalystConverter(a.dataType))
@@ -367,8 +366,8 @@ final class GraftV2Table(
       }
       if (!valid(pred)) return None
 
-      val evalPred = Predicate.create(pred, attrs)
-      val evalChecks = checks.toSeq.map(c => Predicate.create(c, attrs))
+      val evalPred = GraftV2Table.filePredicate(pred, attrs)
+      val evalChecks = checks.toSeq.map(c => GraftV2Table.filePredicate(c, attrs))
       val converters = attrs.map(a =>
         org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToCatalystConverter(a.dataType))
@@ -835,6 +834,19 @@ object GraftV2Table {
   def parsePrimaryKey(props: Map[String, String]): Seq[String] =
     props.get("graft.primary-key").toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
+
+  /** A pushed filter as a predicate over one file's stat row, evaluated
+    * interpreted: the claim tiers evaluate it a few times per file on the
+    * driver, and `Predicate.create` would compile a class per query
+    * (literals are inlined into generated code, so no two queries share
+    * one), costing more than every evaluation it serves. */
+  private[catalog] def filePredicate(
+      e: org.apache.spark.sql.catalyst.expressions.Expression,
+      attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
+      : org.apache.spark.sql.catalyst.expressions.BasePredicate = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Predicate}
+    Predicate.createInterpreted(BindReferences.bindReference(e, AttributeSeq(attrs)))
+  }
 
   /** Wrap a raw V1Scan the way `V2ScanRelationPushDown` would — row-level
     * scan planning builds the scan relation directly and skips that

@@ -55,38 +55,12 @@ final class GraftViews(warehouse: Path) {
     * CREATE-vs-CREATE race loses on the underlying move). */
   def write(ns: String, name: String, d: ViewDef, replace: Boolean): Unit = {
     Files.createDirectories(viewsDir(ns))
-    val tmp = viewsDir(ns).resolve(
-      s".$name.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    Files.write(tmp, JsonMethods.pretty(Extraction.decompose(d)).getBytes(UTF_8))
-    try
-      if (replace)
-        Files.move(tmp, viewPath(ns, name), StandardCopyOption.ATOMIC_MOVE,
-          StandardCopyOption.REPLACE_EXISTING)
-      else {
-        // hard-link CREATE_NEW semantics: link(target, tmp) atomically
-        // publishes the fully-written tmp under the target name and
-        // FAILS if the target exists — the create-create race loses
-        // deterministically on every POSIX filesystem (ATOMIC_MOVE
-        // without REPLACE_EXISTING is allowed to clobber on some)
-        try Files.createLink(viewPath(ns, name), tmp)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            throw new TableAlreadyExistsError(s"view $ns.$name")
-          // filesystems without hard-link support surface either
-          // UnsupportedOperationException or a generic FileSystemException
-          // (FAT/exFAT, some network mounts) — both route to the
-          // ATOMIC_MOVE fallback; only FileAlreadyExistsException (caught
-          // above) means the race was genuinely lost
-          case _: UnsupportedOperationException |
-              _: java.nio.file.FileSystemException =>
-            try Files.move(tmp, viewPath(ns, name), StandardCopyOption.ATOMIC_MOVE)
-            catch {
-              case _: java.nio.file.FileAlreadyExistsException =>
-                throw new TableAlreadyExistsError(s"view $ns.$name")
-            }
-        }
-      }
-    finally Files.deleteIfExists(tmp)
+    try PathIO.publish(viewPath(ns, name),
+      JsonMethods.pretty(Extraction.decompose(d)).getBytes(UTF_8), replace)
+    catch {
+      case _: java.nio.file.FileAlreadyExistsException =>
+        throw new TableAlreadyExistsError(s"view $ns.$name")
+    }
   }
 
   def drop(ns: String, name: String): Boolean =

@@ -1,6 +1,6 @@
 package graft.catalog
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{FileAlreadyExistsException, FileSystemException, Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 /** Closed-stream directory listings. `Files.list`/`Files.walk` return
@@ -40,5 +40,34 @@ object PathIO {
     if (!Files.isDirectory(dir)) return false
     val s = Files.list(dir)
     try !s.iterator().hasNext finally s.close()
+  }
+
+  /** Publishes `bytes` under `target` so that no reader ever sees the file
+    * partly written: the bytes go to a temp file beside it, which is then
+    * moved or linked into place. With `replace` an existing file is
+    * replaced atomically. Without it an existing file is never touched
+    * (FileAlreadyExistsException): the temp file is hard-linked under the
+    * target name, which succeeds for exactly one of racing writers — the
+    * no-overwrite rename a CAS needs. Filesystems without hard links fall
+    * back to an existence check and an atomic move: readers still never
+    * see a partly written file, but two writers racing between the check
+    * and the move can both succeed, the later one replacing the earlier. */
+  def publish(target: Path, bytes: Array[Byte], replace: Boolean = false): Unit = {
+    val tmp = target.resolveSibling(
+      s".${target.getFileName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
+    Files.write(tmp, bytes)
+    try {
+      if (replace)
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      else
+        try Files.createLink(target, tmp)
+        catch {
+          case e: FileAlreadyExistsException => throw e
+          case _: UnsupportedOperationException | _: FileSystemException =>
+            if (Files.exists(target)) throw new FileAlreadyExistsException(target.toString)
+            Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+        }
+    } finally Files.deleteIfExists(tmp)
   }
 }

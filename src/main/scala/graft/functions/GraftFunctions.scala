@@ -10,17 +10,33 @@ object GraftFunctions {
 
   def register(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
+    def intLiteral(name: String, e: Expression): Int =
+      (if (e.foldable) e.eval() else e) match {
+        case i: Int => i
+        case l: Long => l.toInt
+        case other => throw new IllegalArgumentException(
+          s"$name must be an integer literal, got $other")
+      }
     registry.createOrReplaceTempFunction(
       "iceberg_bucket",
       (exprs: Seq[Expression]) => {
         require(exprs.length == 2, "iceberg_bucket(col, numBuckets)")
-        val n = exprs(1).eval() match {
-          case i: Int => i
-          case l: Long => l.toInt
-          case other => throw new IllegalArgumentException(
-            s"iceberg_bucket numBuckets must be an integer literal, got $other")
-        }
-        IcebergBucket(exprs.head, n)
+        IcebergBucket(exprs.head, intLiteral("iceberg_bucket numBuckets", exprs(1)))
+      },
+      "built-in")
+    registry.createOrReplaceTempFunction(
+      "graft_shingle_hashes",
+      (exprs: Seq[Expression]) => {
+        require(exprs.length == 2, "graft_shingle_hashes(text, n)")
+        ShingleHashes(exprs.head, intLiteral("graft_shingle_hashes n", exprs(1)))
+      },
+      "built-in")
+    registry.createOrReplaceTempFunction(
+      "graft_minhash",
+      (exprs: Seq[Expression]) => {
+        require(exprs.length == 2, "graft_minhash(hashes, numHashes)")
+        MinHashSignature(exprs.head,
+          intLiteral("graft_minhash numHashes", exprs(1)))
       },
       "built-in")
     registry.createOrReplaceTempFunction(

@@ -89,16 +89,26 @@ object Dedup {
     * maintains this table (512 B/doc at 64 hashes — ~0.5% of corpus
     * bytes at typical web-document sizes, ~0.5 TB per billion docs)
     * can near-dedup every future batch against itself WITHOUT rescanning
-    * corpus text: see [[incrementalNearDedup]]. */
+    * corpus text: see [[incrementalNearDedup]].
+    *
+    * Map-only: one projection through the per-document kernels
+    * `graft_shingle_hashes` and `graft_minhash` ([[graft.functions.MinHash]]),
+    * no shuffle. Documents with fewer than `n` words (and null text) have
+    * no shingles and no row. `doc_id` must be unique in `docs`: each input
+    * row yields its own signature row (every caller passes unique ids). */
   def minHashSignatures(docs: DataFrame, n: Int = 3, numHashes: Int = 64,
-      textCol: String = "text"): DataFrame = {
-    val sh = hashedShingles(docs, n, textCol)
-    val minAggs = (0 until numHashes).map { i =>
-      min(xxhash64(col("g"), lit(i))).as(s"m$i")
-    }
-    sh.groupBy("doc_id").agg(minAggs.head, minAggs.tail: _*)
+      textCol: String = "text"): DataFrame =
+    shingleSets(docs, n, textCol).select(col("doc_id"),
+      call_function("graft_minhash", col("sh"), lit(numHashes)).as("sig"))
+
+  /** (doc_id, sh): each document's sorted, distinct `n`-word shingle
+    * hashes as one array (`graft_shingle_hashes`), for documents with at
+    * least `n` words. Map-only. */
+  private def shingleSets(docs: DataFrame, n: Int, textCol: String): DataFrame = {
+    graft.functions.GraftFunctions.register(docs.sparkSession)
+    docs.filter(size(split(col(textCol), " ")) >= n)
       .select(col("doc_id"),
-        array((0 until numHashes).map(i => col(s"m$i")): _*).as("sig"))
+        call_function("graft_shingle_hashes", col(textCol), lit(n)).as("sh"))
   }
 
   /** LSH band buckets from committed signatures. The bucket is the band's
@@ -387,16 +397,14 @@ object Dedup {
   /** Shingles with the string replaced by its 64-bit hash — the join keys
     * of every pairwise stage. Joining/aggregating on 8-byte longs is
     * substantially cheaper than on ~25-char strings; the 2^-64 collision
-    * rate is far below the engine's verification tolerances. */
-  private def hashedShingles(docs: DataFrame, n: Int, textCol: String): DataFrame = {
-    val w = split(col(textCol), " ")
-    docs
-      .filter(size(split(col(textCol), " ")) >= n)
-      .select(col("doc_id"),
-        explode(transform(sequence(lit(1), size(w) - (n - 1)),
-          i => xxhash64(concat_ws("_", slice(w, i, lit(n)))))).as("g"))
+    * rate is far below the engine's verification tolerances. One row per
+    * (doc_id, g): the exploded [[shingleSets]]; the `distinct` merges
+    * duplicate doc_id rows and is the shuffle barrier
+    * [[ngramJaccardPairs]] relies on. */
+  private def hashedShingles(docs: DataFrame, n: Int, textCol: String): DataFrame =
+    shingleSets(docs, n, textCol)
+      .select(col("doc_id"), explode(col("sh")).as("g"))
       .distinct()
-  }
 
   /** Floor for the auto-derived shingle document-frequency cap: the cap
     * never drops below this, so ordinary near-dup pairs (whose shared
@@ -666,18 +674,33 @@ object Dedup {
     }
   }
 
-  // Permutation p is realized as xxhash64 salted with p (overflow-free
-  // under ANSI mode, and deterministic across engines/runs).
+  /** Broadcast footprint of one short row (a band row, or a shingle-hash
+    * array's fixed part): [[minHashLshPairs]]'s size measure. */
+  private val BroadcastRowBytes = 32L
 
   /** MinHash + banded LSH near-dup pairs, verified with exact Jaccard.
     *
-    * shingle → xxhash64 → per-permutation min (one hash-aggregate with
-    * `numHashes` min() columns) → band signatures → equality join on
-    * (band, bucket) yields candidates → exact-Jaccard verification of the
-    * candidate set only. With 32 bands × 2 rows, recall at J≥0.9 is
-    * 1-(1-0.81)^32 ≈ 1-2.6e-23 — the published MinHash-LSH S-curve.
-    */
-  /** Scale shape (measured at 500k docs, shared-vocab worst case): the
+    * Per-document shingle-hash sets and signatures
+    * ([[minHashSignatures]]; signature component i is the min over the
+    * document's shingle hashes g of `xxhash64(g, i)`) → band buckets
+    * `xxhash64(sig[b·r], …, sig[b·r + r - 1])` → equality join on
+    * (band, bucket) yields candidates → exact Jaccard of each candidate's
+    * two shingle-hash arrays (`array_intersect`). With 32 bands × 2 rows,
+    * recall at J≥0.9 is 1-(1-0.81)^32 ≈ 1-2.6e-23 — the published
+    * MinHash-LSH S-curve. Shingles never become rows. `doc_id` must be
+    * unique in `docs`.
+    *
+    * Join strategy: Spark sizes a join's output as the product of its
+    * inputs' sizes, so a corpus that arrives as a join (the survivors of
+    * exact dedup) would plan every join here as a shuffle, however small
+    * it is. One aggregate job over `docs`, run when this is called,
+    * measures it instead: when its band rows and its shingle-hash arrays
+    * both fit under `spark.sql.autoBroadcastJoinThreshold`, the band join
+    * broadcasts one side and the verification broadcasts the arrays, so
+    * only the candidate pairs shuffle. Larger corpora shuffle the band
+    * rows and each side's arrays.
+    *
+    * Scale shape (measured at 500k docs, shared-vocab worst case): the
     * default banding (rows-per-band 2) keeps recall at J>0.5 essentially
     * certain (a true pair collides in ~8 of 32 bands), at the cost of
     * permissive candidate generation — band-bucket occupancy grows with
@@ -689,64 +712,46 @@ object Dedup {
     * at corpus scale, prefer the capped exact-Jaccard twin (l18), whose
     * per-shingle join fan-out is bounded at cap^2 by construction.
     *
-    * Caching contract: the returned DataFrame reads the cached `sh`,
-    * `candidates` and `candSh` intermediates, which stay cached after it
-    * is evaluated. The caller releases them when done with the result
-    * (`spark.catalog.clearCache()`, or unpersist). */
+    * Caches nothing: the shingle-hash arrays are a map-only projection,
+    * so verification recomputes them instead of holding every
+    * document's set. */
   def minHashLshPairs(docs: DataFrame, n: Int = 3, numHashes: Int = 64,
       bands: Int = 32, threshold: Double = 0.5,
       textCol: String = "text"): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rowsPerBand = numHashes / bands
-
-    // shingles arrive pre-hashed to longs; the permutation family re-hashes
-    // the 8-byte value with a salt — 64 long-hashes per shingle, no string
-    // work past the initial explode
-    val sh = hashedShingles(docs, n, textCol).cache()
-    val minAggs = (0 until numHashes).map { i =>
-      min(xxhash64(col("g"), lit(i))).as(s"m$i")
-    }
-    val sigs = sh.groupBy("doc_id").agg(minAggs.head, minAggs.tail: _*)
-
+    val sigs = minHashSignatures(docs, n, numHashes, textCol)
     val bandCols = (0 until bands).map { bIdx =>
-      val rows = (0 until rowsPerBand).map(r => col(s"m${bIdx * rowsPerBand + r}"))
+      val rows = (0 until rowsPerBand).map(r => col("sig").getItem(bIdx * rowsPerBand + r))
       struct(lit(bIdx).as("band"), xxhash64(rows: _*).as("bucket"))
     }
     val buckets = sigs.select(col("doc_id"),
       explode(array(bandCols: _*)).as("bb"))
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
 
-    val candidates = buckets.as("x").join(buckets.as("y"),
+    val limit = docs.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val small = limit > 0 && {
+      val r = docs.agg(count(lit(1)), sum(size(split(col(textCol), " ")))).head()
+      val (nDocs, tokens) = (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+      nDocs * bands * BroadcastRowBytes <= limit &&
+        tokens * 8 + nDocs * BroadcastRowBytes <= limit
+    }
+    def side(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+
+    val candidates = buckets.as("x").join(side(buckets.as("y")),
         col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
-      .distinct().cache()
+      .distinct()
 
-    // verify candidates with exact Jaccard — but only over candidate
-    // pairs: expand each candidate's left-side shingles, then hash-join on
-    // (b, g). Unlike the full g-equality self-join, this never explodes on
-    // common shingles; cost is |candidates| x shingles-per-doc.
-    // r15: the verify joins only ever consult documents that appear in a
-    // candidate pair, but `sh` carried EVERY document's shingles into
-    // both joins. Semi-join sh down to candidate docs first: the
-    // candidate-id set is near-dup-pair-sized (tiny vs corpus), so AQE
-    // plans the semi-join as a broadcast and non-candidate shingles drop
-    // MAP-SIDE before the (b, g) shuffle — inner-join semantics make the
-    // restriction lossless (sizes of candidate docs are computed over
-    // their FULL shingle sets either way).
-    val candIds = candidates.select(col("a").as("doc_id"))
-      .union(candidates.select(col("b").as("doc_id"))).distinct()
-    val candSh = sh.join(candIds, Seq("doc_id"), "left_semi").cache()
-    val sizes = candSh.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    val shared = candidates
-      .join(candSh.withColumnRenamed("doc_id", "a"), "a")
-      .join(candSh.withColumnRenamed("doc_id", "b"), Seq("b", "g"))
-      .groupBy("a", "b").agg(count(lit(1)).as("shared"))
-    shared
-      .join(sizes.withColumnRenamed("doc_id", "a").withColumnRenamed("sz", "sza"), "a")
-      .join(sizes.withColumnRenamed("doc_id", "b").withColumnRenamed("sz", "szb"), "b")
-      .withColumn("jaccard",
-        col("shared").cast("double") / (col("sza") + col("szb") - col("shared")))
+    // verify each candidate against the two documents' full shingle sets
+    val sh = shingleSets(docs, n, textCol)
+    candidates
+      .join(side(sh.select(col("doc_id").as("a"), col("sh").as("sa"))), "a")
+      .join(side(sh.select(col("doc_id").as("b"), col("sh").as("sb"))), "b")
+      .withColumn("shared", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("jaccard", col("shared").cast("double") /
+        (size(col("sa")) + size(col("sb")) - col("shared")))
       .filter(col("jaccard") > threshold)
       .select(col("a"), col("b"), round(col("jaccard") + 1e-9, 4).as("jaccard"))
   }

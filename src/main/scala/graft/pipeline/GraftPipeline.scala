@@ -74,7 +74,9 @@ final class GraftPipeline(
   /** Commit every staged table (one snapshot per table), then record the
     * load. Idempotent by load_id: if `_dlt_loads` already has the id, the
     * whole load is skipped — the reference's ambiguous-write recovery
-    * (`destination_client.py:1057-1076`). */
+    * (`destination_client.py:1057-1076`). A replay after a crash between a
+    * table commit and the ledger row appends nothing twice: `writeTable`
+    * skips each table that already carries the load id. */
   def completeLoad(loadId: String): Unit = synchronized {
     if (loadRecordExists(loadId)) { pending.clear(); return }
     val written = pending.keys.toSeq

@@ -1604,7 +1604,7 @@ object LlmQueries {
         val w = new graft.write.GraftWriter(cat)
         // the incoming-half MinHash staging reads nothing the corpus
         // commits write — run it CONCURRENTLY with them (guide §2.6):
-        // its aggregation jobs back-fill the cores the commit protocol's
+        // its signature jobs back-fill the cores the commit protocol's
         // driver-side phases leave idle
         val incStage = new java.util.concurrent.FutureTask[Unit](() =>
           stageForOracle(Dedup.minHashSignatures(incoming), "l57_inc_sigs"))
@@ -1616,7 +1616,7 @@ object LlmQueries {
           graft.write.Append, graft.write.WriteConfig(retryUnitMs = 10), "seed")
         // derive the band index from the COMMITTED signature table, not
         // the unmaterialized plan — deriving from `corpusSigs` would
-        // re-run the whole corpus MinHash aggregation a second time
+        // re-run the whole corpus MinHash pass a second time
         w.writeTable("main", "corpus_bands",
           Seq(Dedup.sigBandKeys(cat.loadTable("main", "corpus_sigs").read())),
           graft.write.Append, graft.write.WriteConfig(retryUnitMs = 10,
@@ -1630,7 +1630,7 @@ object LlmQueries {
           throw e.getCause }
         // the staged signatures ARE the incoming-side input (identical
         // rows by construction): read them back instead of re-running the
-        // whole incoming-half MinHash aggregation a second time — the
+        // whole incoming-half MinHash pass a second time — the
         // same materialized-intermediate reuse l41/l43 pinned in r7
         val incSigs = iso.read.parquet(s"$OracleStageRoot/l57_inc_sigs")
         // pin the 100-TB property: the committed index never shuffles —

@@ -94,7 +94,9 @@ final class GraftWriter(catalog: GraftCatalog) {
 
   /** Commit one table's batches for one load as ONE snapshot (two for
     * upsert+hard-delete, matching the reference's separate transactions,
-    * `destination_client.py:1437-1441`). */
+    * `destination_client.py:1437-1441`). The load id is the idempotence
+    * key: a table whose snapshots already carry `loadId` is left as it is,
+    * so replaying a load after a crash appends nothing twice. */
   def writeTable(ns: String, name: String, batches: Seq[DataFrame],
       disposition: Disposition, cfg: WriteConfig = WriteConfig(),
       loadId: String = java.util.UUID.randomUUID().toString): GraftTable = {
@@ -131,8 +133,10 @@ final class GraftWriter(catalog: GraftCatalog) {
             catalog.loadTable(ns, name)
         }
       } else catalog.loadTable(ns, name)
-
+    // on a replay the schema already evolved: `m0` is the metadata
+    // evolveThenCast reads anyway
     val (m0, combined) = evolveThenCast(t, batches, cfg, evolve = !created)
+    if (m0.snapshots.exists(_.loadId.contains(loadId))) return t
 
     disposition match {
       case Append => commitAppend(t, m0, combined, loadId, cfg)

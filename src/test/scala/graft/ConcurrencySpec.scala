@@ -129,6 +129,34 @@ class ConcurrencySpec extends AnyFunSuite {
     }
   }
 
+  test("readers racing commits never parse a partly written version file") {
+    // each version file carries a ~2 MB property, so writing one takes
+    // many write() calls: a reader that could see a version file before
+    // its last byte would fail to parse it
+    val cat = freshCatalog()
+    cat.createTable("main", "t", StructType(Seq(StructField("x", LongType))))
+    val t = cat.loadTable("main", "t")
+    val big = "x" * (2 << 20)
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val readers = (1 to 2).map { _ =>
+      val th = new Thread(() =>
+        while (!stop.get()) {
+          try t.metadataAt(t.currentVersion)
+          catch { case e: Throwable => errs.add(e) }
+        })
+      th.start(); th
+    }
+    try (1 to 15).foreach { i =>
+      t.commit(m => m.copy(properties = m.properties + ("big" -> s"$i$big")),
+        unitMs = 1)
+    } finally { stop.set(true); readers.foreach(_.join()) }
+    assert(errs.isEmpty, s"a reader parsed a partly written version: ${errs.peek()}")
+    assert(t.metadata.properties("big").startsWith("15x"))
+    assert(!graft.catalog.PathIO.list(t.metadataDir)
+      .exists(_.getFileName.toString.endsWith(".tmp")), "temp files left behind")
+  }
+
   test("empty batch append commits an empty snapshot; empty merge is safe") {
     val cat = freshCatalog()
     val w = new GraftWriter(cat)

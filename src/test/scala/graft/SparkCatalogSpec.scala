@@ -831,6 +831,15 @@ class SparkCatalogSpec extends AnyFunSuite {
       "AND ts < TIMESTAMP '2026-01-05 00:00:00'"
     assert(planOf(q2).contains("graft-meta-agg"), planOf(q2))
     assert(spark.sql(q2).collect()(0).getLong(0) == 2 * 24L)
+    // claiming evaluates its per-file predicates interpreted: planning a
+    // claimed query with literals no earlier query used compiles no class
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    val before = compiles.getCount
+    val fresh = "SELECT count(*) AS n FROM grng.main.ev " +
+      "WHERE ts >= TIMESTAMP '2026-01-06 00:00:00'"
+    spark.sql(fresh).queryExecution.optimizedPlan
+    assert(compiles.getCount == before, "claim planning compiled generated code")
+    assert(planOf(fresh).contains("graft-meta-agg"), planOf(fresh))
     // NON-grain-aligned boundary straddles a file: refuse the claim,
     // fall back to the pushed-filter scan, stay exact
     val q3 = "SELECT count(*) AS n FROM grng.main.ev " +

@@ -327,6 +327,23 @@ class WriteEngineSpec extends AnyFunSuite {
     assert(p.loads().count() == 1)
   }
 
+  test("pipeline replay after a crash between a table commit and the ledger row appends once") {
+    val cat = freshCatalog()
+    // the crashed first attempt: 'users' committed under load-1, then the
+    // process died before 'orders' and the _dlt_loads row
+    new GraftWriter(cat).writeTable("main", "users", Seq(users((1, "a", 1))),
+      Append, fastCfg, "load-1")
+    val p = new GraftPipeline(cat, "main", "schema1", "pipe1")
+    p.stage("users", users((1, "a", 1)), Append, fastCfg)
+    p.stage("orders", Seq((10L, 1L)).toDF("order_id", "user_id"), Append, fastCfg)
+    p.completeLoad("load-1")
+    val u = cat.loadTable("main", "users")
+    assert(u.read().count() == 1, "the replayed append landed twice")
+    assert(u.metadata.snapshots.flatMap(_.loadId) == Seq("load-1"))
+    assert(cat.loadTable("main", "orders").read().count() == 1)
+    assert(p.loads().collect().map(_.getAs[String]("load_id")).toSeq == Seq("load-1"))
+  }
+
   test("schema registry: hash-deduped versions; state restore by created_at") {
     val cat = freshCatalog()
     val p = new GraftPipeline(cat, "main", "s1", "pipe1")
