@@ -1,6 +1,7 @@
 package graft.cast
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.functions.{col, lit, struct, transform, transform_keys, transform_values, when}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -18,6 +19,47 @@ object SafeCast {
 
   def apply(df: DataFrame, target: StructType, strict: Boolean = true): DataFrame = {
     val source = df.schema
+    validate(source, target, strict)
+    val sourceByName = source.fields.map(f => f.name -> f).toMap
+    val projected = target.fields.toSeq.map { tf =>
+      sourceByName.get(tf.name) match {
+        case Some(sf) =>
+          castExpr(col(tf.name), sf.dataType, tf.dataType).as(tf.name)
+        case None =>
+          // sparse incoming batch: null-fill target-only nullable columns
+          // (schema_casting.py:469-477)
+          lit(null).cast(tf.dataType).as(tf.name)
+      }
+    }
+    df.select(projected: _*)
+  }
+
+  /** [[apply]] for a few driver-held rows (the pipeline's `_dlt_*`
+    * bookkeeping): the same validation, null-fill and reorder, as catalyst
+    * rows in `target`'s layout — no plan, no job. A column the rows carry
+    * must already have its target type. */
+  def rows(rows: Seq[Row], source: StructType, target: StructType,
+      strict: Boolean = true): Seq[InternalRow] = {
+    validate(source, target, strict)
+    val index = source.fieldNames.zipWithIndex.toMap
+    val slots = target.fields.toSeq.map { tf =>
+      index.get(tf.name).map { i =>
+        if (source(i).dataType != tf.dataType)
+          throw new CastingError(s"Driver-held rows carry '${tf.name}' as " +
+            s"${source(i).dataType.simpleString}, the table as " +
+            tf.dataType.simpleString)
+        i
+      }
+    }
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(source)
+    rows.map { row =>
+      val in = toCatalyst(row).asInstanceOf[InternalRow]
+      InternalRow.fromSeq(slots.map(_.map(i => in.get(i, source(i).dataType)).orNull))
+    }
+  }
+
+  private def validate(source: StructType, target: StructType,
+      strict: Boolean): Unit = {
     val validation = CastValidator.validateCast(source, target)
 
     val missingRequired = CastValidator.missingRequiredTargetFields(source, target)
@@ -35,19 +77,6 @@ object SafeCast {
         msg ++= "\nWarnings:\n" + validation.warnings.mkString("\n")
       throw new CastingError(msg.toString)
     }
-
-    val sourceByName = source.fields.map(f => f.name -> f).toMap
-    val projected = target.fields.toSeq.map { tf =>
-      sourceByName.get(tf.name) match {
-        case Some(sf) =>
-          castExpr(col(tf.name), sf.dataType, tf.dataType).as(tf.name)
-        case None =>
-          // sparse incoming batch: null-fill target-only nullable columns
-          // (schema_casting.py:469-477)
-          lit(null).cast(tf.dataType).as(tf.name)
-      }
-    }
-    df.select(projected: _*)
   }
 
   /** Cast expression recursing through nested types

@@ -440,14 +440,20 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
   }
 
   /** Atomic commit: reread freshest metadata, apply `update`, CAS-write the
-    * next version. Retries with exponential backoff on conflict. */
+    * next version. Retries with exponential backoff on conflict.
+    * `onLostCas` runs after an attempt loses the CAS (another writer
+    * published that version first), before any retry: an `update` that
+    * stages files drops that attempt's output there. */
   def commit(update: TableMetadata => TableMetadata,
-      maxRetries: Int = 5, backoffBase: Double = 2.0, unitMs: Long = 1000L): TableMetadata =
+      maxRetries: Int = 5, backoffBase: Double = 2.0, unitMs: Long = 1000L,
+      onLostCas: () => Unit = () => ()): TableMetadata =
     Retry.withRetries(maxRetries, backoffBase, unitMs) { () =>
       val v = currentVersion
       val fresh = metadataAt(v)
       val next = update(fresh)
-      writeVersion(v + 1, next)
+      Option(GraftTable.beforeCas.remove(dir)).foreach(_())
+      try writeVersion(v + 1, next)
+      catch { case e: CommitConflictError => onLostCas(); throw e }
       next
     }
 
@@ -467,6 +473,12 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
 }
 
 object GraftTable {
+  /** Spec seam: a one-shot action the next commit of the table at this
+    * directory runs between its update and its CAS, so a spec can land a
+    * concurrent commit inside that window. */
+  private[graft] val beforeCas =
+    new java.util.concurrent.ConcurrentHashMap[Path, () => Unit]()
+
   /** Operations whose snapshots are content-neutral file rewrites: the
     * live row set is unchanged, only paths move. The changelog skips
     * them; anything else that removes files is content-changing. */

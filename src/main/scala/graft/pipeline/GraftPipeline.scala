@@ -1,12 +1,11 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.catalog.GraftCatalog
 import graft.write.{Append, Disposition, GraftWriter, WriteConfig}
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /** Load orchestration + pipeline metadata tables — the Spark rebuild of
   * the reference's load lifecycle (`destination_client.py:933-1106`):
@@ -41,7 +40,6 @@ final class GraftPipeline(
 
   import GraftPipeline._
 
-  private def spark: SparkSession = catalog.spark
   private val writer = new GraftWriter(catalog)
 
   private case class Pending(df: DataFrame, disposition: Disposition, cfg: WriteConfig)
@@ -116,38 +114,42 @@ final class GraftPipeline(
   }
 
 
-  /** Write one `_dlt_*` metadata batch with C10 timestamp normalization
-    * against the live table schema. */
-  private def writeInternal(table: String, df: DataFrame, cfg: WriteConfig,
-      loadId: String): Unit = {
+  /** Append one `_dlt_*` row on the driver ([[GraftWriter.appendRows]]:
+    * no Spark job), its timestamp column in the live table's flavor (C10).
+    * `row` builds the row from the current time as a value of that flavor. */
+  private def writeInternal(table: String, schema: StructType, cfg: WriteConfig,
+      loadId: String)(row: Any => Row): Unit = {
     val target =
       if (catalog.tableExists(namespace, table))
         Some(catalog.loadTable(namespace, table).metadata.schema)
       else None
-    writer.writeTable(namespace, table,
-      Seq(InternalTimestamps.normalize(table, df, target)), Append, cfg, loadId)
+    val declared = InternalTimestamps.normalize(table, schema, target)
+    val now = InternalTimestamps.now(
+      declared(InternalTimestamps.InternalColumns(table).head).dataType)
+    writer.appendRows(namespace, table, Seq(row(now)), declared, cfg, loadId)
   }
 
   // --- _dlt_loads (destination_client.py:1026-1106; schema FIXTURES A7) ---
 
-  def recordLoad(loadId: String, status: Long): Unit = {
-    val row = Row(loadId, schemaName, status,
-      new java.sql.Timestamp(System.currentTimeMillis()), currentSchemaHash.orNull)
-    val df = spark.createDataFrame(List(row).asJava, LoadsSchema)
-    writeInternal(LoadsTable, df, WriteConfig(retryUnitMs = 10,
+  def recordLoad(loadId: String, status: Long): Unit =
+    writeInternal(LoadsTable, LoadsSchema, WriteConfig(retryUnitMs = 10,
       requiredColumns = Set("load_id", "status", "inserted_at"),
       // load_ids are random: min/max stats can't prune a ledger probe,
       // the per-file bloom can (see GraftTable.readPointLookup)
-      bloomColumns = Seq("load_id")), loadId)
-  }
+      bloomColumns = Seq("load_id")), loadId) { now =>
+      Row(loadId, schemaName, status, now, currentSchemaHash.orNull)
+    }
 
+  /** Point lookup (J4, destination_client.py:1139-1150): the ledger's
+    * per-file blooms (random UUIDs defeat min/max range stats) keep no file
+    * for an unseen id, answered from metadata alone; otherwise the kept
+    * files are scanned with the equality filter pushed down. */
   def loadRecordExists(loadId: String): Boolean =
     catalog.tableExists(namespace, LoadsTable) && {
-      // point lookup prunes to matching files via per-file blooms (random
-      // UUIDs defeat min/max range stats), then parquet row-group filters
-      // (J4, destination_client.py:1139-1150)
-      !catalog.loadTable(namespace, LoadsTable)
-        .readPointLookup("load_id", loadId).limit(1).isEmpty
+      val t = catalog.loadTable(namespace, LoadsTable)
+      graft.catalog.StatsPrune.files(t.metadata,
+        Seq(org.apache.spark.sql.sources.EqualTo("load_id", loadId))).nonEmpty &&
+        !t.readPointLookup("load_id", loadId).limit(1).isEmpty
     }
 
   def loads(): DataFrame =
@@ -172,12 +174,11 @@ final class GraftPipeline(
       else catalog.loadTable(namespace, VersionTable).read()
         .filter(col("schema_name") === schemaName)
         .agg(coalesce(max(col("version")), lit(0L))).collect()(0).getLong(0) + 1L
-    val row = Row(hash, schemaName, nextVersion, EngineVersion,
-      new java.sql.Timestamp(System.currentTimeMillis()), schemaJson)
-    val df = spark.createDataFrame(List(row).asJava, VersionSchema)
-    writeInternal(VersionTable, df, WriteConfig(retryUnitMs = 10,
+    writeInternal(VersionTable, VersionSchema, WriteConfig(retryUnitMs = 10,
       requiredColumns = VersionSchema.fieldNames.toSet),
-      java.util.UUID.randomUUID().toString)
+      java.util.UUID.randomUUID().toString) { now =>
+      Row(hash, schemaName, nextVersion, EngineVersion, now, schemaJson)
+    }
     true
   }
 
@@ -234,10 +235,9 @@ final class GraftPipeline(
 
   def storeState(state: String, loadId: String): Unit = {
     val version = getStoredState.map(_.getAs[Long]("version") + 1L).getOrElse(1L)
-    val row = Row(version, EngineVersion, pipelineName, state,
-      new java.sql.Timestamp(System.currentTimeMillis()), sha256Hex(state), loadId)
-    val df = spark.createDataFrame(List(row).asJava, StateSchema)
-    writeInternal(StateTable, df, WriteConfig(retryUnitMs = 10), loadId)
+    writeInternal(StateTable, StateSchema, WriteConfig(retryUnitMs = 10), loadId) { now =>
+      Row(version, EngineVersion, pipelineName, state, now, sha256Hex(state), loadId)
+    }
   }
 
   /** Latest state row by created_at for this pipeline (A2). */
@@ -266,21 +266,41 @@ object InternalTimestamps {
     GraftPipeline.LoadsTable -> Seq("inserted_at"),
     GraftPipeline.VersionTable -> Seq("inserted_at"))
 
+  /** `schema` with each internal timestamp column in the live table's
+    * flavor (`targetSchema`), or aware when the table is new. */
+  def normalize(tableName: String, schema: StructType,
+      targetSchema: Option[StructType]): StructType =
+    InternalColumns.get(tableName).fold(schema) { cols =>
+      StructType(schema.fields.map {
+        case f if cols.contains(f.name) &&
+            (f.dataType == TimestampType || f.dataType == TimestampNTZType) =>
+          f.copy(dataType = targetSchema.flatMap(_.fields.find(_.name == f.name))
+            .map(_.dataType).filter(t =>
+              t == TimestampType || t == TimestampNTZType)
+            .getOrElse(TimestampType))
+        case f => f
+      })
+    }
+
+  /** [[normalize]] applied to a batch: flavor changes are casts. */
   def normalize(tableName: String, df: DataFrame,
       targetSchema: Option[StructType] = None): DataFrame =
-    InternalColumns.get(tableName).fold(df) { cols =>
-      cols.foldLeft(df) { (d, name) =>
-        d.schema.fields.find(_.name == name) match {
-          case Some(f) if f.dataType == TimestampType || f.dataType == TimestampNTZType =>
-            val target = targetSchema.flatMap(_.fields.find(_.name == name))
-              .map(_.dataType).filter(t =>
-                t == TimestampType || t == TimestampNTZType)
-              .getOrElse(TimestampType)
-            if (f.dataType == target) d else d.withColumn(name, col(name).cast(target))
-          case _ => d
-        }
+    normalize(tableName, df.schema, targetSchema).fields
+      .zip(df.schema.fields).foldLeft(df) { case (d, (to, from)) =>
+        if (to.dataType == from.dataType) d
+        else d.withColumn(to.name, col(to.name).cast(to.dataType))
       }
-    }
+
+  /** The current time as a value of `dt`: an instant when aware, the
+    * session time zone's wall clock when naive — what casting the instant
+    * to TIMESTAMP_NTZ gives. */
+  def now(dt: org.apache.spark.sql.types.DataType): Any = {
+    val instant = new java.sql.Timestamp(System.currentTimeMillis())
+    if (dt == TimestampNTZType)
+      java.time.LocalDateTime.ofInstant(instant.toInstant, java.time.ZoneId.of(
+        org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone))
+    else instant
+  }
 }
 
 object GraftPipeline {

@@ -101,38 +101,8 @@ final class GraftWriter(catalog: GraftCatalog) {
       disposition: Disposition, cfg: WriteConfig = WriteConfig(),
       loadId: String = java.util.UUID.randomUUID().toString): GraftTable = {
     require(batches.nonEmpty, "no batches to write")
-
-    val incomingSchema = GraftWriter.incomingSchema(batches.head, cfg)
-    val exists = catalog.tableExists(ns, name)
-    var created = false
-    val t =
-      if (!exists) {
-        val spec = Transforms.buildSpec(cfg.partitions, incomingSchema)
-        // bloom columns persist as a table property so EVERY writer of
-        // this table — later loads, compaction — keeps rebuilding the
-        // membership stats (a compacted file without its bloom silently
-        // degrades point lookups back to full scans)
-        val props =
-          (if (cfg.bloomColumns.isEmpty) Map.empty[String, String]
-           else Map(GraftWriter.BloomColumnsProperty ->
-             cfg.bloomColumns.mkString(","))) ++
-          (if (cfg.sketchColumns.isEmpty) Map.empty[String, String]
-           else Map(GraftWriter.SketchColumnsProperty ->
-             cfg.sketchColumns.mkString(",")))
-        try {
-          val nt = catalog.createTable(ns, name, incomingSchema, spec,
-            props, cfg.location)
-          created = true
-          nt
-        } catch {
-          // two writers racing the FIRST load of a shared table: create
-          // is CAS on v1.metadata.json, so exactly one wins — the loser
-          // proceeds against the winner's table exactly as if it had
-          // existed all along (evolution + CAS-retried commit)
-          case _: graft.catalog.TableAlreadyExistsError =>
-            catalog.loadTable(ns, name)
-        }
-      } else catalog.loadTable(ns, name)
+    val (t, created) = createOrLoad(ns, name,
+      GraftWriter.incomingSchema(batches.head.schema, cfg), cfg)
     // on a replay the schema already evolved: `m0` is the metadata
     // evolveThenCast reads anyway
     val (m0, combined) = evolveThenCast(t, batches, cfg, evolve = !created)
@@ -151,6 +121,72 @@ final class GraftWriter(catalog: GraftCatalog) {
     t
   }
 
+  /** Append driver-held rows (the pipeline's `_dlt_*` bookkeeping) as one
+    * snapshot without a Spark job or a Catalyst plan: the table is created
+    * or evolved as for [[writeTable]], the load id is the same idempotence
+    * key, the rows are laid out in the table schema on the driver
+    * ([[SafeCast.rows]]) and staged as one file by [[Stager.stageRows]].
+    * `rows` are typed by `schema`; the table must be unpartitioned and
+    * keep no distinct sketches. */
+  def appendRows(ns: String, name: String, rows: Seq[org.apache.spark.sql.Row],
+      schema: StructType, cfg: WriteConfig, loadId: String): GraftTable = {
+    val incoming = GraftWriter.incomingSchema(schema, cfg)
+    val (t, created) = createOrLoad(ns, name, incoming, cfg)
+    val m = evolveTo(t, incoming, cfg, evolve = !created)
+    if (m.snapshots.exists(_.loadId.contains(loadId))) return t
+    if (m.partitionSpec.nonEmpty || GraftWriter.sketchColumns(m, cfg).nonEmpty)
+      throw new ValidationError(s"${m.identifier}: driver-side appends need an " +
+        "unpartitioned table without sketch columns")
+    val staged = Stager.stageRows(spark,
+      SafeCast.rows(rows, schema, m.schema, cfg.strictCasting), m.schema,
+      t.dataDir, loadId, GraftWriter.bloomColumns(m, cfg))
+    commitStagedAppend(t, staged, loadId, cfg)
+    t
+  }
+
+  /** The table to write, created from `incoming` when missing; true when
+    * this call created it. */
+  private def createOrLoad(ns: String, name: String, incoming: StructType,
+      cfg: WriteConfig): (GraftTable, Boolean) =
+    if (catalog.tableExists(ns, name)) (catalog.loadTable(ns, name), false)
+    else {
+      val spec = Transforms.buildSpec(cfg.partitions, incoming)
+      // bloom columns persist as a table property so EVERY writer of
+      // this table — later loads, compaction — keeps rebuilding the
+      // membership stats (a compacted file without its bloom silently
+      // degrades point lookups back to full scans)
+      val props =
+        (if (cfg.bloomColumns.isEmpty) Map.empty[String, String]
+         else Map(GraftWriter.BloomColumnsProperty ->
+           cfg.bloomColumns.mkString(","))) ++
+        (if (cfg.sketchColumns.isEmpty) Map.empty[String, String]
+         else Map(GraftWriter.SketchColumnsProperty ->
+           cfg.sketchColumns.mkString(",")))
+      try (catalog.createTable(ns, name, incoming, spec, props, cfg.location), true)
+      catch {
+        // two writers racing the FIRST load of a shared table: create
+        // is CAS on v1.metadata.json, so exactly one wins — the loser
+        // proceeds against the winner's table exactly as if it had
+        // existed all along (evolution + CAS-retried commit)
+        case _: graft.catalog.TableAlreadyExistsError =>
+          (catalog.loadTable(ns, name), false)
+      }
+    }
+
+  /** Schema evolution (destination_client.py:1341-1367): the table schema
+    * evolves to admit `incoming` (C8). Returns the metadata after it — the
+    * one read, unless evolution committed. */
+  private def evolveTo(t: GraftTable, incoming: StructType, cfg: WriteConfig,
+      evolve: Boolean): TableMetadata = {
+    val m = t.metadata
+    if (!evolve) return m
+    val evo = SchemaEvolution.evolve(m.schema, incoming, cfg.allowColumnDrops)
+    if (evo.evolved)
+      t.commit(_.withSchema(evo.schema), cfg.maxRetries, cfg.backoffBase,
+        cfg.retryUnitMs)
+    else m
+  }
+
   /** Schema evolution, then cast (destination_client.py:1341-1367): the
     * table schema evolves to admit the batches' normalized schema (C8),
     * then every batch is cast to the table schema (C4-C5) and the casts
@@ -158,14 +194,8 @@ final class GraftWriter(catalog: GraftCatalog) {
     * the cast was made against. */
   private def evolveThenCast(t: GraftTable, batches: Seq[DataFrame],
       cfg: WriteConfig, evolve: Boolean = true): (TableMetadata, DataFrame) = {
-    if (evolve) {
-      val evo = SchemaEvolution.evolve(t.metadata.schema,
-        GraftWriter.incomingSchema(batches.head, cfg), cfg.allowColumnDrops)
-      if (evo.evolved)
-        t.commit(_.withSchema(evo.schema), cfg.maxRetries, cfg.backoffBase,
-          cfg.retryUnitMs)
-    }
-    val m = t.metadata
+    val m = evolveTo(t, GraftWriter.incomingSchema(batches.head.schema, cfg),
+      cfg, evolve)
     (m, batches.map(SafeCast(_, m.schema, cfg.strictCasting))
       .reduce(_ unionByName _))
   }
@@ -177,6 +207,11 @@ final class GraftWriter(catalog: GraftCatalog) {
       sketchColumns = GraftWriter.sketchColumns(m, cfg),
       maxRecordsPerFile = cfg.maxRecordsPerFile,
       sortBy = GraftWriter.tableSortOrder(m))
+    commitStagedAppend(t, staged, loadId, cfg)
+  }
+
+  private def commitStagedAppend(t: GraftTable, staged: Seq[DataFile],
+      loadId: String, cfg: WriteConfig): Unit = {
     // delta commit: parent manifests carry by identity — zero manifest
     // body reads even on a cold JVM (the cost every load pays)
     t.commit(fresh => fresh.withSnapshotDelta("append", Some(loadId),
@@ -741,6 +776,9 @@ final class GraftWriter(catalog: GraftCatalog) {
           keysCached.select(col(pks.head)).distinct().collect()
         }.map(_.get(0)).filter(_ != null).toSeq)
 
+      // this attempt's restage: an attempt that loses the CAS deletes it
+      // before the retry restages (`stagedNew` serves every attempt)
+      var attempt = Seq.empty[DataFile]
       graft.JobDesc(spark, s"graft.merge:rewrite $loadId") {
       t.commit({ fresh =>
         // one StatsPrune question: files overlapping the batch range on
@@ -784,12 +822,14 @@ final class GraftWriter(catalog: GraftCatalog) {
               clusterBy, GraftWriter.bloomColumns(fresh, cfg),
               GraftWriter.sketchColumns(fresh, cfg), cfg.maxRecordsPerFile)
           }
+        attempt = rewritten
 
         // delta commit: only manifests whose path-bloom hits an affected
         // path are opened; untouched manifests carry by identity
         fresh.withSnapshotDelta(op, Some(loadId), rewritten ++ stagedNew,
           affectedPaths)
-      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
+      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs,
+        onLostCas = () => TableMetadata.discardStaged(t, attempt.map(_.path)))
       }
     } finally keysCached.unpersist()
   }
@@ -834,8 +874,8 @@ object GraftWriter {
 
   /** A batch's schema as the table would declare it: normalized, and
     * nullable except for the configured required columns. */
-  private def incomingSchema(batch: DataFrame, cfg: WriteConfig): StructType =
-    StructType(TypeLattice.normalize(batch.schema).fields.map(f =>
+  private def incomingSchema(batch: StructType, cfg: WriteConfig): StructType =
+    StructType(TypeLattice.normalize(batch).fields.map(f =>
       f.copy(nullable = !cfg.requiredColumns.contains(f.name))))
 
   /** Key-batch size above which the merge path skips the driver-side

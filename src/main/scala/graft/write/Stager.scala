@@ -271,6 +271,36 @@ object Stager {
     }
   }
 
+  /** Driver-held rows (the pipeline's `_dlt_*` bookkeeping) staged as ONE
+    * parquet file in the same per-call layout as [[stage]]
+    * (`dataDir/<loadId>-<uuid8>/part-…parquet`), with no Spark job: the
+    * file goes through Spark's own parquet writer on this thread (int64
+    * TIMESTAMP_MICROS set for this write only), stats fold from its footer
+    * ([[FooterStats]]) and each bloom column's [[KeyBloom]] is built from
+    * the rows with the driver mirror the probe side hashes with. `rows`
+    * are catalyst rows in `schema`'s layout; the table must be
+    * unpartitioned (one file cannot keep the value-exact layout). */
+  def stageRows(spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow], schema: StructType,
+      dataDir: Path, loadId: String, bloomColumns: Seq[String] = Nil): Seq[DataFile] = {
+    if (rows.isEmpty) return Nil
+    val dest = dataDir.resolve(s"$loadId-${java.util.UUID.randomUUID().toString.take(8)}")
+    val file = org.apache.spark.sql.classic.GraftSqlShims.writeParquetFile(spark,
+      dest.toString, schema, rows.iterator, Map(TsKey -> "TIMESTAMP_MICROS"))
+    FooterStats.collect(Seq(file), schema).map { f =>
+      f.copy(stats = bloomColumns.filter(c => schema.fieldNames.contains(c) &&
+          graft.catalog.KeyBloom.supportsBloom(schema(c).dataType))
+        .foldLeft(f.stats) { (st, c) =>
+          val i = schema.fieldIndex(c)
+          val dt = schema(c).dataType
+          val bloom = graft.catalog.KeyBloom.build(rows.iterator
+            .filterNot(_.isNullAt(i)).map(r => canonicalKey(dt, r.get(i, dt))).toSeq)
+          st.updated(c, st.getOrElse(c, ColumnStats(None, None, None))
+            .copy(bloom = Some(bloom)))
+        })
+    }
+  }
+
   /** Types Spark's `hll_sketch_agg` accepts. */
   def supportsSketch(dt: org.apache.spark.sql.types.DataType): Boolean =
     dt match {

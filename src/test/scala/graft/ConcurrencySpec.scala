@@ -264,4 +264,30 @@ class ConcurrencySpec extends AnyFunSuite {
       }
     } finally server.stop()
   }
+
+  test("a copy-on-write upsert that loses the CAS deletes its restage before the retry") {
+    val cat = freshCatalog()
+    val w = new GraftWriter(cat)
+    val pk = cfg.copy(primaryKey = Seq("id"))
+    w.writeTable("main", "t", Seq((1L to 10L).map(i => (i, s"v$i")).toDF("id", "v")),
+      Merge("upsert"), pk, "l1")
+    val t = cat.loadTable("main", "t")
+    // a concurrent append lands between the upsert's rewrite and its CAS:
+    // the first attempt loses, restages against the new state and commits
+    var landed = false
+    GraftTable.beforeCas.put(t.dir, () => {
+      w.writeTable("main", "t", Seq(Seq((100L, "c")).toDF("id", "v")),
+        Append, cfg, "l-concurrent")
+      landed = true
+    })
+    w.writeTable("main", "t", Seq(Seq((3L, "u3"), (11L, "u11")).toDF("id", "v")),
+      Merge("upsert"), pk, "l2")
+    assert(landed && !GraftTable.beforeCas.containsKey(t.dir))
+    assert(t.metadata.snapshots.flatMap(_.loadId) == Seq("l1", "l-concurrent", "l2"))
+    val expected = ((1L to 10L).map(i => i -> s"v$i").toMap ++
+      Map(3L -> "u3", 11L -> "u11", 100L -> "c")).toSeq.sorted
+    assert(t.read().collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted ==
+      expected)
+    assert(Maintenance.vacuumOrphans(t, 0).isEmpty)
+  }
 }
