@@ -134,6 +134,11 @@ final class GraftCatalog(val spark: SparkSession, warehouse: String) {
   def tableExists(ns: String, table: String): Boolean =
     new GraftTable(spark, tableLocation(ns, table)).currentVersion >= 1
 
+  /** True when `table` exists and already carries `loadId`
+    * ([[TableMetadata.hasLoad]]). */
+  def hasLoad(ns: String, table: String, loadId: String): Boolean =
+    tableExists(ns, table) && loadTable(ns, table).metadata.hasLoad(loadId)
+
   def listTables(ns: String): Seq[String] =
     PathIO.list(nsDir(ns))
       .map(_.getFileName.toString)

@@ -8,10 +8,10 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, DeltaBatchWrite, DeltaWrite, DeltaWriteBuilder, DeltaWriter, DeltaWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, RowLevelOperation, SupportsDelta, Write, WriteBuilder, WriterCommitMessage}
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
+import graft.write.{FileStatsFold, FooterStats}
 
 /** SQL `UPDATE` / `MERGE INTO` through the V2 catalog — the group-based
   * (copy-on-write) row-level operation protocol. Spark rewrites the DML
@@ -19,8 +19,9 @@ import org.apache.spark.util.SerializableConfiguration
   * pinned snapshot followed by a `ReplaceData` write of the post-DML row
   * set; this class supplies the executor-side write: each task streams
   * its partition into ONE staged parquet file (Spark's own codegen'd
-  * parquet writer — no per-row driver involvement), and commit folds
-  * footer stats and swaps the SCANNED file set for the staged one
+  * parquet writer — no per-row driver involvement) and folds the file's
+  * derived, bloom and sketch stats as it writes ([[graft.write.FileStatsFold]]);
+  * commit adds the footer stats and swaps the SCANNED file set for the staged one
   * through the snapshot CAS protocol. The reference reaches the same end
   * state via PyIceberg upsert (`destination_client.py:1437-1469`) with
   * delete-expression pushdown narrowing the rewrite
@@ -95,8 +96,8 @@ final class GraftRowLevelOperation(
 }
 
 /** Per-task result: the staged file (empty string when the task saw no
-  * rows and wrote nothing) and its row count. */
-final case class GraftWriteMessage(path: String, rows: Long)
+  * rows and wrote nothing) and its fold. */
+final case class GraftWriteMessage(path: String, file: FileStatsFold.Folded)
   extends WriterCommitMessage
 
 final class GraftReplaceBatchWrite(
@@ -122,26 +123,15 @@ final class GraftReplaceBatchWrite(
   }
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    val spark = SparkSession.active
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    // ParquetFileFormat.prepareWrite wires the session's parquet output
-    // conf (codec, legacy format, timestamp type, rebase modes) into the
-    // job conf and returns the serializable writer factory Spark's own
-    // file sink uses — the executor-side writer is exactly the codegen'd
-    // ParquetOutputWriter, not a re-implementation
-    val owf = new ParquetFileFormat()
-      .prepareWrite(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-        job, Map.empty, schema)
-    new GraftDataWriterFactory(owf,
-      new SerializableConfiguration(job.getConfiguration), schema,
-      writeSchema, destDir.toString)
-  }
+      info: PhysicalWriteInfo): DataWriterFactory =
+    new GraftDataWriterFactory(StagedFile.Spec(SparkSession.active, schema,
+      FileStatsFold.forTable(SparkSession.active, table.metadata, schema),
+      destDir.toString), writeSchema)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val all = messages.collect { case m: GraftWriteMessage => m }
-    val staged = all.filter(m => m.rows > 0 && m.path.nonEmpty)
-    val files = staged.map(_.path).sorted.toSeq
+    val staged = messages.collect {
+      case m: GraftWriteMessage if m.file.rows > 0 && m.path.nonEmpty => m.path -> m.file
+    }.toMap
     // the replaced set = what the operation scan ACTUALLY read (the
     // written rows are its output): the full planned set on the V1
     // fallback, the statically+runtime narrowed group set otherwise.
@@ -157,16 +147,9 @@ final class GraftReplaceBatchWrite(
       case Some(st) => st.scannedPaths.getOrElse(Set.empty[String])
       case None => plannedPaths
     }
-    if (files.isEmpty && replaced.isEmpty) return // zero matched groups
+    if (staged.isEmpty && replaced.isEmpty) return // zero matched groups
     val t = table
-    val spec = t.metadata.partitionSpec
-    // partitioned tables need stats over DERIVED transform values (one
-    // column-pruned scan); unpartitioned fold straight from footers
-    val dataFiles =
-      if (files.isEmpty) Nil
-      else if (spec.isEmpty) graft.write.FooterStats.collect(files, schema)
-      else graft.write.Stager.collectStats(
-        SparkSession.active, files, schema, spec)
+    val dataFiles = StagedFile.dataFiles(staged, schema)
     t.commit({ fresh =>
       fresh.requireNotSuperseded(s"SQL $op", plannedPaths, identical = true,
         Some(plannedDeletePaths))
@@ -187,33 +170,73 @@ final class GraftReplaceBatchWrite(
   }
 }
 
-/** Ships the parquet writer factory + job conf to executors; each task
-  * writes at most one file (created lazily, so empty partitions emit
-  * nothing). */
+/** One task's staged parquet file, created on its first row (so empty
+  * partitions emit nothing) and folded as it is written. The name carries
+  * the task id, keeping speculative/retried attempts distinct; the commit
+  * coordinator admits exactly one message per partition. */
+private[catalog] final class StagedFile(spec: StagedFile.Spec, partitionId: Int,
+    taskId: Long) {
+  private var writer: OutputWriter = null
+  private val acc = spec.fold.open()
+  var path: String = ""
+
+  def write(row: InternalRow): Unit = {
+    if (writer == null) {
+      val ctx = new TaskAttemptContextImpl(spec.conf.value,
+        new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP,
+          partitionId), (taskId % Int.MaxValue).toInt))
+      path = s"${spec.dir}/part-$partitionId-$taskId${spec.owf.getFileExtension(ctx)}"
+      writer = spec.owf.newInstance(path, spec.schema, ctx)
+    }
+    writer.write(row)
+    acc.add(row)
+  }
+  def close(): Unit = if (writer != null) writer.close()
+  def result: FileStatsFold.Folded = acc.result
+  def abort(): Unit = {
+    close()
+    if (path.nonEmpty) java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
+  }
+}
+
+private[catalog] object StagedFile {
+  /** What executors need to stage files of `schema` under `dir`: Spark's
+    * parquet writer factory (`prepareWrite` wires the parquet output conf
+    * into the job conf; timestamps as int64 micros) and its job conf, and
+    * the fold. */
+  final class Spec(val owf: OutputWriterFactory, val conf: SerializableConfiguration,
+      val schema: StructType, val fold: FileStatsFold, val dir: String) extends Serializable
+
+  object Spec {
+    def apply(spark: SparkSession, schema: StructType, fold: FileStatsFold,
+        dir: String): Spec = {
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val owf = new org.apache.spark.sql.classic.GraftSqlShims.MicrosParquetFormat()
+        .prepareWrite(spark, job, Map.empty, schema)
+      new Spec(owf, new SerializableConfiguration(job.getConfiguration), schema, fold, dir)
+    }
+  }
+
+  /** The staged files (path → fold) as `DataFile`s: footer stats
+    * completed with each file's fold, in path order. */
+  def dataFiles(staged: Map[String, FileStatsFold.Folded], schema: StructType): Seq[DataFile] =
+    FooterStats.collect(staged.keys.toSeq.sorted, schema,
+      SparkSession.active.sessionState.newHadoopConf())
+      .map(f => FileStatsFold.complete(f, staged(f.path)))
+}
+
+/** Ships the staged-file spec to executors; each task writes at most one
+  * file. */
 final class GraftDataWriterFactory(
-    owf: OutputWriterFactory,
-    conf: SerializableConfiguration,
-    schema: StructType,
-    writeSchema: StructType,
-    destDir: String) extends DataWriterFactory {
+    spec: StagedFile.Spec,
+    writeSchema: StructType) extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new DataWriter[InternalRow] {
-      private var writer: OutputWriter = null
-      private var path: String = ""
-      private var rows = 0L
+      private val schema = spec.schema
+      private val file = new StagedFile(spec, partitionId, taskId)
       private var proj: org.apache.spark.sql.catalyst.ProjectingInternalRow = null
       private var checkedShape = false
-
-      private def open(): Unit = {
-        val ctx = new TaskAttemptContextImpl(conf.value,
-          new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP,
-            partitionId), (taskId % Int.MaxValue).toInt))
-        // taskId in the name keeps speculative/retried attempts distinct;
-        // the commit coordinator admits exactly one message per partition
-        path = s"$destDir/part-$partitionId-$taskId${owf.getFileExtension(ctx)}"
-        writer = owf.newInstance(path, schema, ctx)
-      }
 
       /** Table-column ordinals in the arriving rows, derived BY NAME from
         * the declared write schema when the arity matches it; the one
@@ -239,24 +262,17 @@ final class GraftDataWriterFactory(
       }
 
       override def write(row: InternalRow): Unit = {
-        if (writer == null) open()
         if (!checkedShape) { checkedShape = true; resolveLayout(row.numFields) }
-        if (proj == null) writer.write(row)
-        else { proj.project(row); writer.write(proj) }
-        rows += 1
+        if (proj == null) file.write(row)
+        else { proj.project(row); file.write(proj) }
       }
 
       override def commit(): WriterCommitMessage = {
-        if (writer != null) writer.close()
-        GraftWriteMessage(path, rows)
+        file.close()
+        GraftWriteMessage(file.path, file.result)
       }
 
-      override def abort(): Unit = {
-        if (writer != null) {
-          writer.close()
-          java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
-        }
-      }
+      override def abort(): Unit = file.abort()
 
       override def close(): Unit = ()
     }
@@ -310,8 +326,8 @@ final class GraftDeltaOperation(
 }
 
 final case class GraftDeltaMessage(
-    dataPath: String, dataRows: Long,
-    delPath: String, delRows: Long) extends WriterCommitMessage
+    dataPath: String, data: FileStatsFold.Folded,
+    delPath: String, del: FileStatsFold.Folded) extends WriterCommitMessage
 
 final class GraftDeltaBatchWrite(
     ns: String,
@@ -347,38 +363,22 @@ final class GraftDeltaBatchWrite(
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory = {
     val spark = SparkSession.active
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val dataJob = Job.getInstance(spark.sessionState.newHadoopConf())
-    val dataOwf = new ParquetFileFormat().prepareWrite(spark, dataJob, Map.empty, schema)
-    val keyJob = Job.getInstance(spark.sessionState.newHadoopConf())
-    val keyOwf = new ParquetFileFormat().prepareWrite(spark, keyJob, Map.empty, keySchema)
     new GraftDeltaWriterFactory(
-      dataOwf, new SerializableConfiguration(dataJob.getConfiguration), schema,
-      dataDir.toString,
-      keyOwf, new SerializableConfiguration(keyJob.getConfiguration), keySchema,
-      delDir.toString)
+      StagedFile.Spec(spark, schema,
+        FileStatsFold.forTable(spark, table.metadata, schema), dataDir.toString),
+      StagedFile.Spec(spark, keySchema, FileStatsFold(spark, keySchema),
+        delDir.toString))
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val all = messages.collect { case m: GraftDeltaMessage => m }
     val t = table
-    val spec = t.metadata.partitionSpec
-    val dataFiles = {
-      val fs = all.filter(m => m.dataRows > 0 && m.dataPath.nonEmpty)
-        .map(_.dataPath).sorted.toSeq
-      if (fs.isEmpty) Nil
-      // partitioned tables need stats over DERIVED transform values so
-      // the new files stay prunable (same rule as the CoW path)
-      else if (spec.isEmpty) graft.write.FooterStats.collect(fs, schema)
-      else graft.write.Stager.collectStats(SparkSession.active, fs, schema, spec)
-    }
-    val delFiles = {
-      val fs = all.filter(m => m.delRows > 0 && m.delPath.nonEmpty)
-        .map(_.delPath).sorted.toSeq
-      if (fs.isEmpty) Nil
-      else graft.write.FooterStats.collect(fs, keySchema)
-        .map(f => DeleteFile(f.path, pk, f.rowCount, 0L, f.stats))
-    }
+    val dataFiles = StagedFile.dataFiles(all.collect {
+      case m if m.data.rows > 0 && m.dataPath.nonEmpty => m.dataPath -> m.data
+    }.toMap, schema)
+    val delFiles = StagedFile.dataFiles(all.collect {
+      case m if m.del.rows > 0 && m.delPath.nonEmpty => m.delPath -> m.del
+    }.toMap, keySchema).map(f => DeleteFile(f.path, pk, f.rowCount, 0L, f.stats))
     if (dataFiles.isEmpty && delFiles.isEmpty) return
     // O(delta) commit, same shape as morCommit: no parent file is read
     // or rewritten; sequence fencing makes the delete keys apply only to
@@ -410,57 +410,27 @@ final class GraftDeltaBatchWrite(
 }
 
 final class GraftDeltaWriterFactory(
-    dataOwf: OutputWriterFactory, dataConf: SerializableConfiguration,
-    dataSchema: StructType, dataDir: String,
-    keyOwf: OutputWriterFactory, keyConf: SerializableConfiguration,
-    keySchema: StructType, delDir: String) extends DeltaWriterFactory {
-
-  private final class LazyFile(owf: OutputWriterFactory,
-      conf: SerializableConfiguration, schema: StructType, dir: String,
-      partitionId: Int, taskId: Long) {
-    private var writer: OutputWriter = null
-    var path: String = ""
-    var rows = 0L
-    def write(row: InternalRow): Unit = {
-      if (writer == null) {
-        val ctx = new TaskAttemptContextImpl(conf.value,
-          new TaskAttemptID(new TaskID(new JobID("graft", 0), TaskType.MAP,
-            partitionId), (taskId % Int.MaxValue).toInt))
-        path = s"$dir/part-$partitionId-$taskId${owf.getFileExtension(ctx)}"
-        writer = owf.newInstance(path, schema, ctx)
-      }
-      writer.write(row)
-      rows += 1
-    }
-    def close(): Unit = if (writer != null) writer.close()
-    def abort(): Unit = {
-      close()
-      if (path.nonEmpty)
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
-    }
-  }
+    data: StagedFile.Spec, keys: StagedFile.Spec) extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new DeltaWriter[InternalRow] {
-      private val data =
-        new LazyFile(dataOwf, dataConf, dataSchema, dataDir, partitionId, taskId)
-      private val keys =
-        new LazyFile(keyOwf, keyConf, keySchema, delDir, partitionId, taskId)
+      private val dataFile = new StagedFile(data, partitionId, taskId)
+      private val keyFile = new StagedFile(keys, partitionId, taskId)
 
       override def delete(meta: InternalRow, id: InternalRow): Unit =
-        keys.write(id)
-      override def insert(row: InternalRow): Unit = data.write(row)
+        keyFile.write(id)
+      override def insert(row: InternalRow): Unit = dataFile.write(row)
       override def update(meta: InternalRow, id: InternalRow,
           row: InternalRow): Unit = {
         // not reached with representUpdateAsDeleteAndInsert=true, but
         // the semantics are identical either way
-        keys.write(id); data.write(row)
+        keyFile.write(id); dataFile.write(row)
       }
       override def commit(): WriterCommitMessage = {
-        data.close(); keys.close()
-        GraftDeltaMessage(data.path, data.rows, keys.path, keys.rows)
+        dataFile.close(); keyFile.close()
+        GraftDeltaMessage(dataFile.path, dataFile.result, keyFile.path, keyFile.result)
       }
-      override def abort(): Unit = { data.abort(); keys.abort() }
+      override def abort(): Unit = { dataFile.abort(); keyFile.abort() }
       override def close(): Unit = ()
     }
 }

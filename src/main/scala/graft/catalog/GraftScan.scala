@@ -334,7 +334,7 @@ object GraftScan {
       Set("identity", "bucket", "year", "month", "day", "hour", "truncate")
     if (!spec.forall(s => supported.contains(s.transform))) return None
     // derived stat type per transform — must agree with the canonical
-    // stat encoding (TableMetadata.statTypeOf / Stager.statColumn)
+    // stat encoding (TableMetadata.statTypeOf / FileStatsFold)
     val fieldTypes: Seq[DataType] = spec.map { s =>
       s.transform match {
         case "bucket" | "year" => IntegerType
@@ -448,7 +448,7 @@ object GraftScan {
   }
 
   /** Canonical stat string → catalyst internal value (the encoding
-    * [[graft.write.Stager.statColumn]] wrote: epoch-day ints for dates,
+    * [[graft.write.FileStatsFold]] wrote: epoch-day ints for dates,
     * epoch-micros longs for timestamps). */
   private def decodeValue(dt: DataType, s: String): Option[Any] =
     try dt match {

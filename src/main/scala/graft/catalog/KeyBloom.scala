@@ -2,8 +2,6 @@ package graft.catalog
 
 import java.nio.ByteBuffer
 import java.util.Base64
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,30 +17,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * false-positive rate (1-e^(-4n/1024))^4: <1e-4 at n=20 keys/file,
   * ~0.024 at n=100.
   *
-  * Both sides hash the key's canonical string with Spark's `xxhash64`
-  * fold: h1 = xxhash64(s) (seed 42), h2 = xxhash64(s, 1L) = H(1L, h1);
-  * bit position i = (h1 + i·h2) mod 1024, computed on residues mod 1024
-  * so the arithmetic never overflows under ANSI mode.
+  * Both sides hash the key's canonical string (`Stager.canonicalKey`)
+  * with Spark's `xxhash64` fold: h1 = xxhash64(s) (seed 42),
+  * h2 = xxhash64(s, 1L) = H(1L, h1); bit position i = (h1 + i·h2) mod
+  * 1024, computed on residues mod 1024.
   */
 object KeyBloom {
   val NumBits = 1024
   val NumLongs: Int = NumBits / 64 // 16 words
   val NumHashes = 4
 
-  /** Build-side aggregate columns: one `bit_or` word per output column.
-    * `d` must already carry residue columns `__bp_<name>_<i>` from
-    * [[withPositionColumns]]. */
-  def aggColumns(name: String, prefix: String): Seq[Column] =
-    (0 until NumLongs).map { j =>
-      val mask = (0 until NumHashes).map { i =>
-        expr(s"CASE WHEN `__bp_${name}_$i` DIV 64 = $j " +
-          s"THEN shiftleft(1L, CAST(`__bp_${name}_$i` % 64 AS INT)) ELSE 0L END")
-      }.reduce[Column](_.bitwiseOR(_))
-      bit_or(mask).as(s"$prefix$j")
-    }
-
   /** Types whose canonical probe encoding (`Stager.canonicalKey`) is
-    * bit-stable against the build-side expression below. Float/double/
+    * bit-stable between a written value and a probed one. Float/double/
     * decimal/binary are excluded: their Spark `CAST(.. AS STRING)` and JVM
     * `toString` renderings can differ, which would make every probe miss
     * (a SILENT correctness hole for merges — probes that miss skip
@@ -54,40 +40,16 @@ object KeyBloom {
     case _ => false
   }
 
-  /** Build-side canonical string for a bloom column — MUST render the
-    * exact same string `Stager.canonicalKey` produces on the probe side
-    * (epoch-day for dates, epoch-micros for timestamps): hashing the
-    * display cast of `date '2024-01-01'` while probing the epoch-day
-    * string would make every probe miss. */
-  def canonicalExpr(name: String, dt: DataType): Column = dt match {
-    case DateType => datediff(col(name), lit("1970-01-01")).cast("string")
-    case TimestampType => unix_micros(col(name)).cast("string")
-    case _ => col(name).cast("string")
-  }
-
-  /** Add the k bit-position columns for `name` to `d` (row-level, cheap,
-    * fully codegen'd). `dt` is the column's table type, needed to hash the
-    * canonical (probe-side) encoding. */
-  def withPositionColumns(d: org.apache.spark.sql.DataFrame,
-      name: String, dt: DataType): org.apache.spark.sql.DataFrame = {
-    val s = canonicalExpr(name, dt)
-    val p1 = pmod(xxhash64(s), lit(NumBits.toLong))
-    val p2 = pmod(xxhash64(s, lit(1L)), lit(NumBits.toLong))
-    (0 until NumHashes).foldLeft(d) { (dd, i) =>
-      dd.withColumn(s"__bp_${name}_$i",
-        pmod(p1 + lit(i.toLong) * p2, lit(NumBits.toLong)))
-    }
-  }
-
-  /** Driver-side bloom construction over a small key set (e.g. the file
-    * paths of one manifest — metadata-scale). */
+  /** Bloom over a key set (e.g. the file paths of one manifest —
+    * metadata-scale). */
   def build(keys: Iterable[String]): String = {
     val words = Array.fill(NumLongs)(0L)
     keys.foreach(k => positions(k).foreach(p => words(p / 64) |= (1L << (p % 64))))
     encode(words.toSeq)
   }
 
-  /** Driver-side mirror of the build-side hash fold. */
+  /** The k bit positions of `key`, shared by the build side (the write's
+    * per-file fold) and the probe side. */
   def positions(key: String): Seq[Int] = {
     val u = UTF8String.fromString(key)
     val h1 = XxHash64Function.hash(u, StringType, 42L)

@@ -44,7 +44,7 @@ object MetaAgg {
   }
 
   /** Types whose canonical stat encoding round-trips exactly as an
-    * ORDERED bound (see [[graft.write.Stager.statColumn]]): numerics as
+    * ORDERED bound (see [[graft.write.FooterStats]]): numerics as
     * themselves, dates as epoch-day, timestamps as epoch-micros. */
   private def minMaxSupported(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | FloatType |

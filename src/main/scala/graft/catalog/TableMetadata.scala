@@ -73,12 +73,12 @@ object StatCompare {
   import org.apache.spark.sql.types._
   def compare(dt: DataType, a: String, b: String): Int = dt match {
     // temporal stats are stored as epoch-day / epoch-micros longs
-    // (`Stager.statColumn`) — variable-width, so they must compare
+    // (`FooterStats`, `FileStatsFold`) — variable-width, so they must compare
     // numerically, never lexically
     case ByteType | ShortType | IntegerType | LongType | DateType |
         TimestampType | TimestampNTZType =>
       java.lang.Long.compare(a.toLong, b.toLong)
-    // TIME stats are micros-of-day longs (FooterStats/Stager.statColumn)
+    // TIME stats are micros-of-day longs (FooterStats)
     case _: TimeType => java.lang.Long.compare(a.toLong, b.toLong)
     case FloatType | DoubleType =>
       java.lang.Double.compare(a.toDouble, b.toDouble)
@@ -237,6 +237,10 @@ final case class TableMetadata(
     * time travel. */
   def schemaForSnapshot(s: Snapshot): StructType =
     schemaAt(s.schemaVersionAt.getOrElse(schemaVersion))
+
+  /** True when a snapshot of this table already carries `loadId` — the
+    * idempotence key a replayed load is skipped by. */
+  def hasLoad(loadId: String): Boolean = snapshots.exists(_.loadId.contains(loadId))
 
   def currentSnapshot: Option[Snapshot] =
     currentSnapshotId.flatMap(id => snapshots.find(_.snapshotId == id))

@@ -90,11 +90,7 @@ final class StreamingLoader(catalog: GraftCatalog) {
         // maintenance commit landing after it AND aggressive expiry in
         // that window), the replay cannot be detected — keep expiry
         // retention above restart latency for streaming tables.
-        val alreadyCommitted =
-          catalog.tableExists(ns, table) &&
-            catalog.loadTable(ns, table).metadata.snapshots
-              .exists(_.loadId.contains(loadId))
-        if (!alreadyCommitted) {
+        if (!catalog.hasLoad(ns, table, loadId)) {
           // the commit path runs several actions (emptiness probe, dup
           // check, staging write, stats pass) — without persisting, EACH
           // action re-executes the whole upstream plan including any
@@ -149,10 +145,7 @@ final class StreamingLoader(catalog: GraftCatalog) {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val loadId = s"$queryName-batch-$batchId"
-        val done = catalog.tableExists(ns, pagesTable) &&
-          catalog.loadTable(ns, pagesTable).metadata.snapshots
-            .exists(_.loadId.contains(loadId))
-        if (!done && !batch.isEmpty) {
+        if (!catalog.hasLoad(ns, pagesTable, loadId) && !batch.isEmpty) {
           val winners = batch
             .withColumn("canonical_url",
               graft.llmops.TextOps.canonicalizeUrl(col(urlCol)))
@@ -215,10 +208,7 @@ final class StreamingLoader(catalog: GraftCatalog) {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val loadId = s"$queryName-batch-$batchId"
-        def committed(table: String): Boolean =
-          catalog.tableExists(ns, table) &&
-            catalog.loadTable(ns, table).metadata.snapshots
-              .exists(_.loadId.contains(loadId))
+        def committed(table: String): Boolean = catalog.hasLoad(ns, table, loadId)
         val docsDone = committed(docsTable)
         val sigsDone = committed(sigsTable)
         val bandsDone = committed(bandsTable)
@@ -412,10 +402,7 @@ final class StreamingLoader(catalog: GraftCatalog) {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val loadId = s"$queryName-batch-$batchId"
-        def committed(table: String): Boolean =
-          catalog.tableExists(ns, table) &&
-            catalog.loadTable(ns, table).metadata.snapshots
-              .exists(_.loadId.contains(loadId))
+        def committed(table: String): Boolean = catalog.hasLoad(ns, table, loadId)
         val vecsDone = committed(vecsTable)
         val assignDone = committed(assignTable)
         if (!(vecsDone && assignDone)) {

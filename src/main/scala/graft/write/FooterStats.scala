@@ -16,11 +16,11 @@ import scala.jdk.CollectionConverters._
   *
   * The staged files were just written, so their footers already carry
   * min/max/null-count per row group; folding them is driver-side,
-  * metadata-scale work. This replaces a full second scan of every staged
-  * byte (the previous stats pass) for unpartitioned tables. Values are
-  * canonicalized exactly like `Stager.statColumn`: temporal types as epoch
-  * longs, everything else via plain string form, so pruning comparisons
-  * (`StatsPrune`) are unchanged.
+  * metadata-scale work. What a footer cannot hold (derived partition
+  * values, blooms, sketches) is folded as the rows are written
+  * ([[FileStatsFold]]). Values are canonicalized as the pruner reads them
+  * back (`TableMetadata.statTypeOf`): temporal types as epoch longs,
+  * everything else via plain string form.
   *
   * Parquet may truncate long binary stats to bounded prefixes; prefix
   * bounds stay conservative for range pruning, which is the only consumer
@@ -28,8 +28,11 @@ import scala.jdk.CollectionConverters._
   */
 object FooterStats {
 
-  def collect(files: Seq[String], schema: StructType): Seq[DataFile] = {
-    val conf = new Configuration()
+  /** `conf` is an already-loaded Hadoop configuration (the session's):
+    * a fresh `Configuration` re-parses the default resources on first
+    * use. */
+  def collect(files: Seq[String], schema: StructType,
+      conf: Configuration): Seq[DataFile] = {
     files.map { f =>
       val footer = {
         val in = HadoopInputFile.fromPath(new Path(f), conf)

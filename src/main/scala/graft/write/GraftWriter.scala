@@ -106,7 +106,7 @@ final class GraftWriter(catalog: GraftCatalog) {
     // on a replay the schema already evolved: `m0` is the metadata
     // evolveThenCast reads anyway
     val (m0, combined) = evolveThenCast(t, batches, cfg, evolve = !created)
-    if (m0.snapshots.exists(_.loadId.contains(loadId))) return t
+    if (m0.hasLoad(loadId)) return t
 
     disposition match {
       case Append => commitAppend(t, m0, combined, loadId, cfg)
@@ -133,7 +133,7 @@ final class GraftWriter(catalog: GraftCatalog) {
     val incoming = GraftWriter.incomingSchema(schema, cfg)
     val (t, created) = createOrLoad(ns, name, incoming, cfg)
     val m = evolveTo(t, incoming, cfg, evolve = !created)
-    if (m.snapshots.exists(_.loadId.contains(loadId))) return t
+    if (m.hasLoad(loadId)) return t
     if (m.partitionSpec.nonEmpty || GraftWriter.sketchColumns(m, cfg).nonEmpty)
       throw new ValidationError(s"${m.identifier}: driver-side appends need an " +
         "unpartitioned table without sketch columns")
@@ -334,9 +334,7 @@ final class GraftWriter(catalog: GraftCatalog) {
           // a duplicate entry (content-idempotent but ledger-corrupting)
           if (hasMarker && !hardDeleted.isEmpty) {
             val hdId = loadId + "-hd"
-            val alreadyHd =
-              t.metadata.snapshots.exists(_.loadId.contains(hdId))
-            if (!alreadyHd) {
+            if (!t.metadata.hasLoad(hdId)) {
               val delKeys = hardDeleted.select(pks.map(col): _*).distinct()
               if (cfg.mergeOnRead)
                 morCommit(t, delKeys, pks, Nil, "delete", hdId, cfg)
@@ -743,7 +741,7 @@ final class GraftWriter(catalog: GraftCatalog) {
       // range on ALL key columns. Pruning on the first column alone lets a
       // low-cardinality leading key (e.g. region of a (region, id) PK)
       // select nearly every file and rewrite far too much. Ranges arrive
-      // in CANONICAL stat-string form (Stager.statColumn encoding), per pk,
+      // in CANONICAL stat-string form (FooterStats encoding), per pk,
       // None = an all-null key column (can never equality-match). Callers
       // that staged the key set (the fused upsert) pass footer-derived
       // ranges in and pay zero extra jobs; everyone else pays one agg.
@@ -884,8 +882,8 @@ object GraftWriter {
   val MaxBloomProbeKeys = 64
 
   /** Canonical per-pk [lo, hi] ranges folded from staged key-file footer
-    * stats ([[graft.write.FooterStats]] canonicalizes exactly like
-    * `Stager.statColumn`, so these strings feed `StatsPrune`
+    * stats ([[graft.write.FooterStats]] canonicalizes as the
+    * pruner reads stats back, so these strings feed `StatsPrune`
     * directly). Aligned with `pks`; a pk folds to None when every key
     * value is null (no equality match possible — same contract as the
     * aggregate path's null range). Returns None — caller falls back to

@@ -28,25 +28,68 @@ object GraftSqlShims {
       org.apache.spark.sql.DataFrame =
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 
+  /** Spark's parquet source writing timestamps as int64
+    * TIMESTAMP_MICROS: Spark's default encoding is INT96, which the Iceberg
+    * spec forbids and which carries no footer min/max. Each write clones
+    * the session's SQL conf for its own settings, so the session's conf is
+    * never changed and concurrent writes on one session cannot disturb
+    * each other. */
+  final class MicrosParquetFormat
+      extends org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat {
+    override def prepareWrite(spark: org.apache.spark.sql.SparkSession,
+        job: org.apache.hadoop.mapreduce.Job, options: Map[String, String],
+        dataSchema: org.apache.spark.sql.types.StructType):
+        org.apache.spark.sql.execution.datasources.OutputWriterFactory = {
+      import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
+      val sqlConf = getSqlConf(spark).clone()
+      sqlConf.setConfString(
+        org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
+        "TIMESTAMP_MICROS")
+      ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
+        new ParquetOptions(options, sqlConf))
+    }
+  }
+
+  /** Write `df` as parquet under `dir` through Spark's own file sink
+    * (`FileFormatWriter`, the job `df.write.parquet` runs) with
+    * [[MicrosParquetFormat]], `partitionBy` over `partitionColumns`, the
+    * session's commit protocol, and `tracker` folding each file's rows as
+    * they are written. Runs under its own SQL execution id. */
+  def writeParquet(df: org.apache.spark.sql.DataFrame, dir: String,
+      partitionColumns: Seq[String], maxRecordsPerFile: Long,
+      tracker: org.apache.spark.sql.execution.datasources.WriteJobStatsTracker): Unit = {
+    import org.apache.spark.sql.execution.datasources.FileFormatWriter
+    val ds = df.asInstanceOf[Dataset[_]]
+    val spark = ds.sparkSession
+    val qe = ds.queryExecution
+    val options =
+      if (maxRecordsPerFile > 0) Map("maxRecordsPerFile" -> maxRecordsPerFile.toString)
+      else Map.empty[String, String]
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe) {
+      val plan = qe.executedPlan
+      FileFormatWriter.write(spark, plan, new MicrosParquetFormat,
+        org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+          spark.sessionState.conf.fileCommitProtocolClass,
+          java.util.UUID.randomUUID().toString, dir),
+        FileFormatWriter.OutputSpec(dir, Map.empty, plan.output),
+        spark.sessionState.newHadoopConfWithOptions(options),
+        partitionColumns.map(n => plan.output.find(_.name == n).get),
+        None, Seq(tracker), options)
+    }
+  }
+
   /** Write `rows` as ONE parquet file in `dir` on the calling thread,
     * through the writer a `FileFormatWriter` task runs
-    * (`ParquetUtils.prepareWrite` + its `ParquetOutputWriter`, so
-    * `ParquetWriteSupport` builds the schema and footer) and named as such
-    * a task names its output (`part-00000-<uuid>-c000<ext>`): no Spark
-    * job, no Catalyst plan. `conf` overrides session SQL confs for this
-    * write only — a copy of the session's conf is changed, never the
-    * session's. Returns the file's path. */
+    * ([[MicrosParquetFormat]]'s `prepareWrite` and its `ParquetOutputWriter`,
+    * so `ParquetWriteSupport` builds the schema and footer) and named as
+    * such a task names its output (`part-00000-<uuid>-c000<ext>`): no Spark
+    * job, no Catalyst plan. Returns the file's path. */
   def writeParquetFile(spark: org.apache.spark.sql.SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType,
-      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow],
-      conf: Map[String, String]): String = {
-    import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions, ParquetUtils}
-    val session = spark.asInstanceOf[SparkSession].sessionState
-    val sqlConf = session.conf.clone()
-    conf.foreach { case (k, v) => sqlConf.setConfString(k, v) }
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(session.newHadoopConf())
-    val factory = ParquetUtils.prepareWrite(sqlConf, job, schema,
-      new ParquetOptions(Map.empty[String, String], sqlConf))
+      rows: Iterator[org.apache.spark.sql.catalyst.InternalRow]): String = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.asInstanceOf[SparkSession].sessionState.newHadoopConf())
+    val factory = new MicrosParquetFormat().prepareWrite(spark, job, Map.empty, schema)
     val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
       job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID())
     val path = s"$dir/part-00000-${java.util.UUID.randomUUID()}-c000" +
