@@ -47,7 +47,8 @@ import graft.write.{FileStatsFold, FooterStats}
   *
   * Concurrency: commit refuses when the live file set OR delete set no
   * longer equals the planning snapshot's (the scan's row basis), through
-  * the one staleness rule, [[TableMetadata.requireNotSuperseded]]. */
+  * the one staleness rule, [[TableMetadata.requireNotSuperseded]]; a
+  * commit that fails for good deletes the write's staging directory. */
 final class GraftRowLevelOperation(
     ns: String,
     tableName: String,
@@ -116,11 +117,8 @@ final class GraftReplaceBatchWrite(
 
   private def table: GraftTable = cat.loadTable(ns, tableName)
 
-  private lazy val destDir = {
-    val d = table.dataDir.resolve(loadId)
-    java.nio.file.Files.createDirectories(d)
-    d
-  }
+  private lazy val destDir =
+    java.nio.file.Files.createDirectories(table.dataDir.resolve(loadId))
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DataWriterFactory =
@@ -159,7 +157,8 @@ final class GraftReplaceBatchWrite(
       // files outside the scanned groups survive by path
       fresh.withSnapshotDelta(op, Some(loadId), dataFiles, replaced,
         clearDeletes = replaced == plannedPaths)
-    }, maxRetries = 5, backoffBase = 2.0, unitMs = 50L)
+    }, maxRetries = 5, backoffBase = 2.0, unitMs = 50L,
+      staged = Seq(destDir.toString))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -349,16 +348,10 @@ final class GraftDeltaBatchWrite(
 
   private def table: GraftTable = cat.loadTable(ns, tableName)
 
-  private lazy val dataDir = {
-    val d = table.dataDir.resolve(loadId)
-    java.nio.file.Files.createDirectories(d)
-    d
-  }
-  private lazy val delDir = {
-    val d = table.dir.resolve("deletes").resolve(loadId)
-    java.nio.file.Files.createDirectories(d)
-    d
-  }
+  private lazy val dataDir =
+    java.nio.file.Files.createDirectories(table.dataDir.resolve(loadId))
+  private lazy val delDir =
+    java.nio.file.Files.createDirectories(table.dir.resolve("deletes").resolve(loadId))
 
   override def createBatchWriterFactory(
       info: PhysicalWriteInfo): DeltaWriterFactory = {
@@ -392,7 +385,8 @@ final class GraftDeltaBatchWrite(
         identical = true, Some(plannedDeletePaths))
       fresh.withSnapshotDelta(op, Some(loadId), dataFiles, Set.empty,
         newDeletes = delFiles)
-    }, maxRetries = 5, backoffBase = 2.0, unitMs = 50L)
+    }, maxRetries = 5, backoffBase = 2.0, unitMs = 50L,
+      staged = Seq(dataDir.toString, delDir.toString))
     if (delFiles.nonEmpty)
       graft.write.Maintenance.autoApplyIfNeeded(t, retryUnitMs = 50L)
     graft.write.Maintenance.autoCompactIfNeeded(t, retryUnitMs = 50L)

@@ -441,22 +441,34 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
 
   /** Atomic commit: reread freshest metadata, apply `update`, CAS-write the
     * next version. Retries with exponential backoff on conflict.
-    * `onLostCas` runs after an attempt loses the CAS (another writer
-    * published that version first), before any retry: an `update` that
-    * stages files drops that attempt's output there. */
+    * The output an attempt stages inside `update` ([[GraftTable.recordStaged]])
+    * is deleted when that attempt does not publish; `staged`, the output
+    * staged before the commit, when the commit fails for good. After a
+    * [[CommitFailedError]] the publish outcome is unknown: nothing is
+    * deleted, `vacuumOrphans` collects what is left. */
   def commit(update: TableMetadata => TableMetadata,
       maxRetries: Int = 5, backoffBase: Double = 2.0, unitMs: Long = 1000L,
-      onLostCas: () => Unit = () => ()): TableMetadata =
-    Retry.withRetries(maxRetries, backoffBase, unitMs) { () =>
-      val v = currentVersion
-      val fresh = metadataAt(v)
-      val next = update(fresh)
-      Option(GraftTable.beforeCas.remove(dir)).foreach(_())
-      try writeVersion(v + 1, next)
-      catch { case e: CommitConflictError => onLostCas(); throw e }
-      next
+      staged: Seq[String] = Nil): TableMetadata = {
+    var unknown = false // a publish failed with an unknown outcome
+    try Retry.withRetries(maxRetries, backoffBase, unitMs) { () =>
+      val output = scala.collection.mutable.ListBuffer.empty[String]
+      try {
+        val v = currentVersion
+        val next = GraftTable.attemptOutput.withValue(output)(update(metadataAt(v)))
+        Option(GraftTable.beforeCas.remove(dir)).foreach(_())
+        writeVersion(v + 1, next)
+        next
+      } catch {
+        case e: CommitFailedError => unknown = true; throw e
+        case e: Throwable => TableMetadata.discardStaged(this, output.toSeq); throw e
+      }
+    } catch {
+      case e: Throwable if !unknown => TableMetadata.discardStaged(this, staged); throw e
     }
+  }
 
+  /** Publishes `m` as `version`. Once linked the version is live, so the
+    * hint after it is best-effort. */
   private def writeVersion(version: Int, m: TableMetadata): Unit = {
     Files.createDirectories(metadataDir)
     try PathIO.publish(versionPath(version), TableMetadata.toJson(m).getBytes(UTF_8))
@@ -467,8 +479,12 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
         throw new CommitFailedError(m.identifier, e)
     }
     // Advisory fast-path pointer, updated atomically after the CAS.
-    PathIO.publish(metadataDir.resolve("version-hint.text"),
+    try PathIO.publish(metadataDir.resolve("version-hint.text"),
       version.toString.getBytes(UTF_8), replace = true)
+    catch {
+      case scala.util.control.NonFatal(e) =>
+        GraftTable.log.warn(s"${m.identifier}: version hint not updated to $version: $e")
+    }
   }
 }
 
@@ -478,6 +494,17 @@ object GraftTable {
     * concurrent commit inside that window. */
   private[graft] val beforeCas =
     new java.util.concurrent.ConcurrentHashMap[Path, () => Unit]()
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftTable])
+
+  /** The output of the commit attempt whose `update` runs on this thread. */
+  private val attemptOutput =
+    new scala.util.DynamicVariable[scala.collection.mutable.ListBuffer[String]](null)
+
+  /** Records `path`, staged under a table's data or deletes root, as
+    * output of the open commit attempt; a no-op outside one. */
+  private[graft] def recordStaged(path: Path): Unit =
+    Option(attemptOutput.value).foreach(_ += path.toString)
 
   /** Operations whose snapshots are content-neutral file rewrites: the
     * live row set is unchanged, only paths move. The changelog skips

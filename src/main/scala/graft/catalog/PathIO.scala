@@ -51,7 +51,8 @@ object PathIO {
     * no-overwrite rename a CAS needs. Filesystems without hard links fall
     * back to an existence check and an atomic move: readers still never
     * see a partly written file, but two writers racing between the check
-    * and the move can both succeed, the later one replacing the earlier. */
+    * and the move can both succeed, the later one replacing the earlier.
+    * A temp file left behind once the target is in place is only logged. */
   def publish(target: Path, bytes: Array[Byte], replace: Boolean = false): Unit = {
     val tmp = target.resolveSibling(
       s".${target.getFileName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
@@ -68,6 +69,7 @@ object PathIO {
             if (Files.exists(target)) throw new FileAlreadyExistsException(target.toString)
             Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
         }
-    } finally Files.deleteIfExists(tmp)
+    } finally try Files.deleteIfExists(tmp) catch { case scala.util.control.NonFatal(e) =>
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(s"temp file $tmp not deleted: $e") }
   }
 }

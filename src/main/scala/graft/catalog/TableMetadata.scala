@@ -564,17 +564,11 @@ object TableMetadata {
     * depth 500 on the inline form). */
   val InlineSnapshotEntryMax = 8
 
-  /** Runs a rewrite's commit. If it is refused with a [[ValidationError]]
-    * (the staleness rule, or any other check inside the commit closure,
-    * all raised before the CAS, so nothing committed), deletes the files
-    * the rewrite staged before it began the commit, then rethrows. */
-  def discardOnRefusal[A](t: GraftTable, staged: Seq[String])(commit: => A): A =
-    try commit
-    catch { case e: ValidationError => discardStaged(t, staged); throw e }
-
   /** Deletes the per-call staging directories (`<loadId>-<uuid8>` under
     * the table's data or deletes root, Spark's sidecar files included)
-    * holding `staged`. Only for output no snapshot references. */
+    * holding `staged`, staged files or those directories themselves.
+    * Only for output no snapshot references; [[GraftTable.commit]] is
+    * its owner. */
   def discardStaged(t: GraftTable, staged: Seq[String]): Unit = {
     val roots = Seq(t.dataDir, t.dir.resolve("deletes"))
     staged.map(java.nio.file.Paths.get(_)).flatMap(p =>

@@ -207,7 +207,8 @@ final class GraftPipeline(
       val kept = t.read().filter(col("schema_name") =!= schemaName)
       val staged = graft.write.Stager.stage(kept, t.dataDir,
         s"drop-schema-${java.util.UUID.randomUUID().toString.take(8)}")
-      t.commit(_.withSnapshot("delete", None, staged), unitMs = 10)
+      t.commit(_.withSnapshot("delete", None, staged), unitMs = 10,
+        staged = staged.map(_.path))
     }
   }
 

@@ -2,6 +2,7 @@ package graft.write
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -28,15 +29,16 @@ import scala.jdk.CollectionConverters._
   */
 object FooterStats {
 
-  /** `conf` is an already-loaded Hadoop configuration (the session's):
-    * a fresh `Configuration` re-parses the default resources on first
-    * use. */
+  /** `conf` is an already-loaded Hadoop configuration (the session's),
+    * used for the file and for the reader's options: a fresh
+    * `Configuration` re-parses the default resources on first use. */
   def collect(files: Seq[String], schema: StructType,
       conf: Configuration): Seq[DataFile] = {
+    val options = HadoopReadOptions.builder(conf).build()
     files.map { f =>
       val footer = {
         val in = HadoopInputFile.fromPath(new Path(f), conf)
-        val r = ParquetFileReader.open(in)
+        val r = ParquetFileReader.open(in, options)
         try r.getFooter finally r.close()
       }
       val blocks = footer.getBlocks.asScala.toSeq

@@ -216,7 +216,7 @@ final class GraftWriter(catalog: GraftCatalog) {
     // body reads even on a cold JVM (the cost every load pays)
     t.commit(fresh => fresh.withSnapshotDelta("append", Some(loadId),
       staged, Set.empty, branch = cfg.toBranch),
-      cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
+      cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs, staged.map(_.path))
     // trickle appends leave one small file per commit — the opt-in
     // self-compaction hook bounds the population (branch writes skip:
     // compact reads main state)
@@ -233,7 +233,8 @@ final class GraftWriter(catalog: GraftCatalog) {
     // truncate-and-insert: snapshot references ONLY the new files; old
     // files stay on disk for time travel (S6)
     t.commit(fresh => fresh.withSnapshotReplace("overwrite", Some(loadId), staged,
-      branch = cfg.toBranch), cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
+      branch = cfg.toBranch), cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs,
+      staged.map(_.path))
   }
 
   private def commitMerge(t: GraftTable, m: TableMetadata, combined: DataFrame,
@@ -442,7 +443,8 @@ final class GraftWriter(catalog: GraftCatalog) {
     // old-vintage files holding matching rows are restaged minus those
     // rows, non-matching ones survive by path. The closure's orphan
     // refusal below remains as the backstop for an old-vintage file
-    // committed concurrently AFTER this check.
+    // committed concurrently AFTER this check; it runs before the
+    // attempt stages anything.
     locally {
       val mNow = t.metadata
       val specNow = mNow.partitionSpec
@@ -462,12 +464,6 @@ final class GraftWriter(catalog: GraftCatalog) {
     }
     t.commit({ fresh =>
       val spec = fresh.partitionSpec
-      val staged = Stager.stage(cast, t.dataDir, loadId, spec,
-        bloomColumns = GraftWriter.bloomColumns(fresh, cfg),
-            sketchColumns = GraftWriter.sketchColumns(fresh, cfg))
-      val stagedTuples = staged.flatMap(tupleOf(_, spec)).toSet
-      require(staged.isEmpty || stagedTuples.nonEmpty,
-        "staged files must carry value-exact partition stats")
       val (attributed, orphaned) = fresh.currentFiles
         .map(f => f -> tupleOf(f, spec))
         .partition(_._2.isDefined)
@@ -477,6 +473,12 @@ final class GraftWriter(catalog: GraftCatalog) {
             s"a partition tuple (older spec vintage, e.g. " +
             s"${orphaned.head._1.path}); compact/restage first or use " +
             "REPLACE WHERE with an explicit predicate")
+      val staged = Stager.stage(cast, t.dataDir, loadId, spec,
+        bloomColumns = GraftWriter.bloomColumns(fresh, cfg),
+        sketchColumns = GraftWriter.sketchColumns(fresh, cfg))
+      val stagedTuples = staged.flatMap(tupleOf(_, spec)).toSet
+      require(staged.isEmpty || stagedTuples.nonEmpty,
+        "staged files must carry value-exact partition stats")
       val removed = attributed.collect {
         case (f, Some(tu)) if stagedTuples.contains(tu) => f.path
       }.toSet
@@ -569,15 +571,13 @@ final class GraftWriter(catalog: GraftCatalog) {
         val vector = writeVector(t, matches.get, loadId, matched)
         val plannedDeletes = m.currentDeletePaths
         afterPlanning()
-        TableMetadata.discardOnRefusal(t,
-            staged.map(_.path) ++ vector.map(_.path)) {
-          t.commit({ fresh =>
-            fresh.requireNotSuperseded(rewrite.name, planned,
-              identical = false, Some(plannedDeletes))
-            fresh.withSnapshotDelta(rewrite.op, Some(loadId), staged,
-              Set.empty, newPosDeletes = vector)
-          }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
-        }
+        t.commit({ fresh =>
+          fresh.requireNotSuperseded(rewrite.name, planned,
+            identical = false, Some(plannedDeletes))
+          fresh.withSnapshotDelta(rewrite.op, Some(loadId), staged,
+            Set.empty, newPosDeletes = vector)
+        }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs,
+          staged.map(_.path) ++ vector.map(_.path))
         autoMaintain(t, cfg)
         matched
       } else {
@@ -708,7 +708,8 @@ final class GraftWriter(catalog: GraftCatalog) {
       cfg: WriteConfig): Unit = {
     val next = t.commit(fresh => fresh.withSnapshotDelta(op, Some(loadId),
       stagedNew, Set.empty, newDeletes = delFiles, branch = cfg.toBranch),
-      cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs)
+      cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs,
+      stagedNew.map(_.path) ++ delFiles.map(_.path))
     // a delete into an empty parent has no victims and commits without
     // its key file: nothing references it, so drop it
     val kept = next.snapshots.last.deletes.map(_.path).toSet
@@ -730,7 +731,7 @@ final class GraftWriter(catalog: GraftCatalog) {
     * the current files without the matching rows (left-anti join), carry
     * unaffected files as metadata, add `stagedNew` files, commit as one
     * snapshot. Rebase-safe: the rewrite re-runs against fresh metadata on
-    * CAS conflict. */
+    * CAS conflict (the commit drops the lost attempt's restage). */
   private def rewriteCommit(t: GraftTable, keys: DataFrame, pks: Seq[String],
       stagedNew: Seq[DataFile], op: String, loadId: String, cfg: WriteConfig,
       precomputed: Option[(Seq[Option[(String, String)]], Long)] = None): Unit = {
@@ -774,9 +775,6 @@ final class GraftWriter(catalog: GraftCatalog) {
           keysCached.select(col(pks.head)).distinct().collect()
         }.map(_.get(0)).filter(_ != null).toSeq)
 
-      // this attempt's restage: an attempt that loses the CAS deletes it
-      // before the retry restages (`stagedNew` serves every attempt)
-      var attempt = Seq.empty[DataFile]
       graft.JobDesc(spark, s"graft.merge:rewrite $loadId") {
       t.commit({ fresh =>
         // one StatsPrune question: files overlapping the batch range on
@@ -820,14 +818,12 @@ final class GraftWriter(catalog: GraftCatalog) {
               clusterBy, GraftWriter.bloomColumns(fresh, cfg),
               GraftWriter.sketchColumns(fresh, cfg), cfg.maxRecordsPerFile)
           }
-        attempt = rewritten
 
         // delta commit: only manifests whose path-bloom hits an affected
         // path are opened; untouched manifests carry by identity
         fresh.withSnapshotDelta(op, Some(loadId), rewritten ++ stagedNew,
           affectedPaths)
-      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs,
-        onLostCas = () => TableMetadata.discardStaged(t, attempt.map(_.path)))
+      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs, stagedNew.map(_.path))
       }
     } finally keysCached.unpersist()
   }

@@ -2,7 +2,7 @@ package graft.write
 
 import java.nio.file.{Files, Path, Paths}
 import org.apache.spark.sql.functions._
-import graft.catalog.{GraftTable, TableMetadata}
+import graft.catalog.GraftTable
 import scala.jdk.CollectionConverters._
 
 /** Table maintenance: small-file compaction, snapshot expiry, orphan
@@ -94,19 +94,21 @@ object Maintenance {
     val on = t.metadata.properties.get(AutoApplyDeletesProp)
       .exists(_.equalsIgnoreCase("true"))
     if (!on || !deleteBacklog(t).needsMaintenance) return false
-    // NonFatal, not just ValidationError: the triggering write has ALREADY
-    // committed, so ANY failure of this best-effort follow-up (IO error,
-    // Spark job failure, a racing compaction) must not surface as a
-    // failure of that committed write — log and leave the backlog for the
-    // next triggering commit.
-    try applyDeletes(t, retryUnitMs)
+    bestEffort("auto-apply-deletes")(applyDeletes(t, retryUnitMs))
+  }
+
+  /** Runs a follow-up of a write that has ALREADY committed: ANY failure
+    * (IO error, Spark job failure, a racing rewrite) must not surface as
+    * a failure of that write, so it is logged and the work is left for
+    * the next triggering commit. */
+  private def bestEffort(name: String)(run: => Boolean): Boolean =
+    try run
     catch {
       case scala.util.control.NonFatal(e) =>
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"auto-apply-deletes maintenance skipped: ${e.getMessage}")
+          s"$name maintenance skipped: ${e.getMessage}")
         false
     }
-  }
 
   /** Table property: the byte size below which a live data file counts as
     * "small" for the [[fileHealth]] signal and for auto-compaction
@@ -174,16 +176,8 @@ object Maintenance {
     if (!h.needsCompaction) return false
     val target = m.properties.get(TargetFileBytesProp).map(_.toLong)
       .getOrElse(DefaultTargetFileBytes)
-    // NonFatal like autoApplyIfNeeded: the triggering write already
-    // committed; a failed best-effort compaction must not fail it.
-    try compact(t, smallFileBytes = h.smallFileBytes,
-      targetFileBytes = target, retryUnitMs = retryUnitMs)
-    catch {
-      case scala.util.control.NonFatal(e) =>
-        org.slf4j.LoggerFactory.getLogger(getClass).warn(
-          s"auto-compact maintenance skipped: ${e.getMessage}")
-        false
-    }
+    bestEffort("auto-compact")(compact(t, smallFileBytes = h.smallFileBytes,
+      targetFileBytes = target, retryUnitMs = retryUnitMs))
   }
 
   /** Bin-pack files smaller than `smallFileBytes` into ~`targetFileBytes`
@@ -226,13 +220,11 @@ object Maintenance {
     val plannedDeletes = m.currentDeletePaths
     // rebase-safe only while the small set is live and no delete arrived
     // since planning (the restage applied exactly the planned ones)
-    TableMetadata.discardOnRefusal(t, staged.map(_.path)) {
-      t.commit({ fresh =>
-        fresh.requireNotSuperseded("compaction", smallPaths,
-          identical = false, Some(plannedDeletes))
-        fresh.withSnapshotDelta("compact", None, staged, smallPaths)
-      }, unitMs = retryUnitMs)
-    }
+    t.commit({ fresh =>
+      fresh.requireNotSuperseded("compaction", smallPaths,
+        identical = false, Some(plannedDeletes))
+      fresh.withSnapshotDelta("compact", None, staged, smallPaths)
+    }, unitMs = retryUnitMs, staged = staged.map(_.path))
     true
     }
   }
@@ -289,14 +281,12 @@ object Maintenance {
     val plannedDeletes = m.currentDeletePaths
     // clearDeletes wipes the WHOLE delete list — refuse if a delete file
     // this pass did not apply arrived concurrently
-    TableMetadata.discardOnRefusal(t, staged.map(_.path)) {
-      t.commit({ fresh =>
-        fresh.requireNotSuperseded("apply-deletes", priorPaths,
-          identical = false, Some(plannedDeletes))
-        fresh.withSnapshotDelta("apply-deletes", None, staged, priorPaths,
-          clearDeletes = true)
-      }, unitMs = retryUnitMs)
-    }
+    t.commit({ fresh =>
+      fresh.requireNotSuperseded("apply-deletes", priorPaths,
+        identical = false, Some(plannedDeletes))
+      fresh.withSnapshotDelta("apply-deletes", None, staged, priorPaths,
+        clearDeletes = true)
+    }, unitMs = retryUnitMs, staged = staged.map(_.path))
     true
     }
   }
@@ -384,14 +374,12 @@ object Maintenance {
     // the whole-table restage read every live file with the deletes
     // t.read() saw at planning: refuse if any file or delete arrived
     // since, and clear the applied deletes
-    TableMetadata.discardOnRefusal(t, staged.map(_.path)) {
-      t.commit({ fresh =>
-        fresh.requireNotSuperseded("zorder", priorPaths, identical = true,
-          Some(plannedDeletes))
-        fresh.withSnapshotDelta("zorder", None, staged, priorPaths,
-          clearDeletes = true)
-      }, unitMs = retryUnitMs)
-    }
+    t.commit({ fresh =>
+      fresh.requireNotSuperseded("zorder", priorPaths, identical = true,
+        Some(plannedDeletes))
+      fresh.withSnapshotDelta("zorder", None, staged, priorPaths,
+        clearDeletes = true)
+    }, unitMs = retryUnitMs, staged = staged.map(_.path))
     true
   }
 
@@ -520,12 +508,10 @@ object Maintenance {
   def vacuumOrphans(t: GraftTable, minAgeMs: Long = DefaultVacuumMinAgeMs): Seq[String] = {
     if (!Files.isDirectory(t.dataDir)) return Nil
     val m = t.metadata
-    val referenced = m.snapshots
-      .flatMap(_.dataFiles.map(f => Paths.get(f.path).toAbsolutePath.toString)).toSet ++
-      m.snapshots.flatMap(_.deletes.map(d =>
-        Paths.get(d.path).toAbsolutePath.toString)) ++
-      m.snapshots.flatMap(_.posDeletes.map(d =>
-        Paths.get(d.path).toAbsolutePath.toString))
+    def absolute(paths: Seq[String]): Set[String] =
+      paths.map(p => Paths.get(p).toAbsolutePath.toString).toSet
+    val referenced = absolute(m.snapshots.flatMap(s => s.dataFiles.map(_.path) ++
+      s.deletes.map(_.path) ++ s.posDeletes.map(_.path)))
     // Spark's sidecars live as long as what they describe: a `_SUCCESS`
     // while its directory holds a referenced file, a `.<name>.crc` while
     // `<name>` is live
@@ -552,37 +538,24 @@ object Maintenance {
         .filterNot(live)
         .map(_.toString))
     orphans.foreach(p => Files.deleteIfExists(Paths.get(p)))
-    // manifests left by failed/rebased CAS attempts: delete any manifest
-    // file no snapshot references (same age guard)
-    val liveManifests = m.snapshots.flatMap(_.manifestPaths)
-      .map(p => Paths.get(p).toAbsolutePath.toString).toSet
-    if (Files.isDirectory(t.metadataDir))
-      graft.catalog.PathIO.list(t.metadataDir)
-        .filter(p => p.getFileName.toString.startsWith("manifest-"))
-        .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .filter(p => !liveManifests.contains(p.toAbsolutePath.toString))
-        .foreach { p =>
-          Files.deleteIfExists(p)
-          graft.catalog.ManifestIO.invalidate(p.toString)
-        }
-    // externalized snapshot bodies left by failed CAS attempts
-    val liveBodies = m.snapshots.flatMap(_.bodyPath)
-      .map(p => Paths.get(p).toAbsolutePath.toString).toSet
-    if (Files.isDirectory(t.metadataDir))
-      graft.catalog.PathIO.list(t.metadataDir)
-        .filter(p => p.getFileName.toString.startsWith("snapbody-"))
-        .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
-        .filter(p => !liveBodies.contains(p.toAbsolutePath.toString))
-        .foreach { p =>
-          Files.deleteIfExists(p)
-          graft.catalog.SnapBodyIO.invalidate(p.toString)
-        }
+    // manifests and externalized snapshot bodies left by failed/rebased
+    // CAS attempts: delete any no snapshot references (same age guard)
+    val liveMeta = absolute(m.snapshots.flatMap(s => s.manifestPaths ++ s.bodyPath))
+    graft.catalog.PathIO.list(t.metadataDir)
+      .filter(p => Seq("manifest-", "snapbody-").exists(p.getFileName.toString.startsWith))
+      .filter(p => Files.getLastModifiedTime(p).toMillis <= cutoff)
+      .filter(p => !liveMeta.contains(p.toAbsolutePath.toString))
+      .foreach { p =>
+        Files.deleteIfExists(p)
+        graft.catalog.ManifestIO.invalidate(p.toString)
+        graft.catalog.SnapBodyIO.invalidate(p.toString)
+      }
     // remove now-empty staging dirs
-    graft.catalog.PathIO.walk(t.dataDir).reverse
-      .filter(p => Files.isDirectory(p) && p != t.dataDir)
+    scanRoots.foreach(root => graft.catalog.PathIO.walk(root).reverse
+      .filter(p => Files.isDirectory(p) && p != root)
       .foreach { d =>
         if (graft.catalog.PathIO.isEmptyDir(d)) Files.deleteIfExists(d)
-      }
+      })
     orphans
   }
 }

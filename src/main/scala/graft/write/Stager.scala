@@ -75,6 +75,7 @@ object Stager {
       sortBy: Seq[String] = Nil): Seq[DataFile] = {
     val spark = df.sparkSession
     val dest = dataDir.resolve(s"$loadId-${java.util.UUID.randomUUID().toString.take(8)}")
+    graft.catalog.GraftTable.recordStaged(dest)
 
     val schema = df.schema
     // Partitioned writes are VALUE-EXACT (Iceberg fanout-writer layout):
@@ -87,13 +88,18 @@ object Stager {
     // to exact partition pruning. File count per load = distinct tuples
     // in the load (the spec author bounds cardinality — that is what
     // bucket[N]/temporal transforms are for); `maxRecordsPerFile` still
-    // caps size within a tuple.
+    // caps size within a tuple. No reader parses the directory names, so
+    // string values are percent-encoded: ASCII under any file-name
+    // encoding.
     val partitionCols: Seq[String] =
       if (spec.isEmpty) Nil
       else spec.map(s => s"__graft_p_${s.name}")
     def withDerived(d: DataFrame): DataFrame =
       spec.zip(partitionCols).foldLeft(d) { case (acc, (s, pc)) =>
-        acc.withColumn(pc, Transforms.expression(s, schema(s.source).dataType))
+        val dt = schema(s.source).dataType
+        val e = Transforms.expression(s, dt)
+        acc.withColumn(pc, if (dt.isInstanceOf[StringType] &&
+          Set("identity", "truncate")(s.transform)) url_encode(e) else e)
       }
     val clustered =
       if (preshaped) withDerived(df)
@@ -168,6 +174,7 @@ object Stager {
       dataDir: Path, loadId: String, bloomColumns: Seq[String] = Nil): Seq[DataFile] = {
     if (rows.isEmpty) return Nil
     val dest = dataDir.resolve(s"$loadId-${java.util.UUID.randomUUID().toString.take(8)}")
+    graft.catalog.GraftTable.recordStaged(dest)
     val acc = FileStatsFold(spark, schema, bloomColumns = bloomColumns).open()
     val file = org.apache.spark.sql.classic.GraftSqlShims.writeParquetFile(spark,
       dest.toString, schema, rows.iterator.map { r => acc.add(r); r })

@@ -290,4 +290,97 @@ class ConcurrencySpec extends AnyFunSuite {
       expected)
     assert(Maintenance.vacuumOrphans(t, 0).isEmpty)
   }
+
+  private def rows(t: GraftTable): Seq[(Long, String)] =
+    t.read().collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted
+
+  private val base = (1L to 10L).map(i => i -> s"v$i")
+
+  /** Copy-on-write operations that stage inside their commit, each with
+    * the rows it leaves when an append of (100, c) lands before its first
+    * CAS. The table is partitioned by truncate(5, id). */
+  private val lostCasOps: Seq[(String, GraftWriter => Unit, Seq[(Long, String)])] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    Seq(
+      ("deleteWhere", w => w.deleteWhere("main", "t", col("id") <= 3, cfg),
+        base.filter(_._1 > 3)),
+      ("updateWhere", w => w.updateWhere("main", "t", col("id") === 4,
+        Map("v" -> lit("u4")), cfg),
+        base.map { case (i, v) => i -> (if (i == 4L) "u4" else v) }),
+      ("overwriteWhere", w => w.overwriteWhere("main", "t", col("id").between(8, 9),
+        Seq((9L, "o9")).toDF("id", "v"), cfg),
+        base.filterNot(r => r._1 == 8L || r._1 == 9L) :+ (9L -> "o9")),
+      ("overwriteDynamic", w => w.overwriteDynamic("main", "t",
+        Seq((6L, "d6")).toDF("id", "v"), cfg),
+        base.filterNot(r => r._1 >= 5L && r._1 <= 9L) :+ (6L -> "d6")))
+  }
+
+  lostCasOps.foreach { case (name, op, after) =>
+    test(s"a copy-on-write $name that loses the CAS deletes that attempt's output") {
+      val cat = freshCatalog()
+      val w = new GraftWriter(cat)
+      w.writeTable("main", "t", Seq(base.toDF("id", "v")), Append,
+        cfg.copy(partitions = Seq(graft.partition.PartitionHint.truncate(5, "id"))), "l1")
+      val t = cat.loadTable("main", "t")
+      var landed = false
+      GraftTable.beforeCas.put(t.dir, () => {
+        w.writeTable("main", "t", Seq(Seq((100L, "c")).toDF("id", "v")),
+          Append, cfg, "l-concurrent")
+        landed = true
+      })
+      op(w)
+      assert(landed && !GraftTable.beforeCas.containsKey(t.dir))
+      assert(t.metadata.snapshots.size == 3)
+      assert(rows(t) == (after :+ (100L -> "c")).sorted)
+      assert(Maintenance.vacuumOrphans(t, 0).isEmpty)
+    }
+  }
+
+  /** Lands a metadata-only commit before every CAS of `t` until removed,
+    * so every attempt of every other commit loses. */
+  private def loseEveryCas(t: GraftTable): Unit =
+    GraftTable.beforeCas.put(t.dir, () => {
+      t.commit(m => m.copy(properties =
+        m.properties + ("graft.test.racer" -> System.nanoTime.toString)))
+      loseEveryCas(t)
+    })
+
+  private val exhaustedOps: Seq[(String, (GraftWriter, GraftTable) => Any)] = Seq(
+    ("an append with maxRetries = 2", (w, _) => w.writeTable("main", "t",
+      Seq(Seq((11L, "v11")).toDF("id", "v")), Append, cfg.copy(maxRetries = 2), "l3")),
+    ("Maintenance.compact", (_, t) =>
+      Maintenance.compact(t, smallFileBytes = 1L << 20, retryUnitMs = 1)))
+
+  exhaustedOps.foreach { case (name, op) =>
+    test(s"$name that runs out of retries deletes what it staged") {
+      val cat = freshCatalog()
+      val w = new GraftWriter(cat)
+      w.writeTable("main", "t", Seq(base.take(5).toDF("id", "v")), Append, cfg, "l1")
+      w.writeTable("main", "t", Seq(base.drop(5).toDF("id", "v")), Append, cfg, "l2")
+      val t = cat.loadTable("main", "t")
+      loseEveryCas(t)
+      try intercept[CommitConflictError](op(w, t))
+      finally GraftTable.beforeCas.remove(t.dir)
+      assert(t.metadata.snapshots.flatMap(_.loadId) == Seq("l1", "l2"))
+      assert(t.metadata.snapshots.size == 2)
+      assert(rows(t) == base)
+      assert(Maintenance.vacuumOrphans(t, 0).isEmpty)
+    }
+  }
+
+  test("a published commit whose version hint cannot be replaced still succeeds") {
+    val cat = freshCatalog()
+    val w = new GraftWriter(cat)
+    w.writeTable("main", "t", Seq(base.take(5).toDF("id", "v")), Append, cfg, "l1")
+    val t = cat.loadTable("main", "t")
+    // a non-empty directory where the hint goes: the move that replaces
+    // the hint fails after the version is linked
+    val hint = t.metadataDir.resolve("version-hint.text")
+    Files.delete(hint)
+    Files.createDirectories(hint.resolve("blocker"))
+    w.writeTable("main", "t", Seq(base.drop(5).toDF("id", "v")), Append, cfg, "l2")
+    assert(t.metadata.snapshots.flatMap(_.loadId) == Seq("l1", "l2"))
+    assert(rows(t) == base)
+    assert(Maintenance.vacuumOrphans(t, 0).isEmpty)
+  }
 }

@@ -133,7 +133,8 @@ class FileStatsSpec extends AnyFunSuite {
     }
 
     /** Derived values decoded from the value-exact directory names, where
-      * the decoding is exact; None otherwise. */
+      * the decoding is exact; None otherwise. A string source's identity
+      * and truncate values are percent-encoded there. */
     def fromPaths(files: Seq[String], schema: StructType, spec: Seq[PartitionFieldSpec]):
         Option[Map[String, Map[String, ColumnStats]]] = {
       import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
@@ -165,6 +166,8 @@ class FileStatsSpec extends AnyFunSuite {
             .getOrElse(return None)
           val canon = derivedType(s.name).get match {
             case DateType => java.time.LocalDate.parse(v).toEpochDay.toString
+            case StringType if s.transform == "identity" || s.transform == "truncate" =>
+              java.net.URLDecoder.decode(v, java.nio.charset.StandardCharsets.UTF_8)
             case _ => v
           }
           s.name -> ColumnStats(Some(canon), Some(canon), Some(0L))
@@ -237,11 +240,12 @@ class FileStatsSpec extends AnyFunSuite {
     ("string", StringType, Seq("a b", "100%", "x/y=z", " %2F", "", null),
       Seq(PartitionHint.identity("k"), PartitionHint.bucket(4, "k"),
         PartitionHint.truncate(2, "k"))),
-    // non-ASCII keys under a transform whose directory names stay ASCII
-    // (the local file system rejects non-ASCII names unless the JVM runs
-    // in a UTF-8 locale)
+    // non-ASCII keys: the staged directory names stay ASCII (the local
+    // file system rejects non-ASCII names unless the JVM runs in a UTF-8
+    // locale)
     ("non-ASCII string", StringType, Seq("naïve", "日本語", "ü", "Ωmega"),
-      Seq(PartitionHint.bucket(4, "k"))),
+      Seq(PartitionHint.identity("k"), PartitionHint.bucket(4, "k"),
+        PartitionHint.truncate(2, "k"))),
     ("date", DateType, Seq(java.time.LocalDate.of(2023, 12, 31),
       java.time.LocalDate.of(2024, 1, 1), java.time.LocalDate.of(2024, 2, 29),
       java.time.LocalDate.of(1969, 7, 20), null),

@@ -268,6 +268,26 @@ class MaintenanceSpec extends AnyFunSuite {
     assert(t.read().count() == 2) // live data untouched
   }
 
+  test("vacuumOrphans prunes the delete-file directories expiry empties") {
+    val cat = freshCatalog()
+    val w = new GraftWriter(cat)
+    val mor = cfg.copy(primaryKey = Seq("id"), mergeOnRead = true)
+    w.writeTable("main", "t", Seq((1L to 4L).map(i => (i, s"v$i")).toDF("id", "v")),
+      Merge(), mor, "l1")
+    w.writeTable("main", "t", Seq(Seq((2L, "u2")).toDF("id", "v")), Merge(), mor, "l2")
+    val t = cat.loadTable("main", "t")
+    assert(t.metadata.currentDeletes.nonEmpty)
+    assert(Maintenance.applyDeletes(t, retryUnitMs = 1))
+    Maintenance.expireSnapshots(t, keepLast = 1, retryUnitMs = 1)
+    Maintenance.vacuumOrphans(t, 0)
+    val deletes = t.dir.resolve("deletes")
+    assert(Files.isDirectory(deletes))
+    val empty = PathIO.walk(deletes).filter(d => d != deletes && PathIO.isEmptyDir(d))
+    assert(empty.isEmpty, empty)
+    assert(t.read().collect().map(r => r.getLong(0) -> r.getString(1)).toSeq.sorted ==
+      Seq(1L -> "v1", 2L -> "u2", 3L -> "v3", 4L -> "v4"))
+  }
+
   test("vacuumOrphans keeps live files' sidecars and reclaims a dropped file's") {
     val cat = freshCatalog()
     val w = new GraftWriter(cat)

@@ -385,6 +385,29 @@ class SparkCatalogSpec extends AnyFunSuite {
     assert(t.metadata.snapshots.last.operation == "update")
   }
 
+  test("a SQL UPDATE refused as superseded leaves none of its staged files") {
+    val cat = freshCatalog("gupdx")
+    val w = new GraftWriter(cat)
+    val users = (1 to 20).map(i => (i.toLong, s"u$i", i % 5))
+    w.writeTable("main", "users", Seq(users.toDF("id", "name", "grp")),
+      Append, WriteConfig(retryUnitMs = 1), "l1")
+    val t = cat.loadTable("main", "users")
+    // an append lands before the UPDATE's first CAS: that attempt loses,
+    // and the retry is refused because the live file set changed
+    GraftTable.beforeCas.put(t.dir, () =>
+      w.writeTable("main", "users", Seq(Seq((21L, "u21", 1)).toDF("id", "name", "grp")),
+        Append, WriteConfig(retryUnitMs = 1), "l-concurrent"))
+    val e = intercept[Exception](
+      spark.sql("UPDATE gupdx.main.users SET name = concat(name, '!') WHERE grp = 2"))
+    assert(!GraftTable.beforeCas.containsKey(t.dir))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("superseded by a concurrent commit")), e)
+    assert(t.metadata.snapshots.flatMap(_.loadId) == Seq("l1", "l-concurrent"))
+    assert(t.read().collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+      .toSeq.sortBy(_._1) == users :+ ((21L, "u21", 1)))
+    assert(Maintenance.vacuumOrphans(t, 0).isEmpty)
+  }
+
   test("SQL MERGE INTO upserts through the row-level BatchWrite") {
     val cat = freshCatalog("gmrg")
     val w = new GraftWriter(cat)
