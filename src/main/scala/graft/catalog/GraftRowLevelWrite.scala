@@ -161,12 +161,9 @@ final class GraftReplaceBatchWrite(
       staged = Seq(destDir.toString))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case GraftWriteMessage(p, _) if p.nonEmpty => p }
-      .foreach(p =>
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p)))
-    ()
-  }
+  /** A failed write job: drop the staging directory whole. */
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    TableMetadata.discardStaged(table, Seq(destDir.toString))
 }
 
 /** One task's staged parquet file, created on its first row (so empty
@@ -194,7 +191,11 @@ private[catalog] final class StagedFile(spec: StagedFile.Spec, partitionId: Int,
   def result: FileStatsFold.Folded = acc.result
   def abort(): Unit = {
     close()
-    if (path.nonEmpty) java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(path))
+    if (path.nonEmpty) {
+      val p = java.nio.file.Paths.get(path)
+      java.nio.file.Files.deleteIfExists(p)
+      java.nio.file.Files.deleteIfExists(p.resolveSibling(s".${p.getFileName}.crc"))
+    }
   }
 }
 
@@ -392,15 +393,9 @@ final class GraftDeltaBatchWrite(
     graft.write.Maintenance.autoCompactIfNeeded(t, retryUnitMs = 50L)
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    messages.collect { case m: GraftDeltaMessage => m }.foreach { m =>
-      if (m.dataPath.nonEmpty)
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(m.dataPath))
-      if (m.delPath.nonEmpty)
-        java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(m.delPath))
-    }
-    ()
-  }
+  /** A failed write job: drop both staging directories whole. */
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    TableMetadata.discardStaged(table, Seq(dataDir.toString, delDir.toString))
 }
 
 final class GraftDeltaWriterFactory(

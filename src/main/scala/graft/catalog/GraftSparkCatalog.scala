@@ -4,8 +4,6 @@ import java.util.{Map => JMap}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsNamespaces, Table, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
 
@@ -21,9 +19,10 @@ import scala.jdk.CollectionConverters._
   * }}}
   *
   * Reads resolve the CURRENT (or time-traveled) snapshot's file list and
-  * hand Spark a V2 parquet table with the committed schema imposed, so
-  * catalyst pushdown, column pruning, and sparse null-fill semantics all
-  * apply exactly as in `GraftTable.read()`. DDL (create/drop/namespaces)
+  * hand Spark the engine's one pinned-snapshot V2 table
+  * ([[GraftV2Table.apply]] — the same table `GraftTable.read()` plans
+  * over), so catalyst pushdown, pruning, column pruning, and sparse
+  * null-fill semantics are one implementation. DDL (create/drop/namespaces)
   * maps straight onto the graft catalog; writes keep going through
   * [[graft.write.GraftWriter]], which owns the disposition semantics the
   * reference defines (a bare SQL INSERT has no disposition/PK contract,
@@ -61,11 +60,6 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     warehouse = Option(options.get("warehouse")).getOrElse(
       throw new IllegalArgumentException(
         s"catalog $name requires option spark.sql.catalog.$name.warehouse"))
-    // make V1-shim scan statistics visible to join planning (see
-    // ScanStats.scala); catalog initialization is the one hook that runs
-    // before any graft SQL plan exists in this session
-    org.apache.spark.sql.SparkSession.getActiveSession
-      .foreach(V1ScanStatsRule.register)
   }
 
   override def name(): String = catalogName
@@ -117,40 +111,28 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     cat.loadTable(nsOf(ident), ident.name())
   }
 
-  private def asV2(ident: Identifier, m: TableMetadata,
-      files: Seq[DataFile],
-      schema: org.apache.spark.sql.types.StructType): Table =
-    new ParquetTable(
-      s"$catalogName.${nsOf(ident)}.${ident.name()}",
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      CaseInsensitiveStringMap.empty(),
-      files.map(_.path),
-      Some(schema),
-      classOf[ParquetFileFormat])
-
-  private def v2Of(ident: Identifier, m: TableMetadata, snap: Option[Snapshot],
+  /** The catalog's table at `snap`. A declared primary key
+    * (graft.primary-key) is an Iceberg identifier-field set: those
+    * columns are required by contract, and delta row-level writes need
+    * non-nullable row-id attributes (a catalog-only view). */
+  private def v2Table(ident: Identifier, m: TableMetadata, snap: Option[Snapshot],
       schema0: org.apache.spark.sql.types.StructType): Table = {
-    // a declared primary key (graft.primary-key) is an Iceberg
-    // identifier-field set: those columns are required by contract, and
-    // delta row-level writes need non-nullable row-id attributes
     val pk = GraftV2Table.parsePrimaryKey(m.properties).toSet
     val schema =
       if (pk.isEmpty) schema0
       else org.apache.spark.sql.types.StructType(schema0.fields.map(f =>
         if (pk.contains(f.name)) f.copy(nullable = false) else f))
-    val files = snap.map(_.dataFiles).getOrElse(Nil)
-    val deletes = snap.map(_.deletes).getOrElse(Nil)
-    val posDeletes = snap.map(_.posDeletes).getOrElse(Nil)
-    new GraftV2Table(nsOf(ident), ident.name(), cat,
-      asV2(ident, m, files, schema), schema, files, deletes, posDeletes, m,
-      rebuildReader = fs => asV2(ident, m, fs, schema))
+    GraftV2Table(spark, s"$catalogName.${nsOf(ident)}.${ident.name()}", m,
+      schema, snap.map(_.dataFiles).getOrElse(Nil),
+      snap.map(_.deletes).getOrElse(Nil), snap.map(_.posDeletes).getOrElse(Nil),
+      Some((cat, nsOf(ident), ident.name())))
   }
 
   override def loadTable(ident: Identifier): Table = {
     if (!cat.tableExists(nsOf(ident), ident.name()))
       metaTableFor(ident).foreach(t => return t)
     val m = graftTable(ident).metadata
-    v2Of(ident, m, m.currentSnapshot, m.schema)
+    v2Table(ident, m, m.currentSnapshot, m.schema)
   }
 
   /** Iceberg-style SQL metadata tables: `SELECT * FROM cat.ns.t.history`
@@ -170,7 +152,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
       case "refs" => t.refs()
       case "deletes" => t.deletesTable()
     }
-    Some(new GraftMetaTable(s"$catalogName.$ns.$tbl.${ident.name()}", df))
+    Some(GraftV2Table.metaTable(spark, s"$catalogName.$ns.$tbl.${ident.name()}", df))
   }
 
   /** `VERSION AS OF <snapshotId | 'branch-or-tag-name'>` time travel.
@@ -194,7 +176,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           m.snapshots.map(_.snapshotId).mkString(", ") +
           (if (m.refs.exists(_.nonEmpty))
             s"; refs: ${m.refs.get.keys.mkString(", ")}" else "")))
-    v2Of(ident, m, Some(snap), m.schemaForSnapshot(snap))
+    v2Table(ident, m, Some(snap), m.schemaForSnapshot(snap))
   }
 
   /** `TIMESTAMP AS OF` time travel; Spark hands micros since epoch.
@@ -203,13 +185,11 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
     val t = graftTable(ident)
     val m = t.metadata
     val asOfMs = timestampMicros / 1000L
-    val snap = m.snapshots.filter(_.timestampMs <= asOfMs)
-      .sortBy(s => (s.timestampMs, s.snapshotId)).lastOption
-      .getOrElse(throw new IllegalArgumentException(
-        s"No snapshot at or before timestamp $asOfMs ms for table " +
-          s"${nsOf(ident)}.${ident.name()} (earliest: " +
-          m.snapshots.map(_.timestampMs).minOption.getOrElse(-1L) + " ms)"))
-    v2Of(ident, m, Some(snap), m.schemaForSnapshot(snap))
+    val snap = m.snapshotAsOf(asOfMs).getOrElse(throw new IllegalArgumentException(
+      s"No snapshot at or before timestamp $asOfMs ms for table " +
+        s"${nsOf(ident)}.${ident.name()} (earliest: " +
+        m.snapshots.map(_.timestampMs).minOption.getOrElse(-1L) + " ms)"))
+    v2Table(ident, m, Some(snap), m.schemaForSnapshot(snap))
   }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
@@ -493,7 +473,7 @@ class GraftSparkCatalog extends TableCatalog with SupportsNamespaces
           case (p, rm: TableChange.RemoveProperty) => p - rm.property()
           case (p, _) => p
         })
-        // a graft.primary-key claim flips V2-schema nullability (v2Of) —
+        // a graft.primary-key claim flips V2-schema nullability (v2Table) —
         // the optimizer will fold `pk IS NULL` to false on its word — so
         // a NEW claim over nullable columns must be backed by provably
         // null-free data, validated here race-free against the commit-

@@ -2,7 +2,7 @@ package graft.catalog
 
 import java.nio.file.{Files, Path, Paths}
 import java.nio.charset.StandardCharsets.UTF_8
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import scala.jdk.CollectionConverters._
 
 /** Handle to one committed table: snapshot reads, time travel, and the
@@ -126,20 +126,18 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
   /** Read the current snapshot as a DataFrame with the committed schema.
     * Files written under older schema versions null-fill missing columns
     * via the imposed read schema (sparse semantics, `test_sparse_schema
-    * .py:80-106`). Empty table ⇒ empty DataFrame with the right schema. */
+    * .py:80-106`). Empty table ⇒ empty DataFrame with the right schema.
+    * Every read here plans through the SQL catalog's V2 table. */
   def read(): DataFrame = {
     val m = metadata
-    val s = m.currentSnapshot
-    readFiles(m, m.currentFiles, s.map(_.deletes).getOrElse(Nil),
-      s.map(_.posDeletes).getOrElse(Nil))
+    relation(m, m.currentSnapshot)
   }
 
   /** Time travel: read the file set of a specific snapshot (with the
     * equality deletes live AT that snapshot). */
   def readSnapshot(snapshotId: Long): DataFrame = {
     val m = metadata
-    val s = findSnapshot(m, snapshotId)
-    readFiles(m, s.dataFiles, s.deletes, s.posDeletes)
+    relation(m, Some(findSnapshot(m, snapshotId)))
   }
 
   /** Time travel by wall clock: the latest snapshot committed at or
@@ -147,11 +145,8 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
     * and `AS OF TIMESTAMP` SQL sugars). */
   def readAsOf(asOfMs: Long): DataFrame = {
     val m = metadata
-    val snap = m.snapshots.filter(_.timestampMs <= asOfMs)
-      .sortBy(s => (s.timestampMs, s.snapshotId)).lastOption
-      .getOrElse(throw new ValidationError(
-        s"No snapshot at or before $asOfMs in ${m.identifier}"))
-    readFiles(m, snap.dataFiles, snap.deletes, snap.posDeletes)
+    relation(m, Some(m.snapshotAsOf(asOfMs).getOrElse(throw new ValidationError(
+      s"No snapshot at or before $asOfMs in ${m.identifier}"))))
   }
 
   /** Roll the table back to `snapshotId`: commits a NEW snapshot
@@ -187,7 +182,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
   def readAppendsSince(sinceSnapshotId: Long): DataFrame = {
     val m = metadata
     val base = findSnapshot(m, sinceSnapshotId).dataFiles.map(_.path).toSet
-    readFiles(m, m.currentFiles.filterNot(f => base.contains(f.path)),
+    relation(m, m.currentFiles.filterNot(f => base.contains(f.path)),
       m.currentSnapshot.map(_.deletes).getOrElse(Nil),
       m.currentSnapshot.map(_.posDeletes).getOrElse(Nil))
   }
@@ -243,7 +238,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
     }
     if (prev.snapshotId != segStart.snapshotId) segs += ((segStart, prev))
     if (segs.isEmpty)
-      return readFiles(m, Nil).withColumn("_change_type",
+      return relation(m, Nil).withColumn("_change_type",
         org.apache.spark.sql.functions.lit(""))
     segs.map { case (a, b) => diffSegment(m, a, b) }.reduce(_ unionByName _)
   }
@@ -265,7 +260,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
     val schemaCols = m.schema.fieldNames.toSeq
 
     val newFiles = toFiles.filterNot(f => fromPaths.contains(f.path))
-    val inserts = readFiles(m, newFiles, to.deletes, to.posDeletes)
+    val inserts = relation(m, newFiles, to.deletes, to.posDeletes)
       .withColumn("_change_type", lit("insert"))
 
     // equality deletes added in the window -> partial key rows. MoR
@@ -276,7 +271,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
     val fromDel = from.deletes.map(_.path).toSet
     val newEq = to.deletes.filterNot(d => fromDel.contains(d.path))
     lazy val fromLive =
-      readFiles(m, from.dataFiles, from.deletes, from.posDeletes)
+      relation(m, from.dataFiles, from.deletes, from.posDeletes)
     val eqRows = newEq.groupBy(_.keyColumns).toSeq.sortBy(_._1.mkString(","))
       .map { case (keyCols, dels) =>
         // ONE multi-path scan over the window's delete files (a per-file
@@ -360,8 +355,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
     val m = metadata
     val id = m.refId(name).getOrElse(
       throw new ValidationError(s"No branch '$name' in ${m.identifier}"))
-    val s = findSnapshot(m, id)
-    readFiles(m, s.dataFiles, s.deletes, s.posDeletes)
+    relation(m, Some(findSnapshot(m, id)))
   }
 
   /** Publish (fast-forward): point the MAIN table state at the branch
@@ -401,12 +395,18 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
       .getOrElse(throw new ValidationError(
         s"No snapshot $snapshotId in ${m.identifier}"))
 
-  private def readFiles(m: TableMetadata, files: Seq[DataFile],
+  /** `files` less `deletes` and `posDeletes`, under the committed schema. */
+  private def relation(m: TableMetadata, files: Seq[DataFile],
       deletes: Seq[DeleteFile] = Nil,
       posDeletes: Seq[PosDeleteFile] = Nil): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), m.schema)
-    else MorRead.read(spark, m.schema, files, deletes, posDeletes)
+    org.apache.spark.sql.classic.GraftSqlShims.dfOf(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        GraftV2Table(spark, m.identifier, m, m.schema, files, deletes, posDeletes),
+        None, None))
+
+  private def relation(m: TableMetadata, s: Option[Snapshot]): DataFrame =
+    relation(m, s.map(_.dataFiles).getOrElse(Nil), s.map(_.deletes).getOrElse(Nil),
+      s.map(_.posDeletes).getOrElse(Nil))
 
   /** S2 parity: scan with a range predicate pushed through BOTH layers —
     * file and delete pruning via [[StatsPrune]] (the manifest-pruning
@@ -414,8 +414,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
     * `lo`/`hi` are inclusive bounds in the column's natural type. */
   def scanRange(column: String, lo: Any, hi: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    readPruned(Seq(StatsPrune.between(column, lo, hi)))
-      .filter(col(column).between(lit(lo), lit(hi)))
+    read().filter(col(column).between(lit(lo), lit(hi)))
   }
 
   /** Point lookup: [[StatsPrune]] keeps only the files whose min/max,
@@ -425,18 +424,7 @@ final class GraftTable(val spark: SparkSession, val dir: Path) {
     * the scan then runs with the equality filter pushed down. */
   def readPointLookup(column: String, value: Any): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit}
-    readPruned(Seq(org.apache.spark.sql.sources.EqualTo(column, value)))
-      .filter(col(column) === lit(value))
-  }
-
-  /** The current snapshot narrowed by `filters`, which the caller must
-    * re-apply to the rows (pruning is file-level and conservative). */
-  private def readPruned(filters: Seq[org.apache.spark.sql.sources.Filter]): DataFrame = {
-    val m = metadata
-    val s = m.currentSnapshot
-    readFiles(m, StatsPrune.files(m, filters),
-      StatsPrune.deletes(m, s.map(_.deletes).getOrElse(Nil), filters),
-      s.map(_.posDeletes).getOrElse(Nil))
+    read().filter(col(column) === lit(value))
   }
 
   /** Atomic commit: reread freshest metadata, apply `update`, CAS-write the

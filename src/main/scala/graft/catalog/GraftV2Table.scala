@@ -1,10 +1,12 @@
 package graft.catalog
 
 import java.util.{Set => JSet}
-import org.apache.spark.sql.{Column, SQLContext}
+import org.apache.spark.sql.{Column, DataFrame, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsDelete, SupportsMetadataColumns, SupportsRead, SupportsRowLevelOperations, SupportsWrite, Table, TableCapability}
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, RowLevelOperationInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetTable
 import org.apache.spark.sql.functions.{col, lit, not}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
@@ -12,52 +14,40 @@ import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
 
-/** The V2 table handed out by [[GraftSparkCatalog]]: reads delegate to a
-  * snapshot-pinned V2 parquet table (pushdown, pruning, sparse
-  * null-fill), and SQL writes route through the ENGINE's write path via
-  * the V1Write shim — `INSERT INTO` is an Append load and
-  * `INSERT OVERWRITE` a Replace load, so SQL ingestion gets the same
-  * safe-casting, schema-evolution, staging stats, and atomic CAS commit
-  * as programmatic loads (a raw file-writing V2 sink would bypass all of
-  * it). Merge keeps requiring the programmatic API: a bare INSERT
-  * carries no primary-key/disposition contract.
+/** The read half of graft's V2 tables, and the DataFrame facade's
+  * read-only table: a pinned file set, its deletes and a read schema,
+  * served by a snapshot-pinned V2 parquet table (pushdown, pruning,
+  * sparse null-fill). [[GraftV2Table]] adds the SQL catalog's writes.
   *
   * Merge-on-read snapshots (outstanding [[DeleteFile]]s) cannot be served
   * by a raw parquet scan — that would resurrect deleted rows — so the
   * parquet scan is decorated with the delete state ([[GraftScan]]), or,
   * past the driver-state gate, replaced by a V1 relation wrapping
   * [[MorRead]]. */
-final class GraftV2Table(
-    ns: String,
-    tableName: String,
-    cat: GraftCatalog,
-    reader: Table,
-    committedSchema: StructType,
-    morFiles: Seq[DataFile] = Nil,
-    morDeletes: Seq[DeleteFile] = Nil,
-    morPosDeletes: Seq[PosDeleteFile] = Nil,
+class GraftReadTable private[catalog] (spark: SparkSession, tableName: String,
+    protected val committedSchema: StructType, protected val morFiles: Seq[DataFile],
+    protected val morDeletes: Seq[DeleteFile],
+    protected val morPosDeletes: Seq[PosDeleteFile],
     // the metadata the table was loaded from: partition spec, properties
     // and the stat types [[StatsPrune]] compares under
-    meta: TableMetadata,
-    // rebuilds the inner parquet reader over a FILE SUBSET — the hook
-    // limit pushdown needs to plan a `LIMIT n` over the first files
-    // whose metadata row counts cover n, instead of all 10⁵ of them
-    rebuildReader: Seq[DataFile] => Table = null)
-  extends Table with SupportsRead with SupportsWrite with SupportsDelete
-    with SupportsRowLevelOperations with SupportsMetadataColumns {
+    protected val meta: TableMetadata)
+  extends Table with SupportsRead with SupportsMetadataColumns {
 
-  override def name(): String = reader.name()
+  override def name(): String = tableName
   override def schema(): StructType = committedSchema
 
   private val partitionSpec = meta.partitionSpec
   private val tableProperties = meta.properties
 
-  /** Engine identity for injected plan rewrites (dynamic overwrite)
-    * that must route a V2 write node through the engine writer. */
-  private[catalog] def graftIdentity: (GraftCatalog, String, String) =
-    (cat, ns, tableName)
   override def properties(): java.util.Map[String, String] =
     tableProperties.asJava
+
+  /** The parquet table over the file subset `fs` (pruning survivors, a
+    * claimed set or a limit/TopN prefix) under the read schema. */
+  private def parquetOver(fs: Seq[DataFile]): SupportsRead =
+    new ParquetTable(tableName, spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      CaseInsensitiveStringMap.empty(), fs.map(_.path), Some(committedSchema),
+      classOf[ParquetFileFormat])
 
   /** Iceberg-style `_file` metadata column: each row's origin data-file
     * path (the engine's metadata path convention). The group id of the
@@ -99,16 +89,8 @@ final class GraftV2Table(
     }.toArray
   }
 
-  /** `AUTOMATIC_SCHEMA_EVOLUTION` opts into Spark's
-    * `MERGE INTO ... WITH SCHEMA EVOLUTION`: the analyzer turns the
-    * source's extra columns into `TableChange.AddColumn`s routed through
-    * [[GraftSparkCatalog.alterTable]] — the SAME evolution rules the
-    * write path enforces (nullable adds only, safe type promotion), so
-    * SQL merge evolution cannot reach a schema state a load could not. */
   override def capabilities(): JSet[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
+    Set(TableCapability.BATCH_READ).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new FileAwareScanBuilder(options, pruneFiles = true)
@@ -128,7 +110,7 @@ final class GraftV2Table(
     * delete files (`pruneFiles`; off for row-level operation scans,
     * whose commit replaces the whole planned set and so must read every
     * row of it), and the filters stay residual. */
-  private final class FileAwareScanBuilder(options: CaseInsensitiveStringMap,
+  protected final class FileAwareScanBuilder(options: CaseInsensitiveStringMap,
       pruneFiles: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns
       with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
@@ -158,8 +140,7 @@ final class GraftV2Table(
     private var innerBuilt: Option[ScanBuilder] = None
     private def inner: Option[ScanBuilder] = {
       if (innerBuilt.isEmpty)
-        innerBuilt = Some((if (scanFiles.size < morFiles.size) rebuildReader(scanFiles)
-          else reader).asInstanceOf[SupportsRead].newScanBuilder(options))
+        innerBuilt = Some(parquetOver(scanFiles).newScanBuilder(options))
       innerBuilt
     }
     private var scanFiles: Seq[DataFile] = morFiles
@@ -202,12 +183,12 @@ final class GraftV2Table(
       // The second tier ([[rangeClaimFiles]]) claims by range-constancy:
       // comparison predicates no file's stat interval straddles — the
       // transform-partitioned (day/month/hour) temporal-WHERE form.
-      if (filters.nonEmpty && !hasDeletes && rebuildReader != null) {
+      if (filters.nonEmpty && !hasDeletes) {
         claimedFiles = metaFilteredFiles().orElse(rangeClaimFiles())
         if (claimedFiles.isDefined) return Nil
       }
       if (filters.isEmpty) return filters // nothing to forward: keep inner unforced
-      if (pruneFiles && rebuildReader != null && innerBuilt.isEmpty) {
+      if (pruneFiles && innerBuilt.isEmpty) {
         val pruning = filters.flatMap(
           org.apache.spark.sql.classic.GraftSqlShims.sourceFilter)
         scanFiles = StatsPrune.prune(meta, morFiles, pruning)
@@ -414,8 +395,7 @@ final class GraftV2Table(
     // keeps its limit operator above the narrowed scan, so correctness
     // never depends on the subset arithmetic.
     override def pushLimit(n: Int): Boolean = {
-      if (hasDeletes || catalystFilters.nonEmpty || rebuildReader == null ||
-          n < 0) return false
+      if (hasDeletes || catalystFilters.nonEmpty || n < 0) return false
       pushedLimit = Some(n)
       true
     }
@@ -436,8 +416,8 @@ final class GraftV2Table(
         orders: Array[org.apache.spark.sql.connector.expressions.SortOrder],
         n: Int): Boolean = {
       import org.apache.spark.sql.connector.expressions.{NamedReference, SortDirection}
-      if (hasDeletes || catalystFilters.nonEmpty || rebuildReader == null ||
-          n < 0 || orders.isEmpty) return false
+      if (hasDeletes || catalystFilters.nonEmpty || n < 0 || orders.isEmpty)
+        return false
       val lead = orders(0)
       val name = lead.expression() match {
         case nr: NamedReference if nr.fieldNames.length == 1 =>
@@ -509,8 +489,7 @@ final class GraftV2Table(
     /** A fresh parquet scan over the file subset `fs`, column pruning
       * re-applied. */
     private def subsetScan(fs: Seq[DataFile]): Scan = {
-      val b = rebuildReader(fs).asInstanceOf[SupportsRead]
-        .newScanBuilder(options)
+      val b = parquetOver(fs).newScanBuilder(options)
       required.foreach(r => b match {
         case p: SupportsPushDownRequiredColumns => p.pruneColumns(r)
         case _ => ()
@@ -595,8 +574,8 @@ final class GraftV2Table(
       } else if (limitedScan.isDefined) {
         limitedScan.get
       } else if (fileRequested) {
-        dataFrameScan(required.get, catalystFilters, MorRead.readWithFile(_,
-          committedSchema, scanFiles, scanDeletes, morPosDeletes))
+        dataFrameScan(required.get, catalystFilters, MorRead.read(_,
+          committedSchema, scanFiles, scanDeletes, morPosDeletes, withFile = true))
       } else {
         // Claimed identity-key filters: the predicate IS the file
         // selection — a scan over exactly the matching files. Each
@@ -725,6 +704,38 @@ final class GraftV2Table(
     * upper bound under MoR — sound for join sizing). */
   private def fileStats(files: Seq[DataFile]): org.apache.spark.sql.connector.read.Statistics =
     ScanStats.of(files.map(_.sizeBytes).sum, files.map(_.rowCount).sum)
+}
+
+/** The V2 table handed out by [[GraftSparkCatalog]]: the read half plus
+  * the catalog identity. SQL writes route through the ENGINE's write
+  * path via the V1Write shim — `INSERT INTO` is an Append load and
+  * `INSERT OVERWRITE` a Replace load, so SQL ingestion gets the same
+  * safe-casting, schema-evolution, staging stats, and atomic CAS commit
+  * as programmatic loads (a raw file-writing V2 sink would bypass all of
+  * it). Merge keeps requiring the programmatic API: a bare INSERT
+  * carries no primary-key/disposition contract. */
+final class GraftV2Table private[catalog] (spark: SparkSession, fullName: String,
+    readSchema: StructType, files: Seq[DataFile], deletes: Seq[DeleteFile],
+    posDeletes: Seq[PosDeleteFile], m: TableMetadata,
+    ns: String, tableName: String, cat: GraftCatalog)
+  extends GraftReadTable(spark, fullName, readSchema, files, deletes, posDeletes, m)
+    with SupportsWrite with SupportsDelete with SupportsRowLevelOperations {
+
+  /** Engine identity for injected plan rewrites (dynamic overwrite)
+    * that must route a V2 write node through the engine writer. */
+  private[catalog] def graftIdentity: (GraftCatalog, String, String) =
+    (cat, ns, tableName)
+
+  /** `AUTOMATIC_SCHEMA_EVOLUTION` opts into Spark's
+    * `MERGE INTO ... WITH SCHEMA EVOLUTION`: the analyzer turns the
+    * source's extra columns into `TableChange.AddColumn`s routed through
+    * [[GraftSparkCatalog.alterTable]] — the SAME evolution rules the
+    * write path enforces (nullable adds only, safe type promotion), so
+    * SQL merge evolution cannot reach a schema state a load could not. */
+  override def capabilities(): JSet[TableCapability] =
+    Set(TableCapability.BATCH_READ, TableCapability.V1_BATCH_WRITE,
+      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
+      TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
 
   /** `DELETE FROM <table> WHERE <cond>` — routed through the engine's
     * predicate-delete path. Mode comes from the `graft.delete.mode`
@@ -828,6 +839,30 @@ final class GraftV2Table(
 }
 
 object GraftV2Table {
+  /** The one factory of graft's tables over a pinned snapshot: `files`
+    * with `deletes` and `posDeletes` applied, read under `schema` — the
+    * SQL catalog's [[GraftV2Table]] given its `identity` (catalog,
+    * namespace, table), the facade's read-only table without. */
+  def apply(spark: SparkSession, name: String, meta: TableMetadata,
+      schema: StructType, files: Seq[DataFile], deletes: Seq[DeleteFile],
+      posDeletes: Seq[PosDeleteFile],
+      identity: Option[(GraftCatalog, String, String)] = None): GraftReadTable =
+    withStatsRule(spark, identity.fold(new GraftReadTable(spark, name, schema,
+      files, deletes, posDeletes, meta)) { case (cat, ns, table) =>
+      new GraftV2Table(spark, name, schema, files, deletes, posDeletes, meta, ns, table, cat)
+    })
+
+  /** A metadata table (history/snapshots/files/refs/deletes) over `df`. */
+  def metaTable(spark: SparkSession, name: String, df: DataFrame): Table =
+    withStatsRule(spark, new GraftMetaTable(name, df))
+
+  /** `t`, with [[V1ScanStatsRule]] registered in `spark` at analysis —
+    * before the first optimizer run that plans one of its V1 shims (MoR
+    * fallback, `_file` scan, metadata aggregate, metadata table). */
+  private def withStatsRule[T](spark: SparkSession, t: T): T = {
+    V1ScanStatsRule.register(spark); t
+  }
+
   /** The `graft.primary-key` table property, parsed: comma-separated,
     * trimmed, empties dropped. Single definition shared by operation
     * routing and the catalog's schema-nullability view. */
@@ -952,7 +987,7 @@ object GraftV2Table {
 /** Read-only V2 table serving a driver-computed metadata DataFrame
   * (history/snapshots/files/refs/deletes) through the V1Scan shim —
   * metadata-scale by construction. */
-final class GraftMetaTable(tableName: String,
+final class GraftMetaTable private[catalog] (tableName: String,
     df: org.apache.spark.sql.DataFrame) extends Table with SupportsRead {
   override def name(): String = tableName
   override def schema(): StructType = df.schema

@@ -40,15 +40,17 @@ object MorRead {
   val BroadcastMaxRowsKey = "spark.graft.mor.broadcastMaxRows"
   val BroadcastMaxRowsDefault = 16000000L
 
-  def driverStateMaxRows: Long =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(DriverStateMaxRowsKey, DriverStateMaxRowsDefault.toString)
-      .toLong
+  def driverStateMaxRows: Long = rowCap(DriverStateMaxRowsKey, DriverStateMaxRowsDefault)
 
-  private def broadcastMaxRows: Long =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(BroadcastMaxRowsKey, BroadcastMaxRowsDefault.toString)
-      .toLong
+  private def broadcastMaxRows: Long = rowCap(BroadcastMaxRowsKey, BroadcastMaxRowsDefault)
+
+  /** A row-cap key of the session conf, `default` when unset: anything
+    * but a non-negative whole number fails, naming the key and value. */
+  private[graft] def rowCap(key: String, default: Long): Long = {
+    val v = org.apache.spark.sql.internal.SQLConf.get.getConfString(key, default.toString)
+    v.trim.toLongOption.filter(_ >= 0L).getOrElse(throw new IllegalArgumentException(
+      s"$key must be a non-negative number of rows, got '$v'"))
+  }
 
   /** Broadcast below the row threshold, plain (shuffle-planned) join
     * above it. `rows` comes from delete-file metadata, an upper bound on
@@ -134,32 +136,22 @@ object MorRead {
       .drop("__gf_dpath")
   }
 
+  /** The rows of `files` under `schema` with `deletes` and `posDeletes`
+    * applied. `withFile` adds a `_file` column carrying each row's origin
+    * data-file path (the engine's metadata-path convention) — the Iceberg
+    * `_file` metadata column, captured from `_metadata` at the scan
+    * relation BEFORE any delete-application join hides it. Serves
+    * runtime group filtering's matching-rows subquery. */
   def read(spark: SparkSession, schema: StructType, files: Seq[DataFile],
-      deletes: Seq[DeleteFile],
-      posDeletes: Seq[PosDeleteFile] = Nil): DataFrame =
+      deletes: Seq[DeleteFile], posDeletes: Seq[PosDeleteFile] = Nil,
+      withFile: Boolean = false): DataFrame = {
     if (files.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else
-      applyDeletes(spark,
-        spark.read.schema(schema).parquet(files.map(_.path): _*),
-        files, deletes, posDeletes)
-
-  /** [[read]] plus a `_file` column carrying each row's origin data-file
-    * path (the engine's metadata-path convention) — the Iceberg `_file`
-    * metadata column, captured from `_metadata` at the scan relation
-    * BEFORE any delete-application join hides it. Serves runtime group
-    * filtering's matching-rows subquery. */
-  def readWithFile(spark: SparkSession, schema: StructType, files: Seq[DataFile],
-      deletes: Seq[DeleteFile],
-      posDeletes: Seq[PosDeleteFile] = Nil): DataFrame = {
-    val outSchema = StructType(schema.fields :+
-      org.apache.spark.sql.types.StructField("_file",
-        org.apache.spark.sql.types.StringType, nullable = false))
-    if (files.isEmpty)
-      return spark.createDataFrame(new java.util.ArrayList[Row](), outSchema)
+      return spark.createDataFrame(new java.util.ArrayList[Row](),
+        if (withFile) schema.add("_file", "string", nullable = false) else schema)
     val base = spark.read.schema(schema).parquet(files.map(_.path): _*)
-      .withColumn("_file", posixPath(col("_metadata.file_path")))
-    applyDeletes(spark, base, files, deletes, posDeletes)
+    applyDeletes(spark,
+      if (withFile) base.withColumn("_file", posixPath(col("_metadata.file_path")))
+      else base, files, deletes, posDeletes)
   }
 
   /** Apply equality and positional deletes to `base`, which must be a

@@ -29,7 +29,9 @@ import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2ScanRelation, 
   *    plain stats-less `V1ScanWrapper`) are re-wrapped by
   *    [[V1ScanStatsRule]], registered on `experimental.extraOptimizations`
   *    — the one rule seam that runs AFTER scan building and BEFORE
-  *    physical join selection.
+  *    physical join selection — by the table factories in
+  *    [[GraftV2Table]], whenever a table that may plan such a scan is
+  *    built.
   */
 object ScanStats {
   /** Exact stats literal. `rows` is the pre-delete upper bound for MoR

@@ -233,6 +233,12 @@ final case class TableMetadata(
       .map(DataType.fromJson(_).asInstanceOf[StructType])
       .getOrElse(schema)
 
+  /** The latest snapshot committed at or before `asOfMs` (the
+    * snapshot-as-of-timestamp read), ties broken by id. */
+  def snapshotAsOf(asOfMs: Long): Option[Snapshot] =
+    snapshots.filter(_.timestampMs <= asOfMs)
+      .sortBy(s => (s.timestampMs, s.snapshotId)).lastOption
+
   /** Schema a snapshot's committed data should be read with under
     * time travel. */
   def schemaForSnapshot(s: Snapshot): StructType =

@@ -760,9 +760,7 @@ object IcebergInterop {
   val ExportDeleteMaxRowsKey = "spark.graft.iceberg.exportDeleteMaxRows"
   val ExportDeleteMaxRowsDefault = 16000000L
   private def exportDeleteMaxRows: Long =
-    org.apache.spark.sql.internal.SQLConf.get
-      .getConfString(ExportDeleteMaxRowsKey, ExportDeleteMaxRowsDefault.toString)
-      .toLong
+    graft.catalog.MorRead.rowCap(ExportDeleteMaxRowsKey, ExportDeleteMaxRowsDefault)
 
   private def writeAvro(schema: AvroSchema, records: Seq[GenericRecord],
       meta: Map[String, String], dest: Path): Long = {
@@ -1301,22 +1299,15 @@ object IcebergInterop {
   def importTable(spark: SparkSession, location: String,
       asOfSnapshotId: Option[Long] = None): DataFrame = {
     val plan = importPlan(location, asOfSnapshotId)
-    if (plan.files.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], plan.schema)
-    else if (plan.eqDeletes.isEmpty && plan.posDeletes.isEmpty)
-      spark.read.schema(plan.schema).parquet(plan.files.map(_.path): _*)
-    else {
-      // delete files convert into the native model once (tiny by MoR
-      // design; a pure read has no table dir, so the converted parquet
-      // stages in a scratch dir)
-      val scratch = Files.createTempDirectory("graft-ice-import-del")
-      val (eq, pos) = stageDeletes(spark, plan, scratch)
-      MorRead.read(spark, plan.schema,
-        plan.files.map(f => graft.catalog.DataFile(
-          f.path, f.recordCount, f.sizeBytes, Map.empty, seq = Some(f.seq))),
-        eq, pos)
-    }
+    // delete files convert into the native model once (tiny by MoR
+    // design; a pure read has no table dir, so the converted parquet
+    // stages in a scratch dir)
+    val (eq, pos) =
+      if (plan.files.isEmpty || (plan.eqDeletes.isEmpty && plan.posDeletes.isEmpty))
+        (Nil, Nil)
+      else stageDeletes(spark, plan, Files.createTempDirectory("graft-ice-import-del"))
+    MorRead.read(spark, plan.schema, plan.files.map(f => graft.catalog.DataFile(
+      f.path, f.recordCount, f.sizeBytes, Map.empty, seq = Some(f.seq))), eq, pos)
   }
 
   /** Attach an external Iceberg v2 table as a graft catalog table: the

@@ -337,9 +337,13 @@ final class GraftWriter(catalog: GraftCatalog) {
             val hdId = loadId + "-hd"
             if (!t.metadata.hasLoad(hdId)) {
               val delKeys = hardDeleted.select(pks.map(col): _*).distinct()
+              // failing for good, it drops the upsert's staged output too
+              val upsertStaged = (staged ++ (if (cfg.mergeOnRead) keyStaged else Nil))
+                .map(_.path)
               if (cfg.mergeOnRead)
-                morCommit(t, delKeys, pks, Nil, "delete", hdId, cfg)
-              else rewriteCommit(t, delKeys, pks, Nil, "delete", hdId, cfg)
+                morCommit(t, delKeys, pks, Nil, "delete", hdId, cfg, upsertStaged)
+              else rewriteCommit(t, delKeys, pks, Nil, "delete", hdId, cfg,
+                alsoStaged = upsertStaged)
             }
           }
           if (cfg.mergeOnRead)
@@ -690,26 +694,29 @@ final class GraftWriter(catalog: GraftCatalog) {
     * delete get this commit's snapshotId, so a batch never deletes its
     * own rows) happens in `withSnapshotDelta`. */
   private def morCommit(t: GraftTable, keys: DataFrame, pks: Seq[String],
-      stagedNew: Seq[DataFile], op: String, loadId: String, cfg: WriteConfig): Unit = {
+      stagedNew: Seq[DataFile], op: String, loadId: String, cfg: WriteConfig,
+      alsoStaged: Seq[String] = Nil): Unit = {
     // one tiny file: MoR targets trickle batches, and the read side
     // broadcasts the delete keys — a 32-way shuffle write of 5 keys
     // would cost more files than rows
     val delFiles = Stager
       .stage(keys.coalesce(1), t.dir.resolve("deletes"), loadId)
       .map(f => DeleteFile(f.path, pks, f.rowCount, 0L, f.stats))
-    morCommitStaged(t, delFiles, stagedNew, op, loadId, cfg)
+    morCommitStaged(t, delFiles, stagedNew, op, loadId, cfg, alsoStaged)
   }
 
   /** [[morCommit]] for callers that already staged the delete-key file
     * (the fused upsert path, which derives its dup check and key count
-    * from that file's footer instead of a separate aggregate job). */
+    * from that file's footer instead of a separate aggregate job).
+    * `alsoStaged` is output staged for a later commit of the same load,
+    * dropped with this commit's own if it fails for good. */
   private def morCommitStaged(t: GraftTable, delFiles: Seq[DeleteFile],
       stagedNew: Seq[DataFile], op: String, loadId: String,
-      cfg: WriteConfig): Unit = {
+      cfg: WriteConfig, alsoStaged: Seq[String] = Nil): Unit = {
     val next = t.commit(fresh => fresh.withSnapshotDelta(op, Some(loadId),
       stagedNew, Set.empty, newDeletes = delFiles, branch = cfg.toBranch),
       cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs,
-      stagedNew.map(_.path) ++ delFiles.map(_.path))
+      stagedNew.map(_.path) ++ delFiles.map(_.path) ++ alsoStaged)
     // a delete into an empty parent has no victims and commits without
     // its key file: nothing references it, so drop it
     val kept = next.snapshots.last.deletes.map(_.path).toSet
@@ -734,7 +741,8 @@ final class GraftWriter(catalog: GraftCatalog) {
     * CAS conflict (the commit drops the lost attempt's restage). */
   private def rewriteCommit(t: GraftTable, keys: DataFrame, pks: Seq[String],
       stagedNew: Seq[DataFile], op: String, loadId: String, cfg: WriteConfig,
-      precomputed: Option[(Seq[Option[(String, String)]], Long)] = None): Unit = {
+      precomputed: Option[(Seq[Option[(String, String)]], Long)] = None,
+      alsoStaged: Seq[String] = Nil): Unit = {
     val keysCached = keys.cache()
     try {
       // key ranges for file pruning on EVERY PK column (one metadata-scale
@@ -823,7 +831,8 @@ final class GraftWriter(catalog: GraftCatalog) {
         // path are opened; untouched manifests carry by identity
         fresh.withSnapshotDelta(op, Some(loadId), rewritten ++ stagedNew,
           affectedPaths)
-      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs, stagedNew.map(_.path))
+      }, cfg.maxRetries, cfg.backoffBase, cfg.retryUnitMs,
+        stagedNew.map(_.path) ++ alsoStaged)
       }
     } finally keysCached.unpersist()
   }

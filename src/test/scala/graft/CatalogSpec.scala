@@ -24,13 +24,15 @@ class CatalogSpec extends AnyFunSuite {
     StructField("score", LongType, nullable = true)))
 
   /** Stage a DataFrame under the table's data dir and return DataFile
-    * entries (stats come from the write path in graft.write; bare here). */
+    * entries (stats come from the write path in graft.write; bare here
+    * but for the row count, which reads answer COUNT from). */
   private def stage(t: GraftTable, df: DataFrame): Seq[DataFile] = {
     val dest = t.dataDir.resolve(java.util.UUID.randomUUID().toString)
     df.write.parquet(dest.toString)
     PathIO.list(dest)
       .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map(p => DataFile(p.toString, 0L, Files.size(p), Map.empty))
+      .map(p => DataFile(p.toString, spark.read.parquet(p.toString).count(),
+        Files.size(p), Map.empty))
   }
 
   test("namespace lifecycle: create, list, drop, not-empty guard") {

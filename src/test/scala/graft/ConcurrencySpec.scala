@@ -345,18 +345,37 @@ class ConcurrencySpec extends AnyFunSuite {
       loseEveryCas(t)
     })
 
+  /** An upsert of (3, u3) and (11, v11) that hard-deletes key 4 through
+    * a `_dlt_deleted_at` marker: its `-hd` sub-commit runs first. */
+  private def markedUpsert(w: GraftWriter, mergeOnRead: Boolean): Any = {
+    import org.apache.spark.sql.functions.{current_timestamp, lit, when}
+    w.writeTable("main", "t", Seq(Seq((3L, "u3"), (4L, "v4"), (11L, "v11"))
+      .toDF("id", "v").withColumn("_dlt_deleted_at",
+        when($"id" === 4L, current_timestamp()).otherwise(lit(null).cast("timestamp")))),
+      Merge("upsert"), cfg.copy(primaryKey = Seq("id"), maxRetries = 2,
+        mergeOnRead = mergeOnRead), "l3")
+  }
+
   private val exhaustedOps: Seq[(String, (GraftWriter, GraftTable) => Any)] = Seq(
     ("an append with maxRetries = 2", (w, _) => w.writeTable("main", "t",
       Seq(Seq((11L, "v11")).toDF("id", "v")), Append, cfg.copy(maxRetries = 2), "l3")),
     ("Maintenance.compact", (_, t) =>
-      Maintenance.compact(t, smallFileBytes = 1L << 20, retryUnitMs = 1)))
+      Maintenance.compact(t, smallFileBytes = 1L << 20, retryUnitMs = 1)),
+    ("a copy-on-write upsert with hard-delete markers",
+      (w, _) => markedUpsert(w, mergeOnRead = false)),
+    ("a merge-on-read upsert with hard-delete markers",
+      (w, _) => markedUpsert(w, mergeOnRead = true)))
 
   exhaustedOps.foreach { case (name, op) =>
     test(s"$name that runs out of retries deletes what it staged") {
       val cat = freshCatalog()
       val w = new GraftWriter(cat)
-      w.writeTable("main", "t", Seq(base.take(5).toDF("id", "v")), Append, cfg, "l1")
-      w.writeTable("main", "t", Seq(base.drop(5).toDF("id", "v")), Append, cfg, "l2")
+      // the hard-delete marker column exists before the racer starts, so
+      // a marked upsert evolves no schema
+      def withMarker(rs: Seq[(Long, String)]) = rs.toDF("id", "v")
+        .withColumn("_dlt_deleted_at", org.apache.spark.sql.functions.lit(null).cast("timestamp"))
+      w.writeTable("main", "t", Seq(withMarker(base.take(5))), Append, cfg, "l1")
+      w.writeTable("main", "t", Seq(withMarker(base.drop(5))), Append, cfg, "l2")
       val t = cat.loadTable("main", "t")
       loseEveryCas(t)
       try intercept[CommitConflictError](op(w, t))

@@ -363,7 +363,7 @@ class FileStatsSpec extends AnyFunSuite {
     // 8 lies in the rewritten file's [min, max]; only its bloom excludes it
     Seq(7L, 8L).foreach { k =>
       val lookup = t.readPointLookup("id", k)
-      assert(lookup.inputFiles.length == 1, s"$k: ${lookup.inputFiles.toSeq}")
+      assert(PlannedFiles.of(lookup).size == 1, s"$k: ${PlannedFiles.of(lookup)}")
     }
     assert(t.readPointLookup("id", 7L).select("v").as[String].collect().toSeq == Seq("v7!"))
   }

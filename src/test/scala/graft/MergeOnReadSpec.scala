@@ -371,4 +371,19 @@ class MergeOnReadSpec extends AnyFunSuite {
       .collect().toSet ==
       Set((1L, "a", 10L), (2L, "b2", 21L), (3L, "c", 30L)))
   }
+
+  test("a negative driver-state row cap fails the facade read, naming the key") {
+    val w = new GraftWriter(freshCatalog())
+    w.writeTable("main", "u", Seq(users((1, "a", 10), (2, "b", 20))),
+      Merge("upsert"), cfg, "l1")
+    val t = w.writeTable("main", "u", Seq(users((2, "b2", 21))),
+      Merge("upsert"), cfg, "l2")
+    val e =
+      try {
+        spark.conf.set(MorRead.DriverStateMaxRowsKey, "-1")
+        intercept[IllegalArgumentException](t.read().collect())
+      } finally spark.conf.unset(MorRead.DriverStateMaxRowsKey)
+    assert(e.getMessage.contains(MorRead.DriverStateMaxRowsKey) &&
+      e.getMessage.contains("'-1'"), e.getMessage)
+  }
 }

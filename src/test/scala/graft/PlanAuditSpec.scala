@@ -92,7 +92,20 @@ class PlanAuditSpec extends AnyFunSuite {
       graft.write.Merge("upsert"), mcfg, "l1")
     val t = w.writeTable("main", "m", Seq(Seq((2L, "b2")).toDF("id", "v")),
       graft.write.Merge("upsert"), mcfg, "l2")
-    val pMor = t.read().queryExecution.executedPlan.toString
+    // past the driver-state gate the read falls back to the join
+    // application (a V1 row scan over MorRead.read of the same snapshot)
+    val snap = t.metadata.currentSnapshot.get
+    val pMor =
+      try {
+        spark.conf.set(graft.catalog.MorRead.DriverStateMaxRowsKey, "0")
+        val fallback = t.read()
+        assert(fallback.as[(Long, String)].collect().toSet == Set((1L, "a"), (2L, "b2")))
+        assert(fallback.queryExecution.executedPlan.collect {
+          case r: org.apache.spark.sql.execution.RowDataSourceScanExec => r
+        }.nonEmpty, "past the gate the MoR read must plan the V1 join fallback")
+        graft.catalog.MorRead.read(spark, t.metadata.schema, snap.dataFiles,
+          snap.deletes, snap.posDeletes).queryExecution.executedPlan.toString
+      } finally spark.conf.unset(graft.catalog.MorRead.DriverStateMaxRowsKey)
     assert(pMor.contains("BroadcastHashJoin"), "MoR read must broadcast-join")
     assert(!pMor.contains("SortMergeJoin") && !pMor.contains("ShuffledHashJoin"),
       "MoR delete application must never shuffle the corpus")
@@ -121,10 +134,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("round-9 entries keep scale-shaped plans") {
-    // SQL-catalog MoR read: the per-row delete reader replaces the
-    // delete-application joins entirely — the scan subtree carries NO
-    // join operators at all (the r5b broadcast-join shape remains only
-    // on the programmatic t.read() path)
+    // MoR read, SQL catalog and DataFrame facade alike: the per-row
+    // delete reader replaces the delete-application joins entirely — the
+    // scan subtree carries NO join operators at all (the r5b
+    // broadcast-join shape remains only past the driver-state gate)
     import spark.implicits._
     val wh = java.nio.file.Files.createTempDirectory("graft-pa9-").toString
     val cat = new graft.catalog.GraftCatalog(spark, wh)
@@ -146,6 +159,13 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Join"),
       s"SQL MoR read must apply deletes per row, not via joins:\n$p")
+    val facade = cat.loadTable("main", "m").read()
+    assert(facade.collect().length == 100)
+    assert(graft.plans.PlanOps.scanDescriptions(facade)
+      .exists(_.startsWith("graft-mor")), "facade MoR read must use the wrap")
+    val pf = facade.queryExecution.executedPlan.toString
+    assert(!pf.contains("Join"),
+      s"facade MoR read must apply deletes per row, not via joins:\n$pf")
   }
 
   test("paragraph dedup: skew-safe winner aggregate, no window, no cartesian") {

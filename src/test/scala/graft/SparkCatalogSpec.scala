@@ -408,6 +408,29 @@ class SparkCatalogSpec extends AnyFunSuite {
     assert(Maintenance.vacuumOrphans(t, 0).isEmpty)
   }
 
+  Seq(("copy-on-write", "gupdfc", Map.empty[String, String]),
+    ("merge-on-read", "gupdfm", Map("graft.delete.mode" -> "merge-on-read",
+      "graft.primary-key" -> "id"))).foreach { case (mode, name, props) =>
+    test(s"a $mode SQL UPDATE whose SET fails on one row leaves nothing staged") {
+      val cat = freshCatalog(name)
+      val w = new GraftWriter(cat)
+      val users = (1 to 20).map(i => (i.toLong, s"u$i", i % 5))
+      // one file in id order: the task writes rows before the last
+      // matched row (17) raises, so the failed job leaves staged output
+      w.writeTable("main", "users", Seq(users.toDF("id", "name", "grp").coalesce(1)),
+        Append, WriteConfig(retryUnitMs = 1), "l1")
+      val t = cat.loadTable("main", "users")
+      t.commit(m => m.copy(properties = m.properties ++ props), unitMs = 1)
+      intercept[Exception](spark.sql(s"UPDATE $name.main.users SET name = " +
+        "CASE WHEN id = 17 THEN raise_error('boom') ELSE concat(name, '!') END " +
+        "WHERE grp = 2"))
+      assert(t.metadata.snapshots.flatMap(_.loadId) == Seq("l1"))
+      assert(t.read().collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2)))
+        .toSeq.sortBy(_._1) == users)
+      assert(Maintenance.vacuumOrphans(t, 0).isEmpty)
+    }
+  }
+
   test("SQL MERGE INTO upserts through the row-level BatchWrite") {
     val cat = freshCatalog("gmrg")
     val w = new GraftWriter(cat)

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.datasources.FilePartition
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog._
 import graft.write._
@@ -24,17 +22,8 @@ class StatsPruneSpec extends AnyFunSuite {
     iso
   }
 
-  private def norm(p: String): String =
-    new org.apache.hadoop.fs.Path(p).toUri.getPath
-
-  /** The data files the physical scan of `df` plans. */
-  private def plannedFiles(df: DataFrame): Set[String] =
-    df.queryExecution.sparkPlan.collect { case b: BatchScanExec =>
-      b.inputPartitions.flatMap {
-        case fp: FilePartition => fp.files.map(f => norm(f.urlEncodedPath))
-        case other => fail(s"unexpected input partition $other")
-      }
-    }.flatten.toSet
+  import PlannedFiles.norm
+  private def plannedFiles(df: DataFrame): Set[String] = PlannedFiles.of(df)
 
   private def rows(df: DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).toSeq.sorted
@@ -57,7 +46,7 @@ class StatsPruneSpec extends AnyFunSuite {
     val df = sqlSession(wh).sql(s"SELECT k, v FROM sp.main.t WHERE k = $probe")
     val planned = plannedFiles(df)
     val lookup = t.readPointLookup("k", probe)
-    assert(planned == lookup.inputFiles.map(norm).toSet)
+    assert(planned == plannedFiles(lookup))
     assert(planned.size == 1, s"planned ${planned.size} of 24 files")
     assert(rows(df) == rows(t.read().filter($"k" === probe)))
     assert(rows(df) == Seq(s"$probe|v5-17"))
@@ -100,5 +89,25 @@ class StatsPruneSpec extends AnyFunSuite {
       s"planned ${plannedFiles(df).size} files, bucket $bucket holds ${sameBucket.size}")
     assert(rows(df) == rows(t.read().filter($"user_id" === probe)))
     assert(rows(df) == Seq(s"$probe|e1-100"))
+  }
+
+  test("readPointLookup plans exactly the file the SQL WHERE k = v plans") {
+    val wh = Files.createTempDirectory("graft-sp-facade-").toString
+    val cat = new GraftCatalog(spark, wh)
+    val w = new GraftWriter(cat)
+    // disjoint key ranges: min/max alone tells the files apart
+    (0 until 6).foreach { b =>
+      val batch = (0 until 30).map(i => (b * 100L + i, s"v$b-$i"))
+      w.writeTable("main", "t", Seq(batch.toDF("k", "v").coalesce(1)),
+        Append, WriteConfig(retryUnitMs = 1), s"l$b")
+    }
+    val t = cat.loadTable("main", "t")
+    val probe = 312L
+    val sql = sqlSession(wh).sql(s"SELECT k, v FROM sp.main.t WHERE k = $probe")
+    val lookup = t.readPointLookup("k", probe)
+    assert(plannedFiles(sql).size == 1)
+    assert(plannedFiles(lookup) == plannedFiles(sql))
+    assert(rows(lookup) == rows(sql))
+    assert(rows(lookup) == Seq(s"$probe|v3-12"))
   }
 }
