@@ -473,7 +473,7 @@ final case class TableMetadata(
   }
 
   /** Commit-time guard for the `graft.primary-key` contract: the V2
-    * surface reports key columns non-nullable (`GraftSparkCatalog.v2Of`),
+    * surface reports key columns non-nullable (`GraftSparkCatalog.v2Table`),
     * so NO commit may add a file whose key stats admit NULLs. Metadata-
     * only (the footer stats every writer already collects); a file with
     * unknown null counts passes — the hard gates are ALTER-time data
