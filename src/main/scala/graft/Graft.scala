@@ -105,12 +105,34 @@ final class GraftDataset(catalog: GraftCatalog, namespace: String) {
   def tableAsOf(name: String, tsMs: Long): DataFrame =
     catalog.loadTable(namespace, name).readAsOf(tsMs)
 
-  /** Register every committed table (including `_dlt_*`) as a temp view
-    * at its CURRENT snapshot and run the SQL through Spark. */
+  /** Register each committed table the SQL names (including `_dlt_*`)
+    * as a temp view at its CURRENT snapshot and run the SQL through
+    * Spark. */
   def query(sql: String): DataFrame = {
-    catalog.listTables(namespace).foreach { t =>
+    import org.apache.spark.sql.classic.GraftSqlShims
+    val plan = GraftSqlShims.parse(catalog.spark, sql)
+    val named = GraftDataset.relationNames(plan).map(_.toLowerCase)
+    catalog.listTables(namespace).filter(t => named(t.toLowerCase)).foreach { t =>
       table(t).createOrReplaceTempView(t)
     }
-    catalog.spark.sql(sql)
+    GraftSqlShims.dfOf(catalog.spark, plan)
+  }
+}
+
+object GraftDataset {
+  import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+
+  /** The single-part relation names a parsed plan reads, in CTE bodies
+    * and subqueries too (a CTE's own name may be among them: a view under
+    * it is shadowed, never read). */
+  private def relationNames(plan: LogicalPlan): Set[String] = {
+    val own = plan match {
+      case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
+          if r.multipartIdentifier.size == 1 => r.multipartIdentifier
+      case _ => Nil
+    }
+    val nested = plan.children ++ plan.subqueries ++
+      plan.innerChildren.collect { case p: LogicalPlan => p }
+    own.toSet ++ nested.flatMap(relationNames)
   }
 }

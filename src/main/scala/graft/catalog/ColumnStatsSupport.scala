@@ -186,20 +186,13 @@ object ColumnStatsSupport {
     }
   }
 
-  /** Catalyst-typed min/max from the canonical footer-stat encoding
-    * (epoch day/micros for temporal types) — only for types whose
-    * catalyst value is a primitive the stats estimator accepts. */
-  private def catalystValue(dt: DataType, s: String): Option[Any] =
-    try dt match {
-      case ByteType => Some(java.lang.Byte.valueOf(s.toByte))
-      case ShortType => Some(java.lang.Short.valueOf(s.toShort))
-      case IntegerType | DateType => Some(Integer.valueOf(s.toInt))
-      case LongType | TimestampType | TimestampNTZType =>
-        Some(java.lang.Long.valueOf(s.toLong))
-      case FloatType => Some(java.lang.Float.valueOf(s.toFloat))
-      case DoubleType => Some(java.lang.Double.valueOf(s.toDouble))
-      case _ => None
-    } catch { case _: NumberFormatException => None }
+  /** Types whose catalyst value is a primitive the stats estimator
+    * accepts as a min/max (epoch day/micros for temporal types): every
+    * decodable type but strings and decimals. */
+  private def primitiveBound(dt: DataType): Boolean = dt match {
+    case StringType | _: DecimalType => false
+    case _ => StatValue.decodable(dt)
+  }
 
   /** Merge analyzed NDVs with per-file exact stats for the CURRENT file
     * set: null counts and min/max come from footer stats when every live
@@ -218,8 +211,10 @@ object ColumnStatsSupport {
             perFile.forall(_.nullCount.isDefined))
           Some(perFile.flatMap(_.nullCount).sum)
         else None
-      val mins = perFile.flatMap(_.min.flatMap(catalystValue(f.dataType, _)))
-      val maxs = perFile.flatMap(_.max.flatMap(catalystValue(f.dataType, _)))
+      val bound = (s: String) =>
+        if (primitiveBound(f.dataType)) StatValue.decode(f.dataType, s) else None
+      val mins = perFile.flatMap(_.min.flatMap(bound))
+      val maxs = perFile.flatMap(_.max.flatMap(bound))
       val num = (x: Any) => x.asInstanceOf[Number].doubleValue()
       val minV =
         if (mins.length == files.length && files.nonEmpty) mins.minByOption(num)

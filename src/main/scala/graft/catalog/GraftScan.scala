@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.read.colstats.ColumnStatistics
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** The one scan graft's SQL read path plans: the inner parquet [[Scan]],
   * forwarded, plus up to four decorations.
@@ -201,7 +200,7 @@ final class GraftScan private (
     parts.foreach {
       case fp: FilePartition =>
         val withKeys = fp.files.flatMap { pf =>
-          val (path, key) = keyOf(pf).getOrElse(return parts)
+          val (path, key) = pathKey(pf).getOrElse(return parts)
           // runtime-pruned file: provably holds no matching partition
           // key — skip it entirely (an empty group simply vanishes;
           // Spark allows dropped values, never new ones)
@@ -235,7 +234,7 @@ final class GraftScan private (
       if (keyed.isEmpty)
         (enginePath(pf, mi.seqByPath.contains)
           .getOrElse(normPath(pf.urlEncodedPath)), NoKey)
-      else keyOf(pf).getOrElse(throw new IllegalStateException(
+      else pathKey(pf).getOrElse(throw new IllegalStateException(
         s"graft-spj-mor: data file ${pf.urlEncodedPath} has no " +
           "partition key in the snapshot — refusing to read it raw " +
           "(deletes would not apply)"))
@@ -286,7 +285,7 @@ final class GraftScan private (
     out.result()
   }
 
-  private def keyOf(pf: PartitionedFile): Option[(String, FileKey)] =
+  private def pathKey(pf: PartitionedFile): Option[(String, FileKey)] =
     keyed.flatMap { k =>
       enginePath(pf, k.keyByPath.contains).map(p => p -> k.keyByPath(p))
     }
@@ -346,7 +345,11 @@ object GraftScan {
     }
     val decoded: Seq[(String, FileKey)] = files.map { f =>
       val vals = spec.zip(fieldTypes).map { case (s, dt) =>
-        decodeKey(f, s.name, dt).getOrElse(return None)
+        StatValue.of(f, s.name, dt) match {
+          case StatValue.Point(v) => v
+          case StatValue.AllNull => null
+          case _ => return None
+        }
       }
       // injective tuple id: length-prefixed value strings (a separator
       // collision would silently merge two partition groups)
@@ -432,37 +435,6 @@ object GraftScan {
       case _ => None
     }
   }
-
-  /** The file's single partition value for one derived column, as a
-    * catalyst internal value; None ⇒ ineligible (absent stats, straddling
-    * values, partial nulls, or an undecodable type). */
-  private def decodeKey(f: DataFile, name: String, dt: DataType): Option[Any] = {
-    val st = f.stats.get(name).getOrElse(return None)
-    val nulls = st.nullCount.getOrElse(0L)
-    if (nulls == f.rowCount && f.rowCount > 0) return Some(null)
-    if (nulls != 0L) return None
-    (st.min, st.max) match {
-      case (Some(lo), Some(hi)) if lo == hi => decodeValue(dt, lo)
-      case _ => None
-    }
-  }
-
-  /** Canonical stat string → catalyst internal value (the encoding
-    * [[graft.write.FileStatsFold]] wrote: epoch-day ints for dates,
-    * epoch-micros longs for timestamps). */
-  private def decodeValue(dt: DataType, s: String): Option[Any] =
-    try dt match {
-      case IntegerType | DateType => Some(s.toInt)
-      case LongType | TimestampType | TimestampNTZType => Some(s.toLong)
-      case ShortType => Some(s.toShort)
-      case ByteType => Some(s.toByte)
-      case StringType => Some(UTF8String.fromString(s))
-      case FloatType => Some(s.toFloat)
-      case DoubleType => Some(s.toDouble)
-      case d: DecimalType =>
-        Some(Decimal(new java.math.BigDecimal(s), d.precision, d.scale))
-      case _ => None
-    } catch { case _: NumberFormatException => None }
 
   /** Engine metadata stores plain absolute paths; PartitionedFile carries
     * a URI-ish SparkPath ("file:///..."). Compare on the URI path. */

@@ -105,11 +105,11 @@ class GraftReadTable private[catalog] (spark: SparkSession, tableName: String,
     * parquet builder are re-applied on the DataFrame — a filter Spark
     * believes pushed must never be silently dropped.
     *
-    * Filters no exact claim tier takes are still used once, by
-    * [[StatsPrune]]: every scan form plans over the surviving data and
-    * delete files (`pruneFiles`; off for row-level operation scans,
-    * whose commit replaces the whole planned set and so must read every
-    * row of it), and the filters stay residual. */
+    * Filters [[StatsPrune.claim]] does not take are still used once, to
+    * prune ([[StatsPrune]]): every scan form plans over the surviving
+    * data and delete files (`pruneFiles`; off for row-level operation
+    * scans, whose commit replaces the whole planned set and so must read
+    * every row of it), and the filters stay residual. */
   protected final class FileAwareScanBuilder(options: CaseInsensitiveStringMap,
       pruneFiles: Boolean)
     extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -173,18 +173,12 @@ class GraftReadTable private[catalog] (spark: SparkSession, tableName: String,
         filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression]):
         Seq[org.apache.spark.sql.catalyst.expressions.Expression] = {
       catalystFilters = filters
-      // Identity-partition-key-only predicates over a fully value-exact
-      // file set are applied EXACTLY by whole-file selection (a file is
-      // wholly in or wholly out, because every row in it carries THE
-      // key tuple) — claim them with an empty residual, so Spark drops
-      // its Filter node and filter-free plan forms (metadata aggregate
-      // pushdown above all) sit directly on the scan. Refused whenever
-      // any file is undecidable or any predicate strays off the keys.
-      // The second tier ([[rangeClaimFiles]]) claims by range-constancy:
-      // comparison predicates no file's stat interval straddles — the
-      // transform-partitioned (day/month/hour) temporal-WHERE form.
+      // Filters whole-file selection applies exactly ([[StatsPrune.claim]])
+      // are claimed with an empty residual, so Spark drops its Filter
+      // node and filter-free plan forms (metadata aggregate pushdown
+      // above all) sit directly on the scan.
       if (filters.nonEmpty && !hasDeletes) {
-        claimedFiles = metaFilteredFiles().orElse(rangeClaimFiles())
+        claimedFiles = StatsPrune.claim(meta, morFiles, filters)
         if (claimedFiles.isDefined) return Nil
       }
       if (filters.isEmpty) return filters // nothing to forward: keep inner unforced
@@ -219,173 +213,6 @@ class GraftReadTable private[catalog] (spark: SparkSession, tableName: String,
     private var metaAgg:
       Option[(StructType, Seq[org.apache.spark.sql.Row])] = None
 
-    /** The file set a metadata-tier aggregate may fold over, after
-      * applying any pushed filters AT THE FILE LEVEL — Some(files) when
-      * that application is provably exact, None to fall back to the
-      * parquet tier. No filters → all files. Otherwise every filter
-      * must be deterministic, subquery-free, and reference ONLY
-      * identity-partition source columns; value-exact staging then
-      * makes each file's key tuple a metadata fact, so evaluating the
-      * predicate once per file against the decoded keys selects exactly
-      * the matching rows (a file is wholly in or wholly out — the
-      * filtered form of Iceberg's manifest answering; an all-null key
-      * evaluates to null → excluded, matching WHERE semantics). */
-    private def metaFilteredFiles(): Option[Seq[DataFile]] = {
-      if (catalystFilters.isEmpty) return Some(morFiles)
-      import org.apache.spark.sql.catalyst.expressions._
-      val keyCols = partitionSpec.filter(_.transform == "identity")
-        .map(_.source).filter(committedSchema.fieldNames.contains).toSet
-      val refs = catalystFilters.flatMap(_.references.toSeq.map(_.name)).toSet
-      if (!catalystFilters.forall(_.deterministic) ||
-          !refs.subsetOf(keyCols) ||
-          catalystFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])))
-        return None
-      val attrs: Seq[Attribute] =
-        catalystFilters.flatMap(_.references.toSeq).distinctBy(_.exprId)
-      if (!attrs.forall(a => MetaAgg.keyDecodable(a.dataType))) return None
-      val pred = GraftV2Table.filePredicate(catalystFilters.reduce(And), attrs)
-      val converters = attrs.map(a =>
-        org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToCatalystConverter(a.dataType))
-      // per-file single-valued key or provably all-null, else refuse
-      val decided = morFiles.map { f =>
-        val key: Seq[Option[Option[Any]]] = attrs.map { a =>
-          f.stats.get(a.name) match {
-            case Some(cs) => (cs.min, cs.max) match {
-              case (Some(x), Some(y)) if x == y && cs.nullCount.contains(0L) =>
-                Some(Some(MetaAgg.decodeStat(a.dataType, x)))
-              case (None, None) if cs.nullCount.contains(f.rowCount) =>
-                Some(None)
-              case _ => None
-            }
-            case _ => None
-          }
-        }
-        if (key.exists(_.isEmpty)) None
-        else {
-          val row = org.apache.spark.sql.catalyst.InternalRow.fromSeq(
-            key.flatten.zip(converters).map { case (v, conv) =>
-              v.map(conv).orNull
-            })
-          Some((f, pred.eval(row)))
-        }
-      }
-      if (decided.exists(_.isEmpty)) None
-      else Some(decided.flatten.collect { case (f, true) => f })
-    }
-
-    /** Second claiming tier, RANGE-CONSTANCY: a predicate built from
-      * attr-vs-literal comparisons is exactly applied by whole-file
-      * selection whenever, for every live file, every comparison leaf is
-      * CONSTANT over the file's exact stat interval [min,max] — then all
-      * rows of the file agree on the predicate, and one evaluation at a
-      * representative decides the file. This is the general form of
-      * Iceberg's manifest answering for transform-partitioned layouts: a
-      * day/month/hour-partitioned table keeps each file's timestamp range
-      * inside one grain, so a grain-aligned `ts >= DATE '…'` never
-      * straddles a file and the WHERE becomes pure file selection
-      * (metadata aggregates then answer with zero file IO). Any file
-      * straddling a literal refuses the whole claim — correctness never
-      * depends on partial claiming. Restricted to types whose stat
-      * encodings are EXACT total orders (integers, date, timestamp,
-      * decimal): no strings (writer truncation), no float/double (NaN
-      * sits outside interval reasoning). Straddle detection for the
-      * non-monotone leaves (=, <=>, IN) additionally requires the
-      * leaf's `attr < literal` variant to be constant on the interval —
-      * for monotone leaves that variant is implied, so it is simply
-      * required for all. Mixed-null files (0 < nullCount < rowCount)
-      * refuse: their rows split into classes the single representative
-      * cannot speak for; all-null and null-free files evaluate as one
-      * class under WHERE's null-excludes semantics. */
-    private def rangeClaimFiles(): Option[Seq[DataFile]] = {
-      import org.apache.spark.sql.catalyst.expressions._
-      import org.apache.spark.sql.types._
-      if (!catalystFilters.forall(_.deterministic) ||
-          catalystFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])))
-        return None
-      val pred = catalystFilters.reduce(And)
-      val attrs: Seq[Attribute] = pred.references.toSeq.distinctBy(_.exprId)
-      def rangeOk(dt: DataType): Boolean = dt match {
-        case ByteType | ShortType | IntegerType | LongType | DateType |
-            TimestampType | TimestampNTZType | _: DecimalType => true
-        case _ => false
-      }
-      if (attrs.isEmpty || !attrs.forall(a => rangeOk(a.dataType) &&
-          committedSchema.fieldNames.contains(a.name))) return None
-
-      // shape check + per-leaf constancy obligations (leaf, attr<lit)
-      val checks = scala.collection.mutable.ArrayBuffer.empty[Expression]
-      def attrLit(l: Expression, r: Expression): Option[(Attribute, Literal)] =
-        (l, r) match {
-          case (a: AttributeReference, lit: Literal) => Some((a, lit))
-          case (lit: Literal, a: AttributeReference) => Some((a, lit))
-          case _ => None
-        }
-      def valid(e: Expression): Boolean = e match {
-        case And(l, r) => valid(l) && valid(r)
-        case Or(l, r) => valid(l) && valid(r)
-        case Not(c) => valid(c)
-        case Literal(_, BooleanType) => true
-        case IsNull(_: AttributeReference) => true
-        case IsNotNull(_: AttributeReference) => true
-        case bc: BinaryComparison =>
-          attrLit(bc.left, bc.right) match {
-            case Some((a, lit)) =>
-              checks += bc; checks += LessThan(a, lit); true
-            case None => false
-          }
-        case In(a: AttributeReference, elems)
-            if elems.forall(_.isInstanceOf[Literal]) =>
-          checks += e
-          elems.foreach(l => checks += LessThan(a, l.asInstanceOf[Literal]))
-          true
-        case InSet(a: AttributeReference, hset) =>
-          checks += e
-          hset.foreach(v => checks += LessThan(a, Literal(v, a.dataType)))
-          true
-        case _ => false
-      }
-      if (!valid(pred)) return None
-
-      val evalPred = GraftV2Table.filePredicate(pred, attrs)
-      val evalChecks = checks.toSeq.map(c => GraftV2Table.filePredicate(c, attrs))
-      val converters = attrs.map(a =>
-        org.apache.spark.sql.catalyst.CatalystTypeConverters
-          .createToCatalystConverter(a.dataType))
-      // per-file: Some(bound pair) = one row class with reps (min, max);
-      // None = refuse (missing/mixed-null/inexact stats)
-      val decided: Seq[Option[(DataFile, Boolean)]] = morFiles.map { f =>
-        if (f.rowCount == 0L) Some((f, false)) // no rows to lose
-        else {
-          val reps: Seq[Option[(Any, Any)]] = attrs.zip(converters).map {
-            case (a, conv) =>
-              f.stats.get(a.name) match {
-                case Some(cs) if cs.nullCount.contains(0L) &&
-                    cs.min.isDefined && cs.max.isDefined =>
-                  Some((conv(MetaAgg.decodeStat(a.dataType, cs.min.get)),
-                    conv(MetaAgg.decodeStat(a.dataType, cs.max.get))))
-                case Some(cs) if cs.nullCount.contains(f.rowCount) =>
-                  Some((null, null))
-                case _ => None
-              }
-          }
-          if (reps.exists(_.isEmpty)) None
-          else {
-            val rs = reps.flatten
-            val mnRow = org.apache.spark.sql.catalyst.InternalRow
-              .fromSeq(rs.map(_._1))
-            val mxRow = org.apache.spark.sql.catalyst.InternalRow
-              .fromSeq(rs.map(_._2))
-            val constant =
-              evalChecks.forall(c => c.eval(mnRow) == c.eval(mxRow))
-            if (!constant) None
-            else Some((f, evalPred.eval(mnRow)))
-          }
-        }
-      }
-      if (decided.exists(_.isEmpty)) None
-      else Some(decided.flatten.collect { case (f, true) => f })
-    }
     private var pushedLimit: Option[Int] = None
 
     // LIMIT pushdown, metadata form: a bare `LIMIT n` (no filters — a
@@ -499,8 +326,8 @@ class GraftReadTable private[catalog] (spark: SparkSession, tableName: String,
 
     // Aggregate pushdown, two tiers (and never under MoR — the raw data
     // would count logically-deleted rows):
-    //  1. METADATA: a global, filter-free COUNT/MIN/MAX folds straight
-    //     out of snapshot stats ([[MetaAgg]]) — zero file IO, where the
+    //  1. METADATA: a COUNT/MIN/MAX with no filters or claimed ones folds
+    //     straight out of snapshot stats ([[MetaAgg]]) — zero file IO, where the
     //     parquet tier below still opens every footer (10⁵ files at
     //     100 TB = 10⁵ reads);
     //  2. PARQUET: delegate to the inner builder's footer-stats pushdown.
@@ -869,19 +696,6 @@ object GraftV2Table {
   def parsePrimaryKey(props: Map[String, String]): Seq[String] =
     props.get("graft.primary-key").toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
-
-  /** A pushed filter as a predicate over one file's stat row, evaluated
-    * interpreted: the claim tiers evaluate it a few times per file on the
-    * driver, and `Predicate.create` would compile a class per query
-    * (literals are inlined into generated code, so no two queries share
-    * one), costing more than every evaluation it serves. */
-  private[catalog] def filePredicate(
-      e: org.apache.spark.sql.catalyst.expressions.Expression,
-      attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
-      : org.apache.spark.sql.catalyst.expressions.BasePredicate = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Predicate}
-    Predicate.createInterpreted(BindReferences.bindReference(e, AttributeSeq(attrs)))
-  }
 
   /** Wrap a raw V1Scan the way `V2ScanRelationPushDown` would — row-level
     * scan planning builds the scan relation directly and skips that

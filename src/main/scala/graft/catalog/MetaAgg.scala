@@ -1,6 +1,7 @@
 package graft.catalog
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.expressions.NamedReference
 import org.apache.spark.sql.connector.expressions.aggregate._
 import org.apache.spark.sql.types._
@@ -20,7 +21,8 @@ import org.apache.spark.sql.types._
   * parquet tier) unless the result is provably exact from stats:
   *
   *  - no outstanding MoR deletes (callers guard; deleted rows would count),
-  *  - no filters of any kind (a filter changes every aggregate),
+  *  - no filters beyond those [[StatsPrune.claim]] applied exactly by
+  *    file selection (callers fold over the claimed files),
   *  - no DISTINCT,
   *  - GROUP BY only on identity-partition source columns where EVERY
   *    file is single-valued (min == max, no nulls) or provably all-null
@@ -43,45 +45,10 @@ object MetaAgg {
     case _ => None
   }
 
-  /** Types whose canonical stat encoding round-trips exactly as an
-    * ORDERED bound (see [[graft.write.FooterStats]]): numerics as
-    * themselves, dates as epoch-day, timestamps as epoch-micros. */
-  private def minMaxSupported(dt: DataType): Boolean = dt match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-        DoubleType | _: DecimalType | DateType | TimestampType |
-        TimestampNTZType => true
-    case _ => false
-  }
-
-  /** Key-decodable types: everything [[decodeStat]] handles — the
-    * group/filter-key admission rule (ordered-bound use additionally
-    * requires [[minMaxSupported]]). */
-  def keyDecodable(dt: DataType): Boolean =
-    dt == StringType || minMaxSupported(dt)
-
-  def decodeStat(dt: DataType, s: String): Any = dt match {
-    case StringType => s
-    case ByteType => s.toByte
-    case ShortType => s.toShort
-    case IntegerType => s.toInt
-    case LongType => s.toLong
-    case FloatType => s.toFloat
-    case DoubleType => s.toDouble
-    case d: DecimalType => new java.math.BigDecimal(s)
-    case DateType => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(s.toLong))
-    case TimestampType =>
-      val micros = s.toLong
-      val t = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-      t.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-      t
-    case TimestampNTZType =>
-      val micros = s.toLong
-      java.time.LocalDateTime.ofEpochSecond(
-        Math.floorDiv(micros, 1000000L),
-        (Math.floorMod(micros, 1000000L) * 1000L).toInt,
-        java.time.ZoneOffset.UTC)
-    case other => throw new IllegalStateException(s"MetaAgg.decode: $other")
-  }
+  /** Types whose stat bounds are exact (see [[graft.write.FooterStats]]):
+    * every decodable type but strings, which writers may truncate. */
+  private def minMaxSupported(dt: DataType): Boolean =
+    dt != StringType && StatValue.decodable(dt)
 
   /** Try to answer the whole pushed aggregation from stats. Returns the
     * scan output schema (PARTIAL-aggregate shape — group columns first,
@@ -99,33 +66,22 @@ object MetaAgg {
     val groupable = groupNames.forall { n =>
       schema.fieldNames.contains(n) &&
         partitionSpec.exists(s => s.source == n && s.transform == "identity") &&
-        (schema(n).dataType == StringType || minMaxSupported(schema(n).dataType))
+        StatValue.decodable(schema(n).dataType)
     }
     if (!groupable) return None
 
-    /** The file's single group-key value: Some(Some(v)) when value-exact,
-      * Some(None) for the all-null slice, None = refuse. */
-    def keyOf(f: DataFile, name: String): Option[Option[Any]] =
-      f.stats.get(name) match {
-        case Some(cs) => (cs.min, cs.max) match {
-          case (Some(a), Some(b)) if a == b && cs.nullCount.contains(0L) =>
-            Some(Some(decodeStat(schema(name).dataType, a)))
-          case (None, None) if cs.nullCount.contains(f.rowCount) =>
-            Some(None)
-          case _ => None
-        }
-        case _ => None
-      }
-
-    val keyed: Seq[Option[(Seq[Any], DataFile)]] = files.map { f =>
-      val ks = groupNames.map(n => keyOf(f, n))
-      if (ks.exists(_.isEmpty)) None
-      else Some((ks.flatten.map(_.orNull), f))
+    // each file's key: its value on every group column, null for the
+    // all-null slice; any other shape refuses
+    val keyed: Seq[(Seq[Any], DataFile)] = files.map { f =>
+      groupNames.map(n => StatValue.of(f, n, schema(n).dataType) match {
+        case StatValue.Point(v) => v
+        case StatValue.AllNull => null
+        case _ => return None
+      }) -> f
     }
-    if (keyed.exists(_.isEmpty)) return None
     val groups: Seq[(Seq[Any], Seq[DataFile])] =
       if (groupNames.isEmpty) Seq((Nil, files))
-      else keyed.flatten.groupBy(_._1).toSeq.map { case (k, fs) =>
+      else keyed.groupBy(_._1).toSeq.map { case (k, fs) =>
         (k, fs.map(_._2))
       }
 
@@ -161,7 +117,7 @@ object MetaAgg {
           val c = StatCompare.compare(dt, a, b)
           if ((c <= 0) == wantMin) a else b
         }
-        Some(Some(decodeStat(dt, pick)))
+        StatValue.decode(dt, pick).map(Some(_))
       }
     }
 
@@ -197,7 +153,9 @@ object MetaAgg {
     val rows = groups.map { case (key, fs) =>
       val vals = folds.map { case (_, fold) => fold(fs) }
       if (vals.exists(_.isEmpty)) return None // an unfoldable group: refuse
-      Row((key ++ vals.map(_.get)): _*)
+      // stat values are catalyst values; the scan serves external rows
+      CatalystTypeConverters.convertToScala(
+        InternalRow.fromSeq(key ++ vals.map(_.get)), outSchema).asInstanceOf[Row]
     }
     Some((outSchema, rows))
   }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
   * (`destination_client.py:320-322`). Every reader and the merge path ask
   * through here: `scanRange`/`readPointLookup`, the merge's
   * affected-file selection, the row-level operation scan, and the SQL
-  * catalog scan.
+  * catalog scan — which also asks [[claim]] whether the answer is exact,
+  * so it can drop the filters.
   *
   * Pruning levels, all conservative (anything not provably disjoint is
   * kept):
@@ -63,6 +64,122 @@ object StatsPrune {
       deletes.filter(d => ev.all(DataFile(d.path, d.rowCount, 0L,
         d.stats.filter { case (c, _) => d.keyColumns.contains(c) }), filters))
     }
+
+  /** Whole-file claiming — when is the might-match answer EXACT? Some(the
+    * files whose rows satisfy every filter) when whole-file selection
+    * applies the filters exactly, so the caller may drop them from the
+    * plan; None keeps them residual. A file is decided when all its rows
+    * agree on the predicate, in one of two ways:
+    *
+    *  - keyed: every referenced column is a [[StatValue.decodable]]
+    *    identity-partition source and the file is a point or all-null on
+    *    each (value-exact staging makes a file's key tuple a metadata
+    *    fact; the filtered form of Iceberg's manifest answering);
+    *  - ranged: every referenced column has an exact-order type (no
+    *    strings: writer truncation; no float/double: NaN sits outside
+    *    interval reasoning), the predicate is built from attr-vs-literal
+    *    comparisons, null tests and IN lists under AND/OR/NOT, and every
+    *    leaf is constant over the file's stat interval — the
+    *    transform-partitioned (day/month/hour) temporal-WHERE form. A
+    *    non-monotone leaf (=, <=>, IN) could hold inside the interval
+    *    only, so each leaf's `attr < literal` variant must be constant
+    *    too. A zero-row file has no row to lose.
+    *
+    * A decided file is claimed when the predicate holds at its point (or
+    * interval floor) and it has rows; one undecided file refuses the
+    * whole claim. An all-null key evaluates to null, so it is excluded,
+    * matching WHERE. Deletes are the caller's business: deleted rows
+    * would still be claimed. */
+  def claim(m: TableMetadata, files: Seq[DataFile],
+      filters: Seq[org.apache.spark.sql.catalyst.expressions.Expression])
+      : Option[Seq[DataFile]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions._
+    import StatValue.{AllNull, Interval, Point, Unknown}
+    if (filters.isEmpty) return Some(files)
+    if (!filters.forall(_.deterministic) ||
+        filters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])))
+      return None
+    val pred = filters.reduce(And)
+    val attrs: Seq[Attribute] = pred.references.toSeq.distinctBy(_.exprId)
+    val keyCols = m.partitionSpec.filter(_.transform == "identity").map(_.source).toSet
+    val keyed = attrs.forall(a => keyCols(a.name) && StatValue.decodable(a.dataType))
+    val checks = comparisonLeaves(pred)
+    val ranged = attrs.nonEmpty && checks.isDefined && attrs.forall(a => a.dataType match {
+      case StringType | FloatType | DoubleType => false
+      case dt => StatValue.decodable(dt)
+    })
+    if (!keyed && !ranged) return None
+    val evalPred = filePredicate(pred, attrs)
+    val evalChecks = checks.getOrElse(Nil).map(filePredicate(_, attrs))
+    val out = Seq.newBuilder[DataFile]
+    files.foreach { f =>
+      val shapes = attrs.map(a => StatValue.of(f, a.name, a.dataType))
+      val lo = InternalRow.fromSeq(shapes.map {
+        case Point(v) => v
+        case Interval(v, _) => v
+        case _ => null
+      })
+      def constant = !shapes.contains(Unknown) && {
+        val hi = InternalRow.fromSeq(shapes.map {
+          case Point(v) => v
+          case Interval(_, v) => v
+          case _ => null
+        })
+        evalChecks.forall(c => c.eval(lo) == c.eval(hi))
+      }
+      val holds =
+        if (keyed && shapes.forall(s => s == AllNull || s.isInstanceOf[Point]))
+          evalPred.eval(lo)
+        else if (ranged && f.rowCount == 0L) false
+        else if (ranged && constant) evalPred.eval(lo)
+        else return None
+      if (holds && f.rowCount > 0L) out += f
+    }
+    Some(out.result())
+  }
+
+  /** The leaves whose constancy over a file's interval decides the
+    * ranged claim (each comparison with its `attr < literal` variant);
+    * None when `e` is not built from comparisons under AND/OR/NOT. */
+  private def comparisonLeaves(
+      e: org.apache.spark.sql.catalyst.expressions.Expression)
+      : Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]] = {
+    import org.apache.spark.sql.catalyst.expressions._
+    def attrLit(l: Expression, r: Expression): Option[(Attribute, Literal)] =
+      (l, r) match {
+        case (a: AttributeReference, lit: Literal) => Some((a, lit))
+        case (lit: Literal, a: AttributeReference) => Some((a, lit))
+        case _ => None
+      }
+    e match {
+      case And(l, r) => for (a <- comparisonLeaves(l); b <- comparisonLeaves(r)) yield a ++ b
+      case Or(l, r) => for (a <- comparisonLeaves(l); b <- comparisonLeaves(r)) yield a ++ b
+      case Not(c) => comparisonLeaves(c)
+      case Literal(_, BooleanType) => Some(Nil)
+      case IsNull(_: AttributeReference) | IsNotNull(_: AttributeReference) => Some(Nil)
+      case bc: BinaryComparison =>
+        attrLit(bc.left, bc.right).map { case (a, lit) => Seq(bc, LessThan(a, lit)) }
+      case In(a: AttributeReference, elems) if elems.forall(_.isInstanceOf[Literal]) =>
+        Some(e +: elems.map(l => LessThan(a, l)))
+      case InSet(a: AttributeReference, hset) =>
+        Some(e +: hset.toSeq.map(v => LessThan(a, Literal(v, a.dataType))))
+      case _ => None
+    }
+  }
+
+  /** `e` as a predicate over one file's stat row, evaluated interpreted:
+    * a claim evaluates it a few times per file on the driver, and
+    * `Predicate.create` would compile a class per query (literals are
+    * inlined into generated code, so no two queries share one), costing
+    * more than every evaluation it serves. */
+  private def filePredicate(
+      e: org.apache.spark.sql.catalyst.expressions.Expression,
+      attrs: Seq[org.apache.spark.sql.catalyst.expressions.Attribute])
+      : org.apache.spark.sql.catalyst.expressions.BasePredicate = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeSeq, BindReferences, Predicate}
+    Predicate.createInterpreted(BindReferences.bindReference(e, AttributeSeq(attrs)))
+  }
 
   /** `lo <= column <= hi`, both bounds inclusive. */
   def between(column: String, lo: Any, hi: Any): sources.Filter =

@@ -65,7 +65,7 @@ final case class PosDeleteFile(
     rowCount: Long)
 
 /** Typed comparison of two stat strings — shared by file-level pruning
-  * (`GraftTable`) and manifest-ref-level range aggregation, so both
+  * ([[StatsPrune]]) and manifest-ref-level range aggregation, so both
   * layers order identically (numeric for numerics/temporals, lexical for
   * strings; a lexical min of {"9","10"} would be "10" and silently
   * corrupt pruning). */

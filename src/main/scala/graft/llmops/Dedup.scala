@@ -111,22 +111,6 @@ object Dedup {
         call_function("graft_shingle_hashes", col(textCol), lit(n)).as("sh"))
   }
 
-  /** LSH band buckets from committed signatures. The bucket is the band's
-    * raw VALUE SLICE (array of rowsPerBand longs), not an engine hash of
-    * it — portable to any SQL engine verifying the join, and equality on
-    * a 2-long array shuffles 16 bytes/row more than a hashed bucket
-    * would, a rounding error next to the signature itself. */
-  private def sigBandBuckets(sigs: DataFrame, numHashes: Int,
-      bands: Int): DataFrame = {
-    val rows = numHashes / bands
-    // explode carries sig alongside — re-joining the signature table to
-    // itself on doc_id here would add a corpus-scale shuffle per call
-    sigs.select(col("doc_id"), col("sig"),
-        explode(sequence(lit(0), lit(bands - 1))).as("band"))
-      .select(col("doc_id"), col("band"),
-        slice(col("sig"), col("band") * rows + 1, lit(rows)).as("bucket"))
-  }
-
   /** Committable LSH band index of a signature table: one (doc_id, bkey)
     * row per band, `bkey = xxhash64(band, bucket-slice)` — a single
     * 64-bit scalar per band instead of the (band, value-slice) pair.
@@ -139,10 +123,15 @@ object Dedup {
     * 100-TB ingest pipeline runs forever. Size: ~16 B/row × bands
     * ≈ the signature table itself (512 B/doc at 64 hashes). */
   def sigBandKeys(sigs: DataFrame, numHashes: Int = 64,
-      bands: Int = 32): DataFrame =
-    sigBandBuckets(sigs, numHashes, bands)
-      .select(col("doc_id"),
-        xxhash64(col("band"), col("bucket")).as("bkey"))
+      bands: Int = 32): DataFrame = {
+    val rows = numHashes / bands
+    // explode carries sig alongside — re-joining the signature table to
+    // itself on doc_id here would add a corpus-scale shuffle per call
+    sigs.select(col("doc_id"), col("sig"),
+        explode(sequence(lit(0), lit(bands - 1))).as("band"))
+      .select(col("doc_id"), xxhash64(col("band"),
+        slice(col("sig"), col("band") * rows + 1, lit(rows))).as("bkey"))
+  }
 
   /** Near-dup dedup of an incoming batch against a COMMITTED corpus — the
     * incremental companion to [[incrementalDedup]] (which catches only
@@ -159,9 +148,9 @@ object Dedup {
     *     MinHash estimator of J, matches/numHashes) — corpus TEXT is
     *     never read, which is the property that makes the scheme
     *     incremental at 100 TB. The corpus side ships 512 B/doc of
-    *     signature for touched buckets only; committing the signature
-    *     table bucketed by (band, bucket) makes the join shuffle-free
-    *     on the corpus side.
+    *     signature for touched buckets only; committing its
+    *     [[sigBandKeys]] index bucketed on `bkey` makes the join
+    *     shuffle-free on the corpus side.
     *
     * Returns one row per incoming document: its best corpus match at
     * `simThreshold` (max estimate, min corpus id on ties — deterministic)
@@ -172,23 +161,20 @@ object Dedup {
       simThreshold: Double = 0.6,
       committedBandKeys: Option[DataFrame] = None): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    // With a committed [[sigBandKeys]] index the candidate join keys on
-    // the single bkey scalar, so a bucket[N](bkey)-partitioned index
-    // SPJ-resolves (corpus side map-only). Joining on the 64-bit hash
-    // ALONE is sound: candidates are only a superset generator — a hash
-    // collision can add a candidate pair, but a pair reaches the output
-    // only if its exact signature-agreement estimate clears the
-    // threshold, so the result is candidate-superset-invariant (and
-    // identical to the (band, bucket) join below).
-    val cand = (committedBandKeys match {
-      case Some(idx) =>
-        sigBandKeys(incomingSigs, numHashes, bands).as("i")
-          .join(idx.as("c"), Seq("bkey"))
-      case None =>
-        sigBandBuckets(incomingSigs, numHashes, bands).as("i")
-          .join(sigBandBuckets(committedSigs, numHashes, bands).as("c"),
-            Seq("band", "bucket"))
-    }).select(col("i.doc_id").as("inc_id"), col("c.doc_id").as("corpus_id"))
+    // The candidate join keys on the single bkey scalar: a committed
+    // bucket[N](bkey)-partitioned [[sigBandKeys]] index SPJ-resolves
+    // (corpus side map-only); without one, the committed signatures are
+    // banded the same way. Joining on the 64-bit hash ALONE is sound:
+    // candidates are only a superset generator — a hash collision can
+    // add a candidate pair, but a pair reaches the output only if its
+    // exact signature-agreement estimate clears the threshold, so the
+    // result is candidate-superset-invariant (identical to a
+    // (band, slice) join).
+    val committedKeys = committedBandKeys.getOrElse(
+      sigBandKeys(committedSigs, numHashes, bands))
+    val cand = sigBandKeys(incomingSigs, numHashes, bands).as("i")
+      .join(committedKeys.as("c"), Seq("bkey"))
+      .select(col("i.doc_id").as("inc_id"), col("c.doc_id").as("corpus_id"))
       .distinct()
     val matches = aggregate(
       zip_with(col("a.sig"), col("b.sig"),

@@ -59,7 +59,7 @@ object FooterStats {
               val meta = perBlock.head
               val prim = meta.getPrimitiveType
               def decode(vals0: Seq[AnyRef]): Option[Seq[String]] = {
-                val vals = vals0.map(v => decodeValue(prim.getPrimitiveTypeName,
+                val vals = vals0.map(v => canonical(prim.getPrimitiveTypeName,
                   prim.getLogicalTypeAnnotation, field.dataType, v))
                 if (vals.exists(_.isEmpty)) None else Some(vals.map(_.get))
               }
@@ -90,8 +90,8 @@ object FooterStats {
     case _ => vs.sorted
   }
 
-  /** Decode one footer statistic into the canonical string encoding. */
-  private def decodeValue(prim: PrimitiveTypeName,
+  /** One footer statistic in the canonical string encoding. */
+  private def canonical(prim: PrimitiveTypeName,
       logical: LogicalTypeAnnotation, sparkType: DataType,
       v: AnyRef): Option[String] = (prim, logical, v) match {
     case (_, d: DecimalLogicalTypeAnnotation, x) =>

@@ -20,9 +20,16 @@ object GraftSqlShims {
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(e, supportNestedPredicatePushdown = true)
 
-  /** DataFrame over an analyzed logical plan (Dataset.ofRows is
+  /** `sql` parsed by the session's parser, unresolved: what `spark.sql`
+    * runs, for a caller that reads the plan's relations first. */
+  def parse(spark: org.apache.spark.sql.SparkSession, sql: String):
+      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
+    spark.asInstanceOf[SparkSession].sessionState.sqlParser.parsePlan(sql)
+
+  /** DataFrame over a logical plan, analyzed here (Dataset.ofRows is
     * private[sql]) — lets an injected command execute a rewritten
-    * write's query through the engine's DataFrame-based write path. */
+    * write's query through the engine's DataFrame-based write path, and
+    * a [[parse]]d query run without a second parse. */
   def dfOf(spark: org.apache.spark.sql.SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan):
       org.apache.spark.sql.DataFrame =

@@ -40,6 +40,33 @@ class FacadeSpec extends AnyFunSuite {
     assert(p.pipeline.loads().count() == 3)
   }
 
+  test("dataset.query registers views only for the tables its SQL names") {
+    val p = Graft.pipeline(spark,
+      Files.createTempDirectory("graft-fcq-").toString, namespace = "fq")
+    val cfg = WriteConfig(retryUnitMs = 1)
+    p.run(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), "fq_named", cfg = cfg)
+    p.run(Seq((1L, 10L)).toDF("id", "w"), "fq_unnamed", cfg = cfg)
+    p.run(Seq(2L).toDF("id"), "fq_sub", cfg = cfg)
+    def views: Set[String] =
+      spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+
+    val ds = p.dataset()
+    assert(ds.query("SELECT count(*) FROM fq_named").collect()(0).getLong(0) == 2L)
+    assert(views.contains("fq_named"))
+    assert(!views.contains("fq_unnamed") && !views.contains("fq_sub"),
+      s"only the named table may get a view: $views")
+
+    // names inside a CTE body and a subquery resolve to the CURRENT
+    // snapshot of each table
+    val q = """WITH c AS (SELECT id FROM fq_unnamed)
+              |SELECT count(*) FROM c
+              |WHERE id IN (SELECT id FROM fq_sub)
+              |  AND EXISTS (SELECT 1 FROM fq_named n WHERE n.id = c.id)""".stripMargin
+    assert(ds.query(q).collect()(0).getLong(0) == 0L)
+    p.run(Seq((2L, 20L)).toDF("id", "w"), "fq_unnamed", cfg = cfg)
+    assert(ds.query(q).collect()(0).getLong(0) == 1L)
+  }
+
   test("open-table interface exposes catalog, table handle, and location") {
     // test_dataset.py:236-360 parity
     val wh = Files.createTempDirectory("graft-fc3-")
